@@ -18,48 +18,14 @@ import graft.model.Schemas.GlobalPixel
  * trips < 2^32 (documented carry hazard, HeatMapExtensions.cs:209); we sum
  * the unpacked columns, which is the carry-safe form.
  *
- * 14 chained aggregations, each over only the pixels that survived the
- * level below — cardinality shrinks ~4× per level, so the whole pyramid
- * costs less than one extra z14 pass. Each groupBy shuffles on
- * (gx>>1, gy>>1): pixel-grain keys, no hot single key, partial aggregation
- * does the 4→1 combine map-side.
+ * Two forms of the rollup live here: the tile-local pre-aggregation
+ * (`localRollupArrays`, the flagship path) and the per-pixel ancestor
+ * explode (`ancestorPartials`); both feed ONE merge groupBy
+ * (`mergePartials`) keyed on (z, gx, gy) — pixel-grain keys, no hot single
+ * key, partial aggregation does the combine map-side. The iterative 2×2
+ * cascade that defines the semantics is PyramidSpec's oracle.
  */
 object Pyramid {
-
-  /** One level: z → z-1. */
-  def rollupOne(level: Dataset[GlobalPixel])(implicit spark: SparkSession): Dataset[GlobalPixel] = {
-    import spark.implicits._
-    level
-      .groupBy(($"z" - 1).as("z"),
-        shiftright($"gx", 1).as("gx"), shiftright($"gy", 1).as("gy"))
-      .agg(sum($"users").as("users"), sum($"trips").as("trips"))
-      .select($"z".cast("int").as("z"), $"gx", $"gy", $"users", $"trips")
-      .as[GlobalPixel]
-  }
-
-  /** All levels z14 (input) down to minZoom, via iterative per-level
-    * rollup — the semantics-defining form (used as the oracle shape). */
-  def allLevelsIterative(z14: Dataset[GlobalPixel], minZoom: Int = 0)(
-      implicit spark: SparkSession): Dataset[GlobalPixel] = {
-    var persisted = List.empty[Dataset[GlobalPixel]]
-    var levels = List(z14)
-    var current = z14
-    var z = graft.raster.Rasterize.Zoom
-    while (z > minZoom) {
-      current = rollupOne(current)
-      current.persist()
-      persisted ::= current
-      levels ::= current
-      z -= 1
-    }
-    // materialize eagerly (localCheckpoint also truncates the 15-deep union
-    // lineage that OOMs AQE plan stringification), then release every level
-    // this function persisted — callers get a self-contained Dataset, no
-    // leaked cache blocks (z14 itself is caller-owned, untouched).
-    val out = levels.reverse.reduce(_ union _).localCheckpoint(true)
-    persisted.foreach(_.unpersist())
-    out
-  }
 
   /** Tile-LOCAL pyramid partials for one aggregated z14 tile (pure kernel).
     * Rolls the tile's surviving cells up level by level inside the flatMap —
@@ -175,14 +141,20 @@ object Pyramid {
       .as[GlobalPixel]
   }
 
-  /** All levels z14 → minZoom in ONE shuffle: each z14 pixel explodes into
-    * its ancestor chain (z, gx >> (14-z), gy >> (14-z)) and a single
-    * groupBy sums per (z, gx, gy). Addition is associative, so this is
-    * exactly the iterative 2×2 rollup cascade (HeatMapExtensions.cs:148-214)
-    * — but instead of 14 sequential small jobs it is one well-partitioned
+  /** All levels z14 → minZoom in ONE shuffle: `ancestorPartials` + one
+    * `mergePartials`. Addition is associative, so this is exactly the
+    * iterative 2×2 rollup cascade (HeatMapExtensions.cs:148-214) — but
+    * instead of 14 sequential small jobs it is one well-partitioned
     * aggregation with map-side partials: the form that survives a 1000×
     * scale-up (proved equal to the iterative form in PyramidSpec). */
   def allLevels(z14: Dataset[GlobalPixel], minZoom: Int = 0)(
+      implicit spark: SparkSession): Dataset[GlobalPixel] =
+    mergePartials(ancestorPartials(z14, minZoom))
+
+  /** Each z14 pixel exploded into its ancestor chain (z, gx >> (14-z),
+    * gy >> (14-z)) for z = minZoom..14, itself included; unmerged. Values
+    * may be signed: `Incremental` explodes a z14 delta with it. */
+  def ancestorPartials(z14: Dataset[GlobalPixel], minZoom: Int = 0)(
       implicit spark: SparkSession): Dataset[GlobalPixel] = {
     import spark.implicits._
     val maxZoom = graft.raster.Rasterize.Zoom
@@ -191,8 +163,5 @@ object Pyramid {
         GlobalPixel(z, p.gx >> (maxZoom - z), p.gy >> (maxZoom - z), p.users, p.trips)
       }
     }
-      .groupBy($"z", $"gx", $"gy")
-      .agg(sum($"users").as("users"), sum($"trips").as("trips"))
-      .as[GlobalPixel]
   }
 }

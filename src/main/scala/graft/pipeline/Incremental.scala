@@ -3,9 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.HeatmapAgg
+import graft.agg.{HeatmapAgg, Pyramid}
 import graft.io.TileStore
-import graft.model.Schemas.Track
+import graft.model.Schemas.{GlobalPixel, Track, UserPixel}
 import graft.raster.Rasterize
 
 /**
@@ -20,12 +20,14 @@ import graft.raster.Rasterize
  *      (full-outer + saturating add = Diffs/HeatMapExtensions.cs:49-131) —
  *      reading ONLY the dirty tile-bucket partitions (directory pruning)
  *   4. recompute the global z14 layer ONLY for dirty tiles
- *      (Worker.cs:167-222), splice into the dirty buckets
- *   5. rebuild each pyramid level z−1 from level z's SPLICED rows restricted
- *      to the dirty subtree (HeatMapExtensions.cs:148-214 — the reference's
- *      own level-by-level parent rebuild): per level the scan is bounded by
- *      the children of the dirty parents, partition-pruned to their buckets,
- *      never the whole level
+ *      (Worker.cs:167-222) with the batch path's HeatmapAgg.globalGrain
+ *   5. splice the pyramid by signed delta (the reference rebuilds parents
+ *      level by level, HeatMapExtensions.cs:148-214; levels below z14 are
+ *      plain sums of z14, so the rebuild equals old + rolled-up delta):
+ *      one scan of the dirty (z, pb) directories, Δ = new − old z14 rows
+ *      of the dirty tiles exploded into its ancestor chain, one
+ *      aggregation adding it to the old rows of the dirty tiles of every
+ *      level — the scan is bounded by the dirty partitions, never the world
  *   6. commit atomically with lineage metrics: only the DIRTY partitions of
  *      user_pixels/global are written; clean partitions carry forward into
  *      the new version as hardlinks (TileStore.Partial)
@@ -40,14 +42,11 @@ import graft.raster.Rasterize
 object Incremental {
   val Res = Rasterize.Resolution
 
-  /** Dirty-bucket fraction above which the pyramid rebuild switches from
-    * the bounded level-by-level cascade to the single fused ancestor-
-    * explode: past this point most of the store is dirty anyway, so one
-    * wide exchange beats 14 bounded jobs (sandbox backfill batches land
-    * here; planetary steady-state trickle stays far below it). */
+  /** Dirty-bucket fraction above which the F8 tile pre-check is skipped:
+    * past this point most of the store is dirty, tiles are dense and the
+    * extra (tile, user)-grain pass filters almost nothing (sandbox backfill
+    * batches land here; planetary steady-state trickle stays far below). */
   val FusedCutover = 0.3
-
-  private def allBuckets: Seq[Int] = 0 until TileStore.Buckets
 
   final case class BatchResult(version: Long, skipped: Boolean)
 
@@ -136,16 +135,16 @@ object Incremental {
     // 3. merge user pixels — ONLY the dirty buckets are read (partition-
     // pruned: the delta's keys all live in dirty tiles, so clean buckets
     // cannot change) and only they are rewritten; the rest hardlink forward.
-    // localCheckpoint truncates logical lineage for the splice cascade below.
+    // localCheckpoint: `merged` feeds both the z14 rebuild and its own write.
     val dirtyB = bucketsOf(dirtySet)
     val oldUpDirty = store.readBuckets("user_pixels", Some(userPixelsSchemaP), dirtyB)
       .map(_.select("user_id", "gx", "gy", "trips"))
     val merged = mergeUserPixels(oldUpDirty, delta).localCheckpoint(false)
 
     // 4. dirty z14 tiles: rebuild the global layer for exactly those tiles
-    // from the merged (dirty-bucket) user pixels. Small (bounded by the
-    // dirty subtree) — checkpoint eagerly so the level cascade below starts
-    // from materialized rows, not a re-runnable plan.
+    // from the merged (dirty-bucket) user pixels with the batch path's
+    // kernel: `merged` holds one row per (user_id, gx, gy), so
+    // globalGrain's count(*) per pixel is the exact distinct-user count.
     //
     // F8 (Worker.cs:178-179): tile-level user PRE-CHECK first — a dirty
     // tile whose distinct user count is below k cannot contribute any
@@ -158,8 +157,8 @@ object Incremental {
     // In the backfill regime (most of the store dirty, tiles dense) the
     // reference's per-tile in-memory check is free but a distributed
     // pre-agg is a whole extra pass that filters almost nothing —
-    // measured +25 % batch latency at sf0.01 backfill — so it gates on
-    // the SAME dirty-fraction switch as the pyramid rebuild below.
+    // measured +25 % batch latency at sf0.01 backfill — so it is gated on
+    // the dirty-bucket fraction (FusedCutover).
     val dirtyFraction = dirtyB.size.toDouble / TileStore.Buckets
     val preCheckOn = dirtyFraction <= FusedCutover && k > 1
     val dirtyRows = merged
@@ -169,129 +168,44 @@ object Incremental {
       if (preCheckOn)
         dirtyRows.join(broadcast(eligibleTiles(dirtyRows, k)), Seq("tx", "ty"), "left_semi")
       else dirtyRows
-    val dirtyZ14 = rebuildRows
-      .groupBy("gx", "gy")
-      .agg(countDistinct(col("user_id")).as("users"), sum("trips").as("trips"))
-      .where(col("users") >= k)
-      .select(lit(14).as("z"), col("gx"), col("gy"), col("users"), col("trips"))
-      .localCheckpoint(false) // lazy: materialized by the first consumer, reused after
+    val dirtyZ14 = HeatmapAgg.globalGrain(
+      rebuildRows.select("user_id", "gx", "gy", "trips").as[UserPixel], k)
 
-    // old level-z rows, partition-pruned to the given buckets
-    def oldLevel(z: Int, buckets: Seq[Int]): DataFrame =
-      store.readBuckets("global", Some(globalSchemaP), buckets, Some(z))
-        .map(_.where(col("z") === z).select("z", "gx", "gy", "users", "trips"))
-        .getOrElse(emptyGlobal)
-
-    // 5. parent rebuild for levels 13..0, ADAPTIVE by dirty fraction:
-    //
-    //   steady-state trickle (dirty buckets ≤ FusedCutover of the store) —
-    //   level-by-level bounded cascade (HeatMapExtensions.cs:148-214):
-    //   level z−1's dirty parents recompute from level z's SPLICED rows
-    //   restricted to the children of those parents — old rows partition-
-    //   pruned + semi-joined to the (≤4×|dirty|) child set, plus the just-
-    //   recomputed rows. Per-level scan is O(dirty subtree), never the
-    //   world; eager localCheckpoint keeps the cascade's lineage flat
-    //   (a 14-deep dependent plan OOMs AQE plan stringification).
-    //
-    //   backfill (a batch touching most of the store) — the single fused
-    //   ancestor-explode over the full spliced z14: when nearly every
-    //   bucket is dirty anyway, O(world) IS the work, and one wide
-    //   exchange beats 14 bounded jobs that each scan most of the store.
-    //
-    // Both recompute EXACTLY the dirty tiles of every level (sum is
-    // associative), so the choice is invisible in the output — both paths
-    // are exercised by IncrementalSpec (spread batches take the fused
-    // path, the confined batch takes the bounded cascade).
-    val lowerRecomputed: DataFrame =
-      if (dirtyFraction <= FusedCutover) {
-        val parts = Seq.newBuilder[DataFrame]
-        var recomputed = dirtyZ14 // dirty rows of the level being rolled up
-        var z = 13
-        while (z >= 0) {
-          val children: Set[(Long, Long)] = dirtyByZ(z).flatMap { case (tx, ty) =>
-            Seq((2 * tx, 2 * ty), (2 * tx + 1, 2 * ty), (2 * tx, 2 * ty + 1), (2 * tx + 1, 2 * ty + 1))
-          }
-          val oldChildRows = oldLevel(z + 1, bucketsOf(children))
-            .transform(withTiles)
-            .join(broadcast(tilesDf(children)), Seq("tx", "ty"), "left_semi")
-            .join(broadcast(tilesDf(dirtyByZ(z + 1))), Seq("tx", "ty"), "left_anti")
-            .drop("tx", "ty")
-          val spliced = oldChildRows.unionByName(recomputed) // recomputed ⊆ children
-          recomputed = graft.agg.Pyramid.rollupOne(spliced.as[graft.model.Schemas.GlobalPixel])
-            .toDF().localCheckpoint(true)
-          parts += recomputed
-          z -= 1
-        }
-        parts.result().reduce(_ unionByName _)
-      } else {
-        // full spliced z14 (one scan), every pixel exploded into the
-        // ancestors whose tiles are dirty, one groupBy for all levels
-        val splicedZ14Full = oldLevel(14, allBuckets)
-          .transform(withTiles)
-          .join(broadcast(tilesDf(dirtySet)), Seq("tx", "ty"), "left_anti")
-          .drop("tx", "ty")
-          .unionByName(dirtyZ14)
-        val res = Res
-        val dz = dirtyByZ
-        import spark.implicits._
-        splicedZ14Full
-          .select(col("gx"), col("gy"), col("users"), col("trips"))
-          .as[(Long, Long, Long, Long)]
-          .flatMap { case (gx, gy, users, trips) =>
-            Iterator.range(0, 14).filter { z =>
-              val d = 14 - z
-              dz(z).contains(((gx >> d) / res, (gy >> d) / res))
-            }.map { z =>
-              val d = 14 - z
-              (z, gx >> d, gy >> d, users, trips)
-            }
-          }
-          .toDF("z", "gx", "gy", "users", "trips")
-          .groupBy(col("z"), col("gx"), col("gy"))
-          .agg(sum("users").as("users"), sum("trips").as("trips"))
-          .select(col("z").cast("int").as("z"), col("gx"), col("gy"), col("users"), col("trips"))
-      }
-
-    // kept rows per level: everything in the DIRTY PARTITIONS that is NOT a
-    // dirty tile survives unchanged but must be rewritten with its
-    // partition (clean partitions are NOT written — commit hardlinks them
-    // forward, so writing their rows here would duplicate them in v<next>).
-    // Bounded mode scans each level pruned to its own dirty buckets (15
-    // small scans); fused mode does ONE scan statically pruned to the dirty
-    // (z, pb) directories with a single (z, tx, ty) anti-join — per-level
-    // broadcast pruning is pointless when most buckets are dirty, and 15
-    // separate broadcasts cost more than they save.
-    val kept: DataFrame =
-      if (dirtyFraction <= FusedCutover)
-        (0 to 14).map { lv =>
-          oldLevel(lv, bucketsOf(dirtyByZ(lv)))
-            .transform(withTiles)
-            .join(broadcast(tilesDf(dirtyByZ(lv))), Seq("tx", "ty"), "left_anti")
-            .drop("tx", "ty")
-        }.reduce(_ unionByName _)
-      else {
-        val dirtyAll = (0 to 14).flatMap(lv =>
-          dirtyByZ(lv).toSeq.map { case (tx, ty) => (lv, tx, ty) }).toDF("z", "tx", "ty")
-        // (z, pb) are partition columns; an isin over their encoding prunes
-        // to the dirty directories at plan time — the scan AND the write
-        // stay O(dirty partitions) even in fused mode, and no clean-
-        // partition row is ever double-materialized (write + hardlink).
-        val dirtyDirCodes = (0 to 14).flatMap(lv =>
-          bucketsOf(dirtyByZ(lv)).map(b => lv * TileStore.Buckets + b))
-        store.read("global", Some(globalSchemaP)) match {
-          case None => emptyGlobal
-          case Some(g) =>
-            g.where((col("z") * TileStore.Buckets + col("pb")).isin(dirtyDirCodes: _*))
-              .select("z", "gx", "gy", "users", "trips")
-              .transform(withTiles)
-              .join(broadcast(dirtyAll), Seq("z", "tx", "ty"), "left_anti")
-              .drop("tx", "ty")
-        }
-      }
-    val newGlobalDirty = pbOf(
-      Seq(kept, dirtyZ14, lowerRecomputed).reduce(_ unionByName _))
-    val globalDirtyDirs: Set[String] = (0 to 14).flatMap(lv =>
-      bucketsOf(dirtyByZ(lv)).map(b => s"z=$lv/pb=$b")).toSet
+    // 5. signed-delta pyramid splice. Levels below z14 are plain sums of
+    // the stored z14 layer (Pyramid.scala), so the batch changes every
+    // dirty ancestor by exactly the rolled-up z14 delta
+    //   Δ = dirtyZ14 − old z14 rows of the dirty tiles
+    // (negative where a pixel falls out of the threshold). ONE scan of the
+    // dirty (z, pb) directories — the (z * Buckets + pb) isin references
+    // only partition columns, so it lands as directory pruning — splits by
+    // a broadcast (z, tx, ty) join into
+    //   kept:     rows outside the dirty tiles of their level; unchanged,
+    //             but rewritten with their partition (clean partitions are
+    //             NOT written — commit hardlinks them forward, so writing
+    //             their rows here would duplicate them in v<next>)
+    //   oldDirty: rows of the dirty tiles, all 15 levels
+    // Every Δ row explodes into its ancestor chain z14..z0 and one
+    // aggregation adds the chains to oldDirty: z14 becomes old + (new −
+    // old) = new, each ancestor old + its rolled-up Δ. A row whose users
+    // and trips both reach 0 has no stored z14 descendant left: dropped.
+    val dirtyAll = (0 to 14).flatMap(lv =>
+      dirtyByZ(lv).toSeq.map { case (tx, ty) => (lv, tx, ty) }).toDF("z", "tx", "ty")
+    val dirtyDirs = (0 to 14).flatMap(lv => bucketsOf(dirtyByZ(lv)).map(b => (lv, b)))
+    val oldDirs = store.read("global", Some(globalSchemaP))
+      .map(_.where((col("z") * TileStore.Buckets + col("pb"))
+          .isin(dirtyDirs.map { case (lv, b) => lv * TileStore.Buckets + b }: _*))
+        .select("z", "gx", "gy", "users", "trips"))
+      .getOrElse(emptyGlobal)
+      .transform(withTiles)
+    val kept = oldDirs.join(broadcast(dirtyAll), Seq("z", "tx", "ty"), "left_anti").drop("tx", "ty")
+    val oldDirty = oldDirs.join(broadcast(dirtyAll), Seq("z", "tx", "ty"), "left_semi").drop("tx", "ty")
+    val zDelta = dirtyZ14.toDF().unionByName(oldDirty.where(col("z") === 14)
+      .select(col("z"), col("gx"), col("gy"), (-col("users")).as("users"), (-col("trips")).as("trips")))
+    val newDirty = Pyramid.mergePartials(
+      oldDirty.as[GlobalPixel].union(Pyramid.ancestorPartials(zDelta.as[GlobalPixel])))
+      .where(col("users") =!= 0 || col("trips") =!= 0)
+    val newGlobalDirty = pbOf(kept.unionByName(newDirty.toDF()))
+    val globalDirtyDirs: Set[String] = dirtyDirs.map { case (lv, b) => s"z=$lv/pb=$b" }.toSet
 
     // per-user cursors (S12, Worker.cs:290-296): last contribution id seen
     // per user, merged with the previous snapshot

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.TileStore
-import graft.model.Schemas.Track
+import graft.model.Schemas.{GlobalPixel, Track}
 import graft.synth.{ImageSynth, TraceSynth}
 
 /**
@@ -431,35 +431,77 @@ class IncrementalSpec extends AnyFunSuite {
     implicit val s: SparkSession = spark
     import s.implicits._
     // seeded scenario generator: random cut points produce batches of very
-    // different dirty fractions — confined trickle slices, spread fused
-    // slices, and empty windows — exercising BOTH pyramid paths, the F8
-    // gate, and the hardlink carry across arbitrary interleavings
+    // different dirty fractions — confined trickle slices, spread slices
+    // past the F8 cutover, and empty windows — exercising the F8 gate and
+    // the hardlink carry across arbitrary interleavings, at k = 3 (sparse
+    // store, most pixels suppressed) and k = 1 (dense store)
     val rnd = new java.util.Random(20260817L)
-    (0 until 3).foreach { scenario =>
-      val d = Files.createTempDirectory(s"tilestore-rand$scenario").toString
+    for (k <- Seq(3, 1); scenario <- 0 until 3) {
+      val d = Files.createTempDirectory(s"tilestore-rand-k$k-$scenario").toString
       val store = new TileStore(d)
       val cuts = (Seq(-1L, N - 1L) ++ Seq.fill(2 + rnd.nextInt(3))(rnd.nextInt(N).toLong))
         .distinct.sorted
       val windows = cuts.zip(cuts.tail) ++ Seq((N - 1L, N + 10L)) // last window is EMPTY
       windows.foreach { case (from, to) =>
-        val r = Incremental.processBatch(store, testTracks, from, to)
+        val r = Incremental.processBatch(store, testTracks, from, to, k)
         assert(!r.skipped)
       }
       val g = store.read("global", Some(Incremental.globalSchema)).get
         .select("z", "gx", "gy", "users", "trips")
       assert(g.count() === g.select("z", "gx", "gy").distinct().count(),
-        s"scenario $scenario (cuts=$cuts): duplicate keys in global")
+        s"k=$k scenario $scenario (cuts=$cuts): duplicate keys in global")
       val got = g.collect()
         .map(r => ((r.getInt(0), r.getLong(1), r.getLong(2)), (r.getLong(3), r.getLong(4)))).toMap
-      val want = HeatmapPipeline.run(testTracks).pyramid.collect()
+      val want = HeatmapPipeline.run(testTracks, k = k).pyramid.collect()
         .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
-      assert(g.count() === want.size.toLong, s"scenario $scenario (cuts=$cuts): row count")
-      assert(got === want, s"scenario $scenario (cuts=$cuts): values diverge")
+      assert(g.count() === want.size.toLong, s"k=$k scenario $scenario (cuts=$cuts): row count")
+      assert(got === want, s"k=$k scenario $scenario (cuts=$cuts): values diverge")
       // user_pixels must also stay duplicate-free across the carries
       val up = store.read("user_pixels", Some(Incremental.userPixelsSchemaP)).get
       assert(up.count() === up.select("user_id", "gx", "gy").distinct().count(),
-        s"scenario $scenario: duplicate user_pixels keys")
+        s"k=$k scenario $scenario: duplicate user_pixels keys")
     }
+  }
+
+  test("threshold change between batches: the pyramid stays the sum of the stored z14 layer") {
+    // a WorkerConfig.userThreshold redeploy: base commit at k=1, then
+    // windows at k=3. Each window rebuilds its dirty tiles at k=3, so their
+    // 1–2-user pixels leave the store and the z14 delta is NEGATIVE there:
+    // every ancestor of a retracted pixel must shrink by exactly its value
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val d = Files.createTempDirectory("tilestore-kchange").toString
+    val store = new TileStore(d)
+    def checked(label: String): Map[(Int, Long, Long), (Long, Long)] = {
+      val g = store.read("global", Some(Incremental.globalSchema)).get
+        .select("z", "gx", "gy", "users", "trips")
+      assert(g.count() === g.select("z", "gx", "gy").distinct().count(), s"$label: duplicate keys")
+      assert(g.where($"users" === 0 && $"trips" === 0).isEmpty, s"$label: all-zero rows")
+      val rows = g.as[GlobalPixel].collect()
+      val lower = rows.filter(_.z < 14).map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
+      // plain Scala sums of each stored z14 pixel over its ancestor chain
+      val rolled = rows.filter(_.z == 14).toSeq
+        .flatMap(p => (0 until 14).map(z => ((z, p.gx >> (14 - z), p.gy >> (14 - z)), (p.users, p.trips))))
+        .groupMapReduce(_._1)(_._2) { case ((u1, t1), (u2, t2)) => (u1 + u2, t1 + t2) }
+      assert(lower === rolled, s"$label: z<14 rows are not the sums of their stored z14 descendants")
+      rows.map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
+    }
+    assert(!Incremental.processBatch(store, testTracks, -1L, 59L, k = 1).skipped)
+    var before = checked("base at k=1")
+    var retracted = 0
+    Seq((59L, 79L), (79L, 99L), (99L, N - 1L)).foreach { case (from, to) =>
+      assert(!Incremental.processBatch(store, testTracks, from, to, k = 3).skipped)
+      val label = s"window ($from, $to] at k=3"
+      val after = checked(label)
+      val dirty = store.dirtyTilesSince(store.currentVersion - 1)
+      def rebuilt(key: (Int, Long, Long)): Boolean =
+        key._1 == 14 && dirty.contains((key._2 / Incremental.Res, key._3 / Incremental.Res))
+      assert(after.collect { case (key, (u, _)) if rebuilt(key) => u }.forall(_ >= 3),
+        s"$label: a rebuilt tile kept a pixel below k")
+      retracted += before.keys.count(key => rebuilt(key) && !after.contains(key))
+      before = after
+    }
+    assert(retracted > 0, "no k=1 pixel was retracted: the negative delta went untested")
   }
 
   test("crash before HEAD move leaves the store readable at the old version") {
