@@ -1,31 +1,32 @@
 package graft.agg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas.{GlobalPixel, UserPixel}
 
 /**
  * Heatmap aggregation: per-user pixel accumulation and the global
- * k-anonymity layer.
- *
- * Re-expresses the reference's per-pixel merge + global tile rebuild
+ * k-anonymity layer — the reference's per-pixel merge + global tile rebuild
  * (`/root/reference/src/HeatMap.Tiles/Diffs/HeatMapExtensions.cs:49-131`,
- * `Worker.cs:167-222`) as two hash aggregations:
+ * `Worker.cs:167-222`): exact distinct users + trip sum per z14 pixel,
+ * pixels seen by fewer than k users dropped. One form per caller:
  *
- *   user grain:   groupBy(user_id, gx, gy).sum(trips)          (A2/A3)
- *   global grain: groupBy(gx, gy).agg(count(*), sum(trips))
- *                 .where(users >= k)                           (A4/A5/F7)
+ *   tileCells → cellsToPixels   the flagship (HeatmapPipeline): ONE exchange
+ *                               of per-tile `TileUsersAgg` buffers, then a
+ *                               narrow explode with the k HAVING (A4/A5/F7)
+ *   tileCellsStriped            its hot-tile guard: (tkey, user stripe) keys
+ *   userGrain → globalGrain     Incremental: groupBy(user_id, gx, gy)
+ *                               .sum(trips) (A2/A3), then groupBy(gx, gy)
+ *                               .agg(count(*), sum(trips)).where(users >= k)
+ *   globalGrainFused            q_hm_from_images and the specs' oracle:
+ *                               built-in countDistinct from raw raster rows
  *
- * The count-distinct is EXACT (the reference enumerates real user sets, no
- * sketches) but costs no distinct-aggregation: after the user-grain
- * pre-aggregate each (pixel, user) appears exactly once, so a plain
- * count(*) per pixel IS the distinct user count. That turns the classic
- * hot-cell count-distinct skew problem into two well-partitioned partial
- * aggregations — the scale-out answer to the north rule's "salting for hot
- * urban cells": keys are pixel-grain (tile × 512²), so no single reducer
- * key can concentrate an urban core; Spark's partial aggregation performs
- * the map-side combine, and AQE rebalances stragglers.
+ * The count-distinct is EXACT everywhere (the reference enumerates real user
+ * sets, no sketches). In the user-grain cascade each (pixel, user) appears
+ * exactly once after the pre-aggregate, so a plain count(*) per pixel IS the
+ * distinct user count; in the tile-grain kernel the (pixel, user) set rides
+ * inside the buffer.
  */
 object HeatmapAgg {
   val KAnonymity = 3 // MIN_USERS — Worker.cs:204-216, Program.cs:34
@@ -75,83 +76,16 @@ object HeatmapAgg {
       .as[GlobalPixel]
   }
 
-  /** Two-phase SALTED variant of the k-anonymity layer for hot-key regimes
-    * (north rule: "explicit salting for hot urban cells"). Phase 1 groups on
-    * (pkey, salt = user_id % S) — splitting any single hot pixel's rows
-    * across S reducers — and pre-aggregates to (pixel, user) grain inside
-    * each salt; because the salt is a FUNCTION of user_id, a user never
-    * spans salts, so phase 2's count over (pixel, salt-partials) is still
-    * the exact distinct-user count. Proven equal to the unsalted plan in
-    * HeatmapAggSpec. Use when a cell's row count dwarfs the average (urban
-    * cores at planetary scale); the unsalted fused plan already splits by
-    * (pkey, user) so salting matters when single (pixel, user) pairs repeat
-    * massively across tracks. */
-  def globalGrainSalted(rasterPixels: org.apache.spark.sql.Dataset[graft.model.Schemas.PixelVisit],
-                        k: Int = KAnonymity, salts: Int = 16)(
-      implicit spark: SparkSession): Dataset[GlobalPixel] = {
-    import spark.implicits._
-    val phase1 = rasterPixels.toDF()
-      .withColumn("salt", pmod(col("user_id"), lit(salts)))
-      .groupBy($"pkey", $"salt", $"user_id")
-      .agg(sum($"trips").as("trips"))
-    val phase2 = phase1
-      .groupBy($"pkey", $"salt")
-      .agg(count(lit(1)).as("users_part"), sum($"trips").as("trips_part"))
-    phase2
-      .groupBy($"pkey")
-      .agg(sum($"users_part").as("users"), sum($"trips_part").as("trips"))
-      .where($"users" >= k)
-      .select(lit(graft.raster.Rasterize.Zoom).as("z"),
-        shiftrightunsigned($"pkey", 32).as("gx"),
-        $"pkey".bitwiseAND(lit(graft.core.Codec.U32Max)).as("gy"),
-        $"users", $"trips")
-      .as[GlobalPixel]
-  }
-
-  /** Single-exchange z14 via the native TypedImperativeAggregate
-    * (graft.functions.UserTripsAgg): the user set rides in the partial
-    * buffer, so there is exactly ONE hash exchange on the pixel key —
-    * vs two for the built-in countDistinct plan. Proven equal to the other
-    * plans in HeatmapAggSpec; exchange count asserted in PlanQualitySpec. */
-  def globalGrainNative(rasterPixels: org.apache.spark.sql.Dataset[graft.model.Schemas.PixelVisit],
-                        k: Int = KAnonymity)(
-      implicit spark: SparkSession): Dataset[GlobalPixel] = {
-    import spark.implicits._
-    rasterPixels.toDF()
-      .groupBy($"pkey")
-      .agg(graft.functions.UserTripsFunctions.userTrips(spark, $"user_id", $"trips").as("ut"))
-      .where($"ut.users" >= k)
-      .select(lit(graft.raster.Rasterize.Zoom).as("z"),
-        shiftrightunsigned($"pkey", 32).as("gx"),
-        $"pkey".bitwiseAND(lit(graft.core.Codec.U32Max)).as("gy"),
-        $"ut.users".as("users"), $"ut.trips".as("trips"))
-      .as[GlobalPixel]
-  }
-
-  /** Single-exchange z14 at TILE grain — the scale plan the flagship runs.
-    *
-    * `globalGrainNative` already has one exchange, but it exchanges one row
-    * per distinct (pixel) per map partition; with tracks landing randomly
-    * every partition covers most hot pixels, so the exchange still carries
-    * millions of rows. Grouping by tile (`Rasterize.tileVisits` +
-    * `TileUsersAgg`) exchanges one compact binary buffer per
-    * (map partition × tile) — row count drops by the pixels-per-tile factor
-    * (~500× at sf0.1) and the memory path (row headers, hashing, AQE stats)
-    * with it. Same exact semantics: distinct users + trip sums per pixel,
-    * k-anonymity HAVING (proved equal to the fused plan in HeatmapAggSpec).
-    * Skew posture: the hottest urban tile is ONE key whose merges are
-    * buffer unions (cheap); with 2^28 tiles at z14, keys are plentiful and
-    * AQE rebalances reducers. */
-  def globalGrainTiled(tiles: org.apache.spark.sql.Dataset[graft.model.Schemas.TileVisit],
-                       k: Int = KAnonymity,
-                       zoom: Int = graft.raster.Rasterize.Zoom,
-                       resolution: Int = graft.raster.Rasterize.Resolution)(
-      implicit spark: SparkSession): Dataset[GlobalPixel] =
-    cellsToPixels(tileCells(tiles), k, zoom, resolution)
-
-  /** The tile-grain aggregation itself: one exchange keyed by tkey, one row
-    * per tile out. The flagship caches THIS relation and derives both the
-    * z14 layer (`cellsToPixels`, narrow) and the pyramid
+  /** The tile-grain aggregation the flagship runs: one exchange keyed by
+    * tkey, one row per tile out. A pixel-grain plan exchanges one row per
+    * distinct pixel per map partition; with tracks landing randomly every
+    * partition covers most hot pixels, so that exchange carries millions of
+    * rows. Grouping by tile (`Rasterize.tileVisits` + `TileUsersAgg`)
+    * exchanges one compact binary buffer per (map partition × tile) — the
+    * row count drops by the pixels-per-tile factor (~500× at sf0.1). Same
+    * exact semantics (proved equal to the fused plan in HeatmapAggSpec).
+    * The flagship caches THIS relation and derives both the z14 layer
+    * (`cellsToPixels`, narrow) and the pyramid
     * (`Pyramid.lowerLevelsFromTiles`, tile-local pre-agg) from it. */
   def tileCells(tiles: org.apache.spark.sql.Dataset[graft.model.Schemas.TileVisit])(
       implicit spark: SparkSession): Dataset[graft.model.Schemas.TileCells] = {
@@ -169,9 +103,9 @@ object HeatmapAgg {
     * the key to (tkey, user_id % stripes): each stripe's buffer holds only
     * its users' pairs (≈ pairs/stripes), and because a user lives in
     * EXACTLY one stripe, per-pixel distinct-user counts ADD across stripes
-    * — the merge is an exact sum, not an approximation (same argument as
-    * `globalGrainSalted`; equality proven in HeatmapAggSpec, including a
-    * pathological one-tile × 10^5-user case with buffer telemetry).
+    * — the merge is an exact sum, not an approximation (equality proven
+    * in HeatmapAggSpec, including a pathological one-tile × 10^5-user case
+    * with buffer telemetry).
     * Cost: one extra (small) exchange of per-stripe cell arrays. */
   def tileCellsStriped(tiles: org.apache.spark.sql.Dataset[graft.model.Schemas.TileVisit],
                        stripes: Int)(
@@ -248,10 +182,4 @@ object HeatmapAgg {
       .groupBy($"tx", $"ty")
       .agg(sort_array(collect_set($"user_id")).as("users"))
   }
-
-  /** Packed export form: u64 = users << 32 | trips (Encoder.cs:10-13) —
-    * applied only at the boundary to avoid the carry hazard of packed sums. */
-  def packed(global: DataFrame): DataFrame =
-    global.withColumn("packed",
-      shiftleft(col("users"), 32).bitwiseOR(col("trips").bitwiseAND(lit(graft.core.Codec.U32Max))))
 }

@@ -500,7 +500,7 @@ object Dedup {
     // join-output. Below the threshold the labels broadcast and the
     // declared layout buys nothing, while its fixed partition count
     // defeats AQE's small-partition coalescing — measured 1.68× SLOWER at
-    // sf0.1 (tools/CcLayoutAB, same-window interleaved A/B), so the
+    // sf0.1 (OPTIMIZATION_r07.md, same-window interleaved A/B), so the
     // decision is made from the MEASURED labels checkpoint size, not a
     // constant tuned for either regime. DedupJobsSpec re-runs the loop
     // with broadcast disabled so the clustered branch's declared layout

@@ -12,8 +12,9 @@ import graft.synth.{ImageSynth, TraceSynth}
  * The flagship end-to-end query (reference lifecycle §3.1-3.2 of SURVEY.md):
  *
  *   images (Iceberg-shaped input) → derived tracks → rasterize (narrow)
- *   → user-grain pixel agg (shuffle 1) → global k-anon layer (shuffle 2)
- *   → 14-level pyramid (14 shrinking shuffles) → MVT blobs (tile shuffle)
+ *   → tile-grain z14 aggregation (ONE exchange, cached)
+ *   → z14 k-anon layer (narrow explode) + z13..z0 partials (tile-local)
+ *   → MVT blobs (`mvtAll`: z14 narrow, ONE exchange for the lower levels)
  *
  * Deterministic at any scale; parallelism-independent results.
  */

@@ -7,7 +7,8 @@ import graft.model.Schemas.{PixelVisit, Track}
 import graft.raster.Rasterize
 import graft.synth.{ImageSynth, TraceSynth}
 
-/** Salted == unsalted == cascade: all three k-anonymity plans are exact. */
+/** Tile-grain == fused == cascade: every k-anonymity plan is exact, and the
+  * tile kernel (`TileUsersAgg`) holds against an in-memory oracle. */
 class HeatmapAggSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(4, "agg-spec")
 
@@ -20,26 +21,6 @@ class HeatmapAggSpec extends AnyFunSuite {
     Rasterize.pixelKeys(tracks)
   }
 
-  test("salted two-phase k-anonymity == fused count-distinct plan") {
-    implicit val s: SparkSession = spark
-    val fused = HeatmapAgg.globalGrainFused(raster).collect()
-      .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
-    val salted = HeatmapAgg.globalGrainSalted(raster, salts = 7).collect()
-      .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
-    assert(fused.nonEmpty)
-    assert(salted === fused)
-  }
-
-  test("native TypedImperativeAggregate plan == fused count-distinct plan") {
-    implicit val s: SparkSession = spark
-    val fused = HeatmapAgg.globalGrainFused(raster).collect()
-      .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
-    val native = HeatmapAgg.globalGrainNative(raster).collect()
-      .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
-    assert(fused.nonEmpty)
-    assert(native === fused)
-  }
-
   test("tile-grain TileUsersAgg plan == fused count-distinct plan (the flagship path)") {
     implicit val s: SparkSession = spark
     import s.implicits._
@@ -49,7 +30,7 @@ class HeatmapAggSpec extends AnyFunSuite {
     })
     val fused = HeatmapAgg.globalGrainFused(Rasterize.pixelKeys(tracks)).collect()
       .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
-    val tiled = HeatmapAgg.globalGrainTiled(Rasterize.tileVisits(tracks)).collect()
+    val tiled = HeatmapAgg.cellsToPixels(HeatmapAgg.tileCells(Rasterize.tileVisits(tracks))).collect()
       .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
     assert(fused.nonEmpty)
     assert(tiled === fused)
@@ -145,16 +126,16 @@ class HeatmapAggSpec extends AnyFunSuite {
     val res = 1024
     val fused = HeatmapAgg.globalGrainFused(Rasterize.pixelKeys(tracks, resolution = res)).collect()
       .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
-    val tiled = HeatmapAgg.globalGrainTiled(
-        Rasterize.tileVisits(tracks, resolution = res), resolution = res).collect()
+    val tiled = HeatmapAgg.cellsToPixels(HeatmapAgg.tileCells(
+        Rasterize.tileVisits(tracks, resolution = res)), resolution = res).collect()
       .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
     assert(fused.nonEmpty)
     assert(tiled === fused)
     // 1024-grain coordinates really are finer: twice the 512-grain extent
     assert(fused.keys.map(_._1).max > 512L * 8390)
     // and the pyramid rollup holds at 1024 too (local rollup vs explode)
-    val z14 = HeatmapAgg.globalGrainTiled(
-      Rasterize.tileVisits(tracks, resolution = res), resolution = res)
+    val z14 = HeatmapAgg.cellsToPixels(HeatmapAgg.tileCells(
+      Rasterize.tileVisits(tracks, resolution = res)), resolution = res)
     val viaTiles = z14.toDF().unionByName(
       Pyramid.lowerLevelsFromTiles(HeatmapAgg.tileCells(
         Rasterize.tileVisits(tracks, resolution = res)), HeatmapAgg.KAnonymity,
@@ -163,22 +144,6 @@ class HeatmapAggSpec extends AnyFunSuite {
     val viaExplode = Pyramid.allLevels(z14).collect()
       .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
     assert(viaTiles === viaExplode)
-  }
-
-  test("native aggregate handles user_id 0 and null-free paths correctly") {
-    implicit val s: SparkSession = spark
-    import s.implicits._
-    // user 0 exercises the open-hash set's zero-sentinel slot
-    val visits = Seq(
-      graft.model.Schemas.PixelVisit(0L, 42L, 1L),
-      graft.model.Schemas.PixelVisit(0L, 42L, 2L),
-      graft.model.Schemas.PixelVisit(1L, 42L, 3L),
-      graft.model.Schemas.PixelVisit(2L, 42L, 4L),
-      graft.model.Schemas.PixelVisit(0L, 99L, 7L))
-    val got = HeatmapAgg.globalGrainNative(s.createDataset(visits), k = 1).collect()
-      .map(p => (((p.gx << 32) | p.gy), (p.users, p.trips))).toMap
-    assert(got(42L) === ((3L, 10L)))
-    assert(got(99L) === ((1L, 7L)))
   }
 
   test("explicit user-grain cascade == fused plan") {
@@ -237,15 +202,10 @@ class HeatmapAggSpec extends AnyFunSuite {
   test("custom aggregates reject wrong-typed SQL at analysis time, not mid-job") {
     implicit val s: SparkSession = spark
     graft.functions.TileUsersFunctions.register(s)
-    graft.functions.UserTripsFunctions.register(s)
     intercept[org.apache.spark.sql.AnalysisException] {
       s.sql("SELECT tile_users(CAST(1 AS INT), array(1L, 2L))").collect()
     }
-    intercept[org.apache.spark.sql.AnalysisException] {
-      s.sql("SELECT user_trips('not a user', 1L)").collect()
-    }
     // and the correctly-typed forms still analyze + run
-    assert(s.sql("SELECT user_trips(1L, 2L) AS ut").collect().nonEmpty)
     assert(s.sql("SELECT tile_users(1L, array(4294967296L))").collect().nonEmpty)
   }
 

@@ -118,6 +118,32 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("runAuto: known cardinality engages the striped plan, the HLL estimate keeps one stripe; both == run") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.MapGroups
+    val tracks = s.createDataset(testTracks)
+    // tileCellsStriped merges its stripes in a mapGroups; tileCells has none
+    def striped(r: HeatmapPipeline.HeatmapResult) =
+      r.cached.get.queryExecution.logical.collectFirst { case m: MapGroups => m }.isDefined
+    def rows(r: HeatmapPipeline.HeatmapResult) = r.pyramid.collect().toSet
+    def tiles(r: HeatmapPipeline.HeatmapResult) = HeatmapPipeline.mvtAll(r).collect()
+      .map(t => ((t.z, t.tx, t.ty), t.mvt.toSeq)).toMap
+    val hot = HeatmapPipeline.runAuto(tracks, knownUsers = Some(1000000L))
+    val auto = HeatmapPipeline.runAuto(tracks)
+    try {
+      assert(striped(hot))
+      assert(!striped(auto))
+      val want = rows(result)
+      assert(want.nonEmpty)
+      assert(rows(hot) === want)
+      assert(tiles(hot) === tiles(result))
+      assert(rows(auto) === want)
+    } finally {
+      hot.release(); auto.release()
+    }
+  }
+
   test("flat-array dump path (encodeZ14Flat + encodeLowerFused) is byte-equal to the object path") {
     implicit val s: SparkSession = spark
     import s.implicits._

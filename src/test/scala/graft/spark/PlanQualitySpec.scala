@@ -102,24 +102,14 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(exchanges === 2, plan)
   }
 
-  test("native user_trips aggregate: ONE exchange (vs 2 for countDistinct)") {
-    implicit val s: SparkSession = spark
-    import s.implicits._
-    val raster = graft.raster.Rasterize.pixelKeys(
-      s.createDataset(Seq(graft.model.Schemas.Track(1, 1,
-        Array(Array(4.35, 50.85), Array(4.351, 50.851))))))
-    val plan = physical(graft.agg.HeatmapAgg.globalGrainNative(raster).toDF())
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges === 1, plan)
-  }
-
   test("tile-grain aggregate: ONE exchange, keyed by tile not pixel") {
     implicit val s: SparkSession = spark
     import s.implicits._
     val tiles = graft.raster.Rasterize.tileVisits(
       s.createDataset(Seq(graft.model.Schemas.Track(1, 1,
         Array(Array(4.35, 50.85), Array(4.351, 50.851))))))
-    val plan = physical(graft.agg.HeatmapAgg.globalGrainTiled(tiles).toDF())
+    val plan = physical(graft.agg.HeatmapAgg.cellsToPixels(
+      graft.agg.HeatmapAgg.tileCells(tiles)).toDF())
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(exchanges === 1, plan)
     assert(plan.contains("tile_users"), plan)
