@@ -129,9 +129,7 @@ object ServiceMain {
           // exact tile selection via broadcast semi-join
           val buckets = targets.map { case (_, tx, ty) => TileStore.bucketOf(tx, ty) }
             .toSeq.distinct.map(Integer.valueOf)
-          val pruned =
-            if (g.columns.contains("pb")) g.where(col("pb").isin(buckets: _*)) else g
-          pruned
+          g.where(col("pb").isin(buckets: _*))
             .withColumn("tx", floor(col("gx") / res).cast("long"))
             .withColumn("ty", floor(col("gy") / res).cast("long"))
             .join(broadcast(targetDf), Seq("z", "tx", "ty"), "left_semi")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
  * (idempotent, atomic, resumable batch maintenance; heatmap-tiles
  * `Worker.cs:50-61,122-129`, whose at-least-once double-apply the tile
  * store fixes with atomic data+cursor commits) applied end-to-end to the
- * TEXT dedup pipeline. Since round 6 this is a thin binding of the
+ * TEXT dedup pipeline. It is a thin binding of the
  * modality-generic `IndexService` loop (probe → append → fold → atomic
  * labels+cursor commit, O(dirty) bucketed label commits, crash excision —
  * see IndexService's scaladoc for the machinery) to the MinHash-LSH index:
@@ -44,25 +44,6 @@ object DedupService {
       LshIndex.append(batch, idxDir, numHashes, bands)
     def compact(idxDir: String)(implicit s: SparkSession): Unit =
       LshIndex.compact(idxDir)
-    /** A pre-round-6 committed LSH index never wrote PARAMS; backfill it
-      * from this modality's configuration (the legacy contract trusted the
-      * caller to pass build-consistent parameters — adoption preserves
-      * exactly that trust, once, and the guard takes over after). */
-    override def adoptLegacyIndex(idxDir: String)(implicit s: SparkSession): Unit = {
-      val params = java.nio.file.Paths.get(idxDir, "PARAMS")
-      if (built(idxDir) && !Files.exists(params)) {
-        // Adoption converts an unguarded legacy state into a PARAMS-certified
-        // one on trust — say so loudly, with the parameters being assumed, so
-        // a mismatched legacy index (built under different numHashes/bands)
-        // is diagnosable from the log if probes later lose recall.
-        println(s"[dedup-service] ADOPTING legacy LSH index at $idxDir without a " +
-          s"PARAMS record: ASSUMING numHashes=$numHashes bands=$bands " +
-          s"prefixBuckets=${LshIndex.PrefixBuckets} (the pre-PARAMS contract " +
-          "trusted the caller; verify these match the original build)")
-        java.nio.file.Files.write(params,
-          s"$numHashes $bands ${LshIndex.PrefixBuckets}".getBytes("UTF-8"))
-      }
-    }
   }
 
   def readHead(stateDir: String): Head = IndexService.readHead(stateDir)
@@ -110,7 +91,7 @@ object DedupService {
       val lbl = labels(args(1))
       val kept = lbl.where(col("id") === col("cluster_id")).count()
       val stats = IndexService.commitStats(args(1))
-      val dirs = stats.map(s => s"${s._3}w+${s._4}c/${s._5}r").mkString(",")
+      val dirs = stats.map(s => s"${s.writtenDirs}w+${s.carriedDirs}c/${s.writtenRows}r").mkString(",")
       println(s"[dedup-service] head=v${head.version} cursor=${head.cursor} " +
         s"docs=${lbl.count()} kept=$kept commits(written+carried/rows)=[$dirs]")
     } finally spark.stop()

@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions.col
  * (`LshIndex`, `PhashIndex`, `Ann`'s IVF): append fragments their
  * hive-partitioned tables one file per touched directory per batch, so
  * probes open ~batches files per directory until a compaction rewrite.
+ * Both rewrites here — compaction and the service's crash excision — go
+ * through one staged two-rename swap.
  */
 private[graft] object IndexFiles {
 
@@ -31,15 +33,6 @@ private[graft] object IndexFiles {
                       pred: org.apache.spark.sql.Column, partCol: String = "bpb")(
       implicit spark: SparkSession): Unit =
     stagedRewrite(dir, sub, partitioned, partCol, _.where(pred))
-
-  /** Rewrite `dir/sub` through an arbitrary transform, partitioned by
-    * `partCol` (which the transform may introduce) — the legacy-layout
-    * migration behind `IndexService.migrateLegacy`. Same two-rename crash
-    * safety as compaction. */
-  def compactDirTransform(dir: String, sub: String, partCol: String,
-                          transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)(
-      implicit spark: SparkSession): Unit =
-    stagedRewrite(dir, sub, partitioned = true, partCol, transform)
 
   private def stagedRewrite(dir: String, sub: String, partitioned: Boolean,
                             partCol: String,

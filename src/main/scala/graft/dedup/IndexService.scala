@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.TileStore
+
 /** One persisted index table of a modality: its subdir (may be nested,
   * e.g. "text/bands"), hive-partitioning, and the id column the
   * crash-excision rewrite filters on (tables of one modality can disagree
@@ -28,11 +30,6 @@ trait ClusterModality {
   def tables: Seq[IndexTable]
   /** True once a build has produced the index under `idxDir`. */
   def built(idxDir: String): Boolean
-  /** Adopt a COMMITTED index written by a pre-parameter-guard layout
-    * (e.g. backfill a missing PARAMS file from this modality's configured
-    * parameters — trusting the caller exactly as the legacy contract
-    * did). Only called on states with a committed HEAD; no-op default. */
-  def adoptLegacyIndex(idxDir: String)(implicit s: SparkSession): Unit = ()
   def build(batch: DataFrame, idxDir: String)(implicit s: SparkSession): Unit
   /** Batch-internal pairs for the FIRST batch (no index to probe yet). */
   def firstPairs(batch: DataFrame)(implicit s: SparkSession): DataFrame
@@ -54,14 +51,21 @@ trait ClusterModality {
  *   → fold the pairs into the standing clustering (`incrementalDelta`)
  *   → commit labels + cursor ATOMICALLY
  *
- * State layout under `stateDir` (same as the original DedupService so its
- * on-disk contract and spec carry over):
+ * State layout under `stateDir`:
  *   index/<tables>                the modality's persisted index
  *   labels/v<N>/lb=<B>/…          immutable labels versions, RANGE-BUCKETED
  *                                 by lb = cluster_id / labelRangeWidth
+ *   labels_by_id/v<N>/ib=<B>/…    the same relation keyed by id,
+ *                                 ib = id / labelRangeWidth
  *   HEAD                          text "version cursor" — THE commit point
  *   INFLIGHT                      text "<cursor>" crash marker
  *   commits.jsonl                 per-commit write metrics (metadata only)
+ *
+ * This is the only layout `run` accepts. Every commit writes both label
+ * projections before HEAD moves, so a state whose HEAD > 0 lacks
+ * `labels_by_id/v<HEAD>` was written by an older layout: `run` refuses it
+ * before touching any file (delete the state dir and re-run to rebuild it
+ * from the source). Nothing is migrated in place.
  *
  * O(dirty) LABEL COMMITS — the labels table is hive-partitioned by the
  * RANGE bucket of cluster_id. Because cluster ids are member MINIMA and the
@@ -73,7 +77,7 @@ trait ClusterModality {
  * commit therefore rewrites ONLY the buckets containing a batch row, a
  * changed rep, or its new cluster id — bounded by O(batch + touched
  * clusters) buckets — and carries every clean bucket forward as HARDLINKS
- * (the tile store's dirty-partition commit scheme, TileStore.scala:72,
+ * (the tile store's dirty-partition writer, `TileStore.writePartial`,
  * applied to the label relation). The closure argument making the pruned
  * rewrite exact: a row outside the dirty buckets has lb(cluster_id) not
  * dirty, hence its cluster is not in the remap, hence its label cannot
@@ -86,11 +90,9 @@ trait ClusterModality {
  * filtered to the committed cursor and deletes the orphan labels version
  * (hardlinked files delete like any other — links are per-version).
  *
- * O(dirty) FOLD READS — the round-6 layout accepted one corpus-sized
- * labels scan per batch (the fold's endpoint→representative lookup);
- * since round 7 a SECOND projection of the same relation,
- * `labels_by_id/v<N>/ib=<B>` with ib = id / labelRangeWidth (the id-keyed
- * dual of the cluster-keyed lb store), makes that lookup partition-pruned:
+ * O(dirty) FOLD READS — the fold's endpoint→representative lookup reads
+ * the SECOND projection of the same relation, `labels_by_id/v<N>/ib=<B>`
+ * (the id-keyed dual of the cluster-keyed lb store), partition-pruned:
  * an endpoint's label row lives exactly in ib(endpoint), so the fold reads
  * only the endpoint set's ib buckets — O(batch pair endpoints) buckets,
  * never the corpus. The projection commits with the same dirty-only +
@@ -102,8 +104,8 @@ trait ClusterModality {
  * the dirty ib buckets has an id no relabeled-or-new row has, hence its
  * cluster is not in the remap, hence its (id, cluster_id) is unchanged —
  * carrying it is the identity. The write cost is ~2× the (already
- * dirty-sized) lb commit, the price round 6's scaladoc predicted for
- * closing the read side; per-commit read/write metrics land in
+ * dirty-sized) lb commit, the price of never scanning the corpus-sized
+ * labels relation per batch; per-commit read/write metrics land in
  * commits.jsonl (fold_read_rows, ib_written_dirs, ib_carried_dirs).
  */
 object IndexService {
@@ -174,61 +176,6 @@ object IndexService {
       println(s"[index-service] recovered: excised uncommitted batch at cursor=$started")
     }
     Files.delete(inflight)
-  }
-
-  /** Hardlink every parquet file of `prev`'s clean buckets (dirs named
-    * `<prefix><bucket>`, e.g. lb=3 / ib=3) into `next`. Returns the
-    * carried-directory count. */
-  private def carryClean(prev: Path, next: Path, dirty: Set[Long],
-                         prefix: String = "lb="): Int = {
-    var carried = 0
-    Option(prev.toFile.listFiles()).getOrElse(Array.empty).foreach { d =>
-      if (d.isDirectory && d.getName.startsWith(prefix) &&
-          !dirty.contains(d.getName.drop(prefix.length).toLong)) {
-        val dst = next.resolve(d.getName)
-        Files.createDirectories(dst)
-        d.listFiles().foreach { f =>
-          if (f.getName.endsWith(".parquet"))
-            Files.createLink(dst.resolve(f.getName), f.toPath)
-        }
-        carried += 1
-      }
-    }
-    carried
-  }
-
-  private def writtenBuckets(version: Path, prefix: String = "lb="): Set[Long] =
-    Option(version.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith(prefix))
-      .map(_.getName.drop(prefix.length).toLong).toSet
-
-  /** Migrate a state directory written by the pre-round-6 layout so the
-    * scaladoc's "on-disk contract carries over" holds LITERALLY: (1) a
-    * committed index without its parameter marker adopts the modality's
-    * configured parameters (the legacy trust model); (2) a committed FLAT
-    * labels version (no lb= bucket dirs) is rewritten range-bucketed via
-    * the shared crash-safe two-rename (a crash mid-migration rolls back
-    * on the next start). No-op on fresh or already-migrated state. */
-  private def migrateLegacy(stateDir: String, modality: ClusterModality,
-                            labelRangeWidth: Long)(
-      implicit spark: SparkSession): Unit = {
-    val head = readHead(stateDir)
-    if (head.version == 0L) return
-    modality.adoptLegacyIndex(indexDir(stateDir))
-    val labelsRoot = Paths.get(stateDir, "labels").toString
-    val sub = s"v${head.version}"
-    IndexFiles.recover(labelsRoot, sub) // crashed-migration rollback
-    val vdir = labelsDir(stateDir, head.version)
-    val flat = Option(vdir.toFile.listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.endsWith(".parquet")) &&
-      !Option(vdir.toFile.listFiles()).getOrElse(Array.empty)
-        .exists(f => f.isDirectory && f.getName.startsWith("lb="))
-    if (flat) {
-      val lb = lbOf(labelRangeWidth) _
-      IndexFiles.compactDirTransform(labelsRoot, sub, partCol = "lb",
-        _.select("id", "cluster_id").withColumn("lb", lb(col("cluster_id"))))
-      println(s"[index-service] migrated legacy flat labels $sub to lb buckets")
-    }
   }
 
   /** The id-range cursor drain shared by every resumable index service
@@ -302,6 +249,15 @@ object IndexService {
     require(keepLabelVersions >= 1, "keepLabelVersions must be >= 1")
     require(labelRangeWidth > 0, "labelRangeWidth must be positive")
     val idc = modality.idCol
+    // refuse, before any mutation, a state this layout cannot read: every
+    // commit writes labels_by_id/v<N> before HEAD moves to N, so a HEAD
+    // without it was written by an older layout
+    val committed = readHead(stateDir)
+    if (committed.version > 0 && !Files.exists(labelsByIdDir(stateDir, committed.version)))
+      throw new IllegalStateException(
+        s"service state $stateDir is at v${committed.version} but has no " +
+          s"labels_by_id/v${committed.version}: it was written by an older layout. " +
+          "Delete the state dir and re-run to rebuild it from the source.")
     Files.createDirectories(Paths.get(stateDir, "labels"))
     recover(stateDir, modality)
     val idx = indexDir(stateDir)
@@ -311,10 +267,8 @@ object IndexService {
     // missing dir reads as "first build" and the batch-only labeling would
     // overwrite the standing labels
     modality.tables.foreach(t => IndexFiles.recover(idx, t.sub))
-    migrateLegacy(stateDir, modality, labelRangeWidth)
     val lb = lbOf(labelRangeWidth) _
     val ib = lbOf(labelRangeWidth) _ // same range-bucket fn, keyed by id
-    backfillByIdProjection(stateDir, labelRangeWidth)
     drain(rows, idc, stateDir, batchSize) { (batch, head, _) =>
       val vdir = labelsDir(stateDir, head.version + 1)
       val ibVdir = labelsByIdDir(stateDir, head.version + 1)
@@ -335,9 +289,9 @@ object IndexService {
           .write.mode("overwrite").partitionBy("ib").parquet(ibVdir.toString)
         Dedup.releaseCheckpoint(full)
         Dedup.releaseCheckpoint(pairs)
-        CommitMetrics(writtenBuckets(vdir).size, 0,
+        CommitMetrics(TileStore.leafPartitionDirs(vdir, 1).size, 0,
           obs.get("rows").asInstanceOf[Long],
-          writtenBuckets(ibVdir, "ib=").size, 0, 0L)
+          TileStore.leafPartitionDirs(ibVdir, 1).size, 0, 0L)
       } else {
         // probe BEFORE append (probe materializes eagerly); then fold
         // the delta and rewrite ONLY the dirty label buckets
@@ -380,16 +334,12 @@ object IndexService {
           .select(col("id"),
             coalesce(col("new_cluster"), col("cluster_id")).as("cluster_id"))
         val obs = org.apache.spark.sql.Observation()
-        dirtyOld.unionByName(newRows.select("id", "cluster_id"))
-          .withColumn("lb", lb(col("cluster_id")))
-          .observe(obs, count(lit(1)).as("rows"))
-          .repartition(col("lb"))
-          .write.mode("overwrite").partitionBy("lb").parquet(vdir.toString)
-        val written = writtenBuckets(vdir)
-        require(written.subsetOf(dirty),
-          s"label rewrite emitted rows outside its dirty buckets (would " +
-            s"duplicate hardlink-carried data): ${(written -- dirty).take(5)}")
-        val carried = carryClean(labelsDir(stateDir, head.version), vdir, dirty)
+        val (written, carried) = TileStore.writePartial(TileStore.Partial(
+          dirtyOld.unionByName(newRows.select("id", "cluster_id"))
+            .withColumn("lb", lb(col("cluster_id")))
+            .observe(obs, count(lit(1)).as("rows"))
+            .repartition(col("lb")),
+          Seq("lb"), dirty.map(b => s"lb=$b")), vdir, Some(labelsDir(stateDir, head.version)))
         // by-id projection commit: a by-id row changes only when it
         // RELABELS (all such rows join a non-null remap target inside the
         // lb store's dirty buckets — their ids give the dirty ib set) or
@@ -405,16 +355,12 @@ object IndexService {
           .join(broadcast(changed), col("cluster_id") === col("rep"), "left")
           .select(col("id"),
             coalesce(col("new_cluster"), col("cluster_id")).as("cluster_id"))
-        dirtyById.unionByName(newRows.select("id", "cluster_id"))
-          .withColumn("ib", ib(col("id")))
-          .repartition(col("ib"))
-          .write.mode("overwrite").partitionBy("ib").parquet(ibVdir.toString)
-        val ibWritten = writtenBuckets(ibVdir, "ib=")
-        require(ibWritten.subsetOf(dirtyIb),
-          s"by-id rewrite emitted rows outside its dirty buckets: " +
-            s"${(ibWritten -- dirtyIb).take(5)}")
-        val ibCarried = carryClean(labelsByIdDir(stateDir, head.version),
-          ibVdir, dirtyIb, "ib=")
+        val (ibWritten, ibCarried) = TileStore.writePartial(TileStore.Partial(
+          dirtyById.unionByName(newRows.select("id", "cluster_id"))
+            .withColumn("ib", ib(col("id")))
+            .repartition(col("ib")),
+          Seq("ib"), dirtyIb.map(b => s"ib=$b")), ibVdir,
+          Some(labelsByIdDir(stateDir, head.version)))
         dirtyOldJoined.unpersist()
         Dedup.releaseCheckpoint(remap)
         Dedup.releaseCheckpoint(pairs)
@@ -451,40 +397,16 @@ object IndexService {
       writtenRows: Long, ibWrittenDirs: Int, ibCarriedDirs: Int,
       foldReadRows: Long)
 
-  /** One-time migration for states committed before the id-keyed
-    * projection existed: derive `labels_by_id/v<HEAD>` from the committed
-    * lb store. Crash-safe via build-into-hidden-dir + atomic rename (a
-    * half-built `.build_*` leftover is swept on the next start). No-op on
-    * fresh or already-projected state. */
-  private def backfillByIdProjection(stateDir: String, labelRangeWidth: Long)(
-      implicit spark: SparkSession): Unit = {
-    val head = readHead(stateDir)
-    val root = Paths.get(stateDir, "labels_by_id")
-    Option(root.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith(".build_"))
-      .foreach(f => graft.stream.StreamDedup.deleteTree(f.getPath))
-    if (head.version == 0L || Files.exists(labelsByIdDir(stateDir, head.version))) return
-    val tmp = root.resolve(s".build_v${head.version}")
-    labels(stateDir)
-      .withColumn("ib", lbOf(labelRangeWidth)(col("id")))
-      .repartition(col("ib"))
-      .write.mode("overwrite").partitionBy("ib").parquet(tmp.toString)
-    Files.move(tmp, labelsByIdDir(stateDir, head.version),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    println(s"[index-service] backfilled id-keyed labels projection v${head.version}")
-  }
-
   /** One parsed commits.jsonl record; the ib/fold fields are -1 for lines
-    * written before the id-keyed projection existed. */
+    * without them. */
   final case class CommitStat(version: Long, cursor: Long, writtenDirs: Int,
       carriedDirs: Int, writtenRows: Long, ibWrittenDirs: Int,
       ibCarriedDirs: Int, foldReadRows: Long)
 
-  /** Full per-commit metric records including the by-id projection's write
-    * counts and the fold's pruned read volume — the evidence surface for
-    * BOTH O(dirty) contracts (commit writes ∝ dirty, fold reads ∝ batch
-    * endpoints). */
-  def commitStatsV2(stateDir: String): Seq[CommitStat] = {
+  /** The per-commit metric records, oldest first — the evidence surface
+    * for BOTH O(dirty) contracts (commit writes ∝ dirty buckets, fold reads
+    * ∝ batch endpoints). A truncated line (crash remnant) is dropped. */
+  def commitStats(stateDir: String): Seq[CommitStat] = {
     val f = commitsFile(stateDir)
     if (!Files.exists(f)) Seq.empty
     else {
@@ -513,12 +435,4 @@ object IndexService {
       }
     }
   }
-
-  /** The per-commit metric records (version, cursor, written_dirs,
-    * carried_dirs, written_rows), oldest first — the evidence surface for
-    * the O(dirty) commit contract (see `commitStatsV2` for the by-id
-    * projection and fold-read fields). */
-  def commitStats(stateDir: String): Seq[(Long, Long, Int, Int, Long)] =
-    commitStatsV2(stateDir).map(s =>
-      (s.version, s.cursor, s.writtenDirs, s.carriedDirs, s.writtenRows))
 }

@@ -51,8 +51,8 @@ object LshIndex {
   private def checkParams(dir: String, numHashes: Int, bands: Int): Unit = {
     require(java.nio.file.Files.exists(paramsFile(dir)),
       s"no complete LSH index at $dir (PARAMS missing — build writes it last, so a " +
-        "crashed build reads as absent; a pre-PARAMS index under a committed " +
-        "service state is adopted by IndexService.migrateLegacy, bare ones rebuild)")
+        "crashed build reads as absent; rebuild the index, or delete a service " +
+        "state dir holding it and re-run)")
     val stored = new String(
       java.nio.file.Files.readAllBytes(paramsFile(dir)), "UTF-8").trim.split("\\s+")
     require(stored.length == 3 &&

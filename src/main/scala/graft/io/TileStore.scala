@@ -299,28 +299,30 @@ class TileStore(root: String)(implicit spark: SparkSession) {
     (dirs, bytes)
   }
 
-  private def dirBytes(path: Path): Long =
-    if (!Files.exists(path)) 0L
+  /** Regular files under a snapshot dir. With `leaves`, only the
+    * snapshot's top-level files and those in the given leaf partition dirs
+    * — what a partial commit wrote, without the clean dirs it carried. */
+  private def snapshotFiles(path: Path, leaves: Option[Set[String]]): List[Path] =
+    if (!Files.exists(path)) Nil
     else {
       val s = Files.walk(path)
-      try s.filter(Files.isRegularFile(_)).mapToLong(Files.size).sum
-      finally s.close()
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(f => Files.isRegularFile(f) && leaves.forall(ls =>
+          f.getParent == path || ls.contains(path.relativize(f.getParent).toString))).toList
+      } finally s.close()
     }
+
+  private def dirBytes(path: Path, leaves: Option[Set[String]] = None): Long =
+    snapshotFiles(path, leaves).map(Files.size).sum
 
   /** Write-time stats from parquet FOOTERS (driver-side metadata reads, no
     * Spark job, no data scan — the Iceberg-manifest analog): total rows +
     * rows per first-level partition-directory value. */
-  private def footerStats(path: Path, partitioned: Boolean): (Long, Map[String, Long]) = {
+  private def footerStats(path: Path, partitioned: Boolean,
+                          leaves: Option[Set[String]] = None): (Long, Map[String, Long]) = {
     val conf = spark.sessionState.newHadoopConf()
-    if (!Files.exists(path)) return (0L, Map.empty)
-    val s = Files.walk(path)
-    val files =
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-          .toList
-      } finally s.close()
+    val files = snapshotFiles(path, leaves).filter(_.getFileName.toString.endsWith(".parquet"))
     // footer reads are tiny but latency-bound; a partitioned commit has one
     // file per dirty dir (can be hundreds) — read them in parallel
     import scala.concurrent.{Await, Future}
@@ -351,9 +353,92 @@ class TileStore(root: String)(implicit spark: SparkSession) {
     (total, perPart.toMap)
   }
 
+  /**
+   * Write the given relations as version N+1 and commit atomically:
+   * parquet first, then the commit record, then HEAD (rename). `full`
+   * relations are rewritten completely; `partial` relations write only
+   * their dirty partitions and carry clean partitions forward as
+   * hardlinks. Metrics capture rows/bytes WRITTEN this commit (per
+   * relation and per partition value — lineage) plus carried-partition
+   * counts; `dirtyTiles` (the batch's z14 dirty set) rides in the record
+   * for the incremental exporter.
+   */
+  def commit(batchFrom: Long, batchTo: Long,
+             relations: Map[String, (DataFrame, Option[String])],
+             partial: Map[String, TileStore.Partial] = Map.empty,
+             dirtyTiles: Option[Seq[(Long, Long)]] = None): Long = {
+    val prev = currentVersion
+    val next = prev + 1
+    val fullMetrics = relations.map { case (name, (df, partitionBy)) =>
+      val path = rootPath.resolve(name).resolve(s"v$next")
+      val writer = df.write.mode("overwrite")
+      partitionBy.fold(writer)(c => writer.partitionBy(c)).parquet(path.toString)
+      val (rows, partRows) = footerStats(path, partitionBy.isDefined)
+      val perPartition =
+        if (partitionBy.isEmpty) "{}"
+        else partRows.map { case (v, n) => s""""$v": $n""" }.toSeq.sorted.mkString("{", ", ", "}")
+      s""""$name": {"rows": $rows, "bytes": ${dirBytes(path)}, "partition_rows": $perPartition}"""
+    }
+    val partialMetrics = partial.map { case (name, p) =>
+      val path = rootPath.resolve(name).resolve(s"v$next")
+      val prevSnapshot =
+        if (prev == 0 || !hasSnapshot(name, prev)) None
+        else Some(rootPath.resolve(name).resolve(s"v$prev"))
+      // a retried batch may find a dangling v<next> from a crash — the
+      // writer overwrites it
+      val (written, carried) = TileStore.writePartial(p, path, prevSnapshot)
+      // metrics of what THIS commit wrote: the carried leaf dirs are links
+      val (rows, partRows) = footerStats(path, partitioned = true, Some(written))
+      val perPartition =
+        partRows.map { case (v, n) => s""""$v": $n""" }.toSeq.sorted.mkString("{", ", ", "}")
+      s""""$name": {"rows": $rows, "bytes": ${dirBytes(path, Some(written))}, "partition_rows": $perPartition, """ +
+        s""""written_dirs": ${p.dirtyDirs.size}, "carried_dirs": $carried}"""
+    }
+    val tilesJson = dirtyTiles.fold("") { ts =>
+      ts.map { case (tx, ty) => s"[$tx, $ty]" }.mkString(""", "dirty_tiles": [""", ", ", "]")
+    }
+    val record =
+      s"""{"version": $next, "ts_ms": ${System.currentTimeMillis}, "from_id": $batchFrom, "to_id": $batchTo$tilesJson, """ +
+        s""""relations": {${(fullMetrics ++ partialMetrics).mkString(", ")}}}"""
+    Files.write(commitsFile, (record + "\n").getBytes(StandardCharsets.UTF_8),
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    AtomicWrite.write(headFile, next.toString)
+    next
+  }
+}
+
+object TileStore {
+  /** A partial (dirty-partition-only) write: `rows` must contain EXACTLY
+    * the new content of the dirty partitions; every other partition of the
+    * previous version is hardlinked forward unchanged. */
+  final case class Partial(rows: DataFrame, partitionCols: Seq[String], dirtyDirs: Set[String])
+
+  /** The dirty-partition writer behind every partial commit (the tile
+    * store's relations and the index service's label projections): write
+    * `p.rows` to `path` (overwrite — a retry replaces a dangling dir from a
+    * crash), refuse a written leaf dir outside `p.dirtyDirs`, then hardlink
+    * every clean leaf dir of `prev` into `path`. Returns the written leaf
+    * dirs (relative, e.g. "z=14/pb=3") and the carried-dir count. */
+  def writePartial(p: Partial, path: Path, prev: Option[Path]): (Set[String], Int) = {
+    p.rows.write.mode("overwrite").partitionBy(p.partitionCols: _*).parquet(path.toString)
+    val depth = p.partitionCols.length
+    val written = leafPartitionDirs(path, depth).toSet
+    // every UNdeclared prev partition hardlinks forward below — a stray
+    // write would silently duplicate its rows
+    val stray = written -- p.dirtyDirs
+    require(stray.isEmpty,
+      s"partial write to $path emitted rows outside its declared dirty partitions " +
+        s"(would duplicate hardlink-carried data): ${stray.take(5).mkString(", ")}")
+    val clean = prev.fold(Seq.empty[String])(leafPartitionDirs(_, depth).filterNot(p.dirtyDirs.contains))
+    // the overwrite wiped `path`, so only dirty partitions exist there; a
+    // clean dir can't collide
+    prev.foreach(from => clean.foreach(rel => linkDir(from.resolve(rel), path.resolve(rel))))
+    (written, clean.size)
+  }
+
   /** Leaf partition dirs (depth = `depth` of `col=value` segments) under a
     * snapshot dir, as relative strings like "z=14/pb=3". */
-  private def leafPartitionDirs(snapshot: Path, depth: Int): Seq[String] =
+  private[graft] def leafPartitionDirs(snapshot: Path, depth: Int): Seq[String] =
     if (!Files.exists(snapshot)) Seq.empty
     else {
       def walk(dir: Path, level: Int): Seq[Path] =
@@ -385,83 +470,6 @@ class TileStore(root: String)(implicit spark: SparkSession) {
     } finally s.close()
   }
 
-  /**
-   * Write the given relations as version N+1 and commit atomically:
-   * parquet first, then the commit record, then HEAD (rename). `full`
-   * relations are rewritten completely; `partial` relations write only
-   * their dirty partitions and carry clean partitions forward as
-   * hardlinks. Metrics capture rows/bytes WRITTEN this commit (per
-   * relation and per partition value — lineage) plus carried-partition
-   * counts; `dirtyTiles` (the batch's z14 dirty set) rides in the record
-   * for the incremental exporter.
-   */
-  def commit(batchFrom: Long, batchTo: Long,
-             relations: Map[String, (DataFrame, Option[String])],
-             partial: Map[String, TileStore.Partial] = Map.empty,
-             dirtyTiles: Option[Seq[(Long, Long)]] = None): Long = {
-    val prev = currentVersion
-    val next = prev + 1
-    val fullMetrics = relations.map { case (name, (df, partitionBy)) =>
-      val path = rootPath.resolve(name).resolve(s"v$next")
-      val writer = df.write.mode("overwrite")
-      partitionBy.fold(writer)(c => writer.partitionBy(c)).parquet(path.toString)
-      val (rows, partRows) = footerStats(path, partitionBy.isDefined)
-      val perPartition =
-        if (partitionBy.isEmpty) "{}"
-        else partRows.map { case (v, n) => s""""$v": $n""" }.toSeq.sorted.mkString("{", ", ", "}")
-      s""""$name": {"rows": $rows, "bytes": ${dirBytes(path)}, "partition_rows": $perPartition}"""
-    }
-    val partialMetrics = partial.map { case (name, p) =>
-      val path = rootPath.resolve(name).resolve(s"v$next")
-      // a retried batch may find a dangling v<next> from a crash — overwrite
-      p.rows.write.mode("overwrite").partitionBy(p.partitionCols: _*).parquet(path.toString)
-      // enforce the Partial contract: every written leaf partition must be
-      // declared dirty, because every UNdeclared prev partition hardlinks
-      // forward below — a stray write would silently duplicate its rows
-      val strayDirs = leafPartitionDirs(path, p.partitionCols.length).toSet -- p.dirtyDirs
-      require(strayDirs.isEmpty,
-        s"partial write for '$name' emitted rows outside its declared dirty partitions " +
-          s"(would duplicate hardlink-carried data): ${strayDirs.take(5).mkString(", ")}")
-      val (rows, partRows) = footerStats(path, partitioned = true)
-      val writtenBytes = dirBytes(path)
-      // carry clean partitions forward from the previous version as links
-      val prevPath = rootPath.resolve(name).resolve(s"v$prev")
-      val carried =
-        if (prev == 0 || !hasSnapshot(name, prev)) 0
-        else {
-          val clean = leafPartitionDirs(prevPath, p.partitionCols.length)
-            .filterNot(p.dirtyDirs.contains)
-          clean.foreach { rel =>
-            val dst = path.resolve(rel)
-            // the overwrite above wiped v<next>, so only genuinely-new
-            // partitions exist there; a clean dir can't collide
-            linkDir(prevPath.resolve(rel), dst)
-          }
-          clean.size
-        }
-      val perPartition =
-        partRows.map { case (v, n) => s""""$v": $n""" }.toSeq.sorted.mkString("{", ", ", "}")
-      s""""$name": {"rows": $rows, "bytes": $writtenBytes, "partition_rows": $perPartition, """ +
-        s""""written_dirs": ${p.dirtyDirs.size}, "carried_dirs": $carried}"""
-    }
-    val tilesJson = dirtyTiles.fold("") { ts =>
-      ts.map { case (tx, ty) => s"[$tx, $ty]" }.mkString(""", "dirty_tiles": [""", ", ", "]")
-    }
-    val record =
-      s"""{"version": $next, "ts_ms": ${System.currentTimeMillis}, "from_id": $batchFrom, "to_id": $batchTo$tilesJson, """ +
-        s""""relations": {${(fullMetrics ++ partialMetrics).mkString(", ")}}}"""
-    Files.write(commitsFile, (record + "\n").getBytes(StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    AtomicWrite.write(headFile, next.toString)
-    next
-  }
-}
-
-object TileStore {
-  /** A partial (dirty-partition-only) write: `rows` must contain EXACTLY
-    * the new content of the dirty partitions; every other partition of the
-    * previous version is hardlinked forward unchanged. */
-  final case class Partial(rows: DataFrame, partitionCols: Seq[String], dirtyDirs: Set[String])
 
   /** Tile-bucket count for the partitioned relations. Sized so a sandbox
     * store gets real multi-partition layouts without thousands of tiny

@@ -34,7 +34,7 @@ object ServiceReadProbe {
       println(f"[svc-read] drained in ${(System.nanoTime() - t0) / 1e9}%.1f s " +
         s"(batchSize=$batchSize, width=$width, corpus=${docs.count()})")
       println("[svc-read] version cursor lb_written lb_carried rows ib_written ib_carried fold_read_rows")
-      graft.dedup.IndexService.commitStatsV2(state).foreach { s =>
+      graft.dedup.IndexService.commitStats(state).foreach { s =>
         println(s"[svc-read] v${s.version} ${s.cursor} ${s.writtenDirs} " +
           s"${s.carriedDirs} ${s.writtenRows} ${s.ibWrittenDirs} " +
           s"${s.ibCarriedDirs} ${s.foldReadRows}")
@@ -42,7 +42,7 @@ object ServiceReadProbe {
       // the scale claim, asserted: the LAST batch's fold read must not be
       // corpus-sized (the round-6 layout read the whole standing labels
       // relation — corpus minus one batch — per commit)
-      val stats = graft.dedup.IndexService.commitStatsV2(state)
+      val stats = graft.dedup.IndexService.commitStats(state)
       val last = stats.last
       val corpus = docs.count()
       println(s"[svc-read] last-batch fold_read_rows=${last.foldReadRows} vs " +

@@ -172,7 +172,8 @@ class DedupServiceSpec extends AnyFunSuite {
       DedupService.run(docs64, state, batchSize = 16, threshold = 0.8,
         bands = 8, maxBucket = noCap, keepLabelVersions = 10, labelRangeWidth = 16)
       assert(labelMap(DedupService.labels(state)) === batchModeLabels(docs64))
-      val stats = IndexService.commitStats(state)
+      val stats = IndexService.commitStats(state).map(s =>
+        (s.version, s.cursor, s.writtenDirs, s.carriedDirs, s.writtenRows))
       assert(stats.map(_._1) === Seq(1L, 2L, 3L, 4L))
       // batch 2 (ids 16..31, no merges): exactly its own bucket written,
       // bucket 0 carried forward as hardlinks — NOT a corpus rewrite
@@ -197,7 +198,7 @@ class DedupServiceSpec extends AnyFunSuite {
       assert(DedupService.labels(state).groupBy("id").count()
         .where(col("count") > 1).isEmpty, "duplicate label rows")
       // --- the id-keyed projection's O(dirty) contracts (fold-read side) ---
-      val v2 = IndexService.commitStatsV2(state)
+      val v2 = IndexService.commitStats(state)
       // batch 2 (no merges, probe returns no pairs): the fold READ zero
       // label rows (endpoint set empty), wrote exactly the batch's own ib
       // bucket and carried the clean one
@@ -254,13 +255,13 @@ class DedupServiceSpec extends AnyFunSuite {
     } finally graft.stream.StreamDedup.deleteTree(state)
   }
 
-  test("pre-round-6 state (flat labels, index without PARAMS) migrates on resume and converges") {
+  test("a state without labels_by_id at HEAD is refused and left untouched") {
     val state = tmpState()
     try {
       val half = docs.where(col("doc_id") < 30)
-      // construct the legacy on-disk layout by hand: a COMMITTED index
-      // without its PARAMS marker, a FLAT (un-bucketed) labels version,
-      // and HEAD pointing at them
+      // an older on-disk layout, built by hand: a COMMITTED index without
+      // its PARAMS marker, a FLAT (un-bucketed) labels version, no id-keyed
+      // projection, and HEAD pointing at them
       LshIndex.build(half, s"$state/index", bands = 8)
       java.nio.file.Files.delete(java.nio.file.Paths.get(state, "index", "PARAMS"))
       val legacy = Dedup.connectedComponents(
@@ -270,22 +271,29 @@ class DedupServiceSpec extends AnyFunSuite {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(state, "labels"))
       legacy.coalesce(1).write.parquet(s"$state/labels/v1")
       graft.io.AtomicWrite.write(java.nio.file.Paths.get(state, "HEAD"), "1 30")
-      // resume with the full corpus: PARAMS adopted, labels re-bucketed
-      // (crash-safe), the tail folds in — identical to batch mode
-      DedupService.run(docs, state, batchSize = 30, threshold = 0.8,
-        bands = 8, maxBucket = noCap, labelRangeWidth = 16)
-      assert(labelMap(DedupService.labels(state)) === batchModeLabels(docs))
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(state, "index", "PARAMS")))
-      val head = DedupService.readHead(state)
-      val vdir = new java.io.File(s"$state/labels/v${head.version}")
-      assert(vdir.listFiles().exists(f => f.isDirectory && f.getName.startsWith("lb=")),
-        "migrated labels version is not bucketed")
-      // the legacy state had no id-keyed projection: the resume backfilled
-      // it (and the tail batch's fold then read the pruned projection)
-      val byId = spark.read.parquet(s"$state/labels_by_id/v${head.version}")
-        .select("id", "cluster_id")
-      assert(labelMap(byId) === labelMap(DedupService.labels(state)),
-        "backfilled labels_by_id diverged from the lb store")
+      // relative path -> file bytes (None for a directory)
+      def tree(): Map[String, Option[Seq[Byte]]] = {
+        val root = java.nio.file.Paths.get(state)
+        val walk = java.nio.file.Files.walk(root)
+        try {
+          import scala.jdk.CollectionConverters._
+          walk.iterator().asScala.map { p =>
+            root.relativize(p).toString ->
+              (if (java.nio.file.Files.isRegularFile(p))
+                Some(java.nio.file.Files.readAllBytes(p).toSeq) else None)
+          }.toMap
+        } finally walk.close()
+      }
+      val before = tree()
+      val e = intercept[IllegalStateException] {
+        DedupService.run(docs, state, batchSize = 30, threshold = 0.8,
+          bands = 8, maxBucket = noCap, labelRangeWidth = 16)
+      }
+      assert(e.getMessage.contains(state) && e.getMessage.contains("labels_by_id/v1"),
+        s"refusal does not name the state and the missing projection: ${e.getMessage}")
+      assert(tree() === before, "the refused state was modified")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(state, "index", "PARAMS")))
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(state, "INFLIGHT")))
     } finally graft.stream.StreamDedup.deleteTree(state)
   }
 
@@ -297,7 +305,12 @@ class DedupServiceSpec extends AnyFunSuite {
       java.nio.file.Files.write(java.nio.file.Paths.get(state, "commits.jsonl"),
         ("""{"version": 1, "cursor": 16, "written_dirs": 1, "carried_dirs": 0, "written_rows": 16}""" +
           "\n" + """{"version": 2, "cursor": 32, "written_d""").getBytes("UTF-8"))
-      assert(IndexService.commitStats(state) === Seq((1L, 16L, 1, 0, 16L)))
+      val stats = IndexService.commitStats(state)
+      assert(stats.map(s => (s.version, s.cursor, s.writtenDirs, s.carriedDirs,
+        s.writtenRows)) === Seq((1L, 16L, 1, 0, 16L)))
+      // a record without the by-id projection's fields reads them as -1
+      assert(stats.map(s => (s.ibWrittenDirs, s.ibCarriedDirs, s.foldReadRows)) ===
+        Seq((-1, -1, -1L)))
     } finally graft.stream.StreamDedup.deleteTree(state)
   }
 
