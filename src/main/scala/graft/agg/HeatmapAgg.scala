@@ -14,18 +14,17 @@ import graft.model.Schemas.{GlobalPixel, UserPixel}
  *
  *   tileCells → cellsToPixels   the flagship (HeatmapPipeline): ONE exchange
  *                               of per-tile `TileUsersAgg` buffers, then a
- *                               narrow explode with the k HAVING (A4/A5/F7)
+ *                               narrow explode with the k HAVING (A4/A5/F7);
+ *                               Incremental runs the same pair over its
+ *                               merged (tkey, user) runs of the dirty tiles
  *   tileCellsStriped            its hot-tile guard: (tkey, user stripe) keys
- *   userGrain → globalGrain     Incremental: groupBy(user_id, gx, gy)
- *                               .sum(trips) (A2/A3), then groupBy(gx, gy)
- *                               .agg(count(*), sum(trips)).where(users >= k)
+ *   userGrain                   `HeatmapResult.userPixels`: groupBy(user_id,
+ *                               gx, gy).sum(trips), u32-clamped (A2/A3)
  *   globalGrainFused            q_hm_from_images and the specs' oracle:
  *                               built-in countDistinct from raw raster rows
  *
  * The count-distinct is EXACT everywhere (the reference enumerates real user
- * sets, no sketches). In the user-grain cascade each (pixel, user) appears
- * exactly once after the pre-aggregate, so a plain count(*) per pixel IS the
- * distinct user count; in the tile-grain kernel the (pixel, user) set rides
+ * sets, no sketches): in the tile-grain kernel the (pixel, user) set rides
  * inside the buffer.
  */
 object HeatmapAgg {
@@ -41,26 +40,14 @@ object HeatmapAgg {
       .as[UserPixel]
   }
 
-  /** A4/F7: exact distinct users + trip sum per pixel, k-anonymity HAVING. */
-  def globalGrain(userPixels: Dataset[UserPixel], k: Int = KAnonymity)(
-      implicit spark: SparkSession): Dataset[GlobalPixel] = {
-    import spark.implicits._
-    userPixels
-      .groupBy($"gx", $"gy")
-      .agg(count(lit(1)).as("users"), sum($"trips").as("trips"))
-      .where($"users" >= k)
-      .select(lit(graft.raster.Rasterize.Zoom).as("z"), $"gx", $"gy", $"users", $"trips")
-      .as[GlobalPixel]
-  }
-
   /** Single-exchange z14 layer from raw raster output (user_id, pkey,
     * trips): Catalyst plans the exact count-distinct as ONE hash exchange
     * on pkey with a map-side partial keyed (pkey, user) — half the shuffle
-    * volume of the explicit user-grain → global-grain cascade, same exact
-    * result (proved equal in HeatmapPipelineSpec). The user-grain
-    * saturating clamp (A3) is not applicable on this path: single-batch
-    * trip counts cannot approach 2^32 (documented divergence of the fused
-    * form; the explicit cascade keeps the clamp). */
+    * volume of an explicit user-grain → pixel-grain cascade, same exact
+    * result (proved equal in HeatmapAggSpec). The user-grain saturating
+    * clamp (A3) is not applicable on this path: single-batch trip counts
+    * cannot approach 2^32 (documented divergence of the fused form;
+    * `userGrain` and Incremental's run merge keep the clamp). */
   def globalGrainFused(rasterPixels: org.apache.spark.sql.Dataset[graft.model.Schemas.PixelVisit],
                        k: Int = KAnonymity)(
       implicit spark: SparkSession): Dataset[GlobalPixel] = {

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types._
  * pixel's (trip sum, distinct-user set) — the engine's answer to the
  * pixel-row shuffle bottleneck.
  *
- * The pixel-grain plans (`HeatmapAgg.globalGrain`, `globalGrainFused`)
- * exchange one row per distinct (pixel[, user]) per map partition; at sf0.1
- * that is ~23.5M rows because tracks land randomly, so map-side combine
+ * The pixel-grain plans (`HeatmapAgg.globalGrainFused`, the specs'
+ * user-grain oracle) exchange one row per distinct (pixel[, user]) per map
+ * partition; at sf0.1 that is ~23.5M rows because tracks land randomly, so map-side combine
  * barely collapses anything. Grouping by TILE instead (≈740 keys) exchanges one
  * partial buffer per (map partition × tile) — hundreds of rows, each a
  * compact binary blob — while the same (pixel, user) de-duplication happens

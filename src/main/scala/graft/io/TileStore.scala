@@ -359,8 +359,9 @@ class TileStore(root: String)(implicit spark: SparkSession) {
    * relations are rewritten completely; `partial` relations write only
    * their dirty partitions and carry clean partitions forward as
    * hardlinks. Metrics capture rows/bytes WRITTEN this commit (per
-   * relation and per partition value — lineage) plus carried-partition
-   * counts; `dirtyTiles` (the batch's z14 dirty set) rides in the record
+   * relation and per partition value — lineage) plus the counts of leaf
+   * dirs written (a declared dirty dir that got no rows is not) and
+   * carried; `dirtyTiles` (the batch's z14 dirty set) rides in the record
    * for the incremental exporter.
    */
   def commit(batchFrom: Long, batchTo: Long,
@@ -392,7 +393,7 @@ class TileStore(root: String)(implicit spark: SparkSession) {
       val perPartition =
         partRows.map { case (v, n) => s""""$v": $n""" }.toSeq.sorted.mkString("{", ", ", "}")
       s""""$name": {"rows": $rows, "bytes": ${dirBytes(path, Some(written))}, "partition_rows": $perPartition, """ +
-        s""""written_dirs": ${p.dirtyDirs.size}, "carried_dirs": $carried}"""
+        s""""written_dirs": ${written.size}, "carried_dirs": $carried}"""
     }
     val tilesJson = dirtyTiles.fold("") { ts =>
       ts.map { case (tx, ty) => s"[$tx, $ty]" }.mkString(""", "dirty_tiles": [""", ", ", "]")

@@ -1,11 +1,16 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.agg.{HeatmapAgg, Pyramid}
+import graft.core.Codec
 import graft.io.TileStore
-import graft.model.Schemas.{GlobalPixel, Track, UserPixel}
+import graft.model.Schemas.{GlobalPixel, TileVisit, Track}
 import graft.raster.Rasterize
 
 /**
@@ -15,12 +20,20 @@ import graft.raster.Rasterize
  * per id-window batch (Worker.cs:139-165):
  *   1. skip if the window is already committed (idempotent resume — fixes
  *      the reference's at-least-once double-apply, Worker.cs:122-129)
- *   2. rasterize the batch → delta user-pixels
- *   3. MERGE delta into the persistent user_pixels relation
- *      (full-outer + saturating add = Diffs/HeatMapExtensions.cs:49-131) —
- *      reading ONLY the dirty tile-bucket partitions (directory pruning)
+ *   2. rasterize the batch at tile grain (`Rasterize.tileVisits`): one
+ *      sorted packed pixel run per (track × touched z14 tile); its distinct
+ *      tkeys are the dirty tile set
+ *   3. MERGE the runs into the persistent user_tiles relation — one
+ *      `TileVisit` row per (tkey, user_id), partitioned by the tile's own
+ *      bucket — reading ONLY the dirty bucket partitions; runs of the same
+ *      key merge by a sorted-run saturating add (`mergeRuns`, the
+ *      reference's per-pixel merge, Diffs/HeatMapExtensions.cs:49-131)
  *   4. recompute the global z14 layer ONLY for dirty tiles
- *      (Worker.cs:167-222) with the batch path's HeatmapAgg.globalGrain
+ *      (Worker.cs:167-222) with the flagship's kernel,
+ *      `HeatmapAgg.tileCells` + `cellsToPixels`. Its users >= k HAVING also
+ *      does F8 (Worker.cs:178-179): a pixel's user set ⊆ its tile's, so a
+ *      sub-k tile keeps no pixel and its absence from the rebuilt output is
+ *      its deletion
  *   5. splice the pyramid by signed delta (the reference rebuilds parents
  *      level by level, HeatMapExtensions.cs:148-214; levels below z14 are
  *      plain sums of z14, so the rebuild equals old + rolled-up delta):
@@ -29,23 +42,25 @@ import graft.raster.Rasterize
  *      aggregation adding it to the old rows of the dirty tiles of every
  *      level — the scan is bounded by the dirty partitions, never the world
  *   6. commit atomically with lineage metrics: only the DIRTY partitions of
- *      user_pixels/global are written; clean partitions carry forward into
+ *      user_tiles/global are written; clean partitions carry forward into
  *      the new version as hardlinks (TileStore.Partial)
  *
- * Every pixel-grain step is keyed/partitioned; the dirty-TILE set is the
+ * Every tile-grain step is keyed/partitioned; the dirty-TILE set is the
  * one deliberately driver-side structure — bounded by the id-window
  * (maxContributions × tiles-per-track), the same contract as the
  * reference's in-memory HashSet (Worker.cs:99-103) — so at 10^12-row scale
  * the per-batch scan AND write cost is bounded by the touched-tile subtree
  * × bucket granularity (TileStore.Buckets), not the world.
+ *
+ * A store whose HEAD has no user_tiles snapshot holds the older per-pixel
+ * user_pixels layout; it is refused, not migrated.
  */
 object Incremental {
   val Res = Rasterize.Resolution
 
-  /** Dirty-bucket fraction above which the F8 tile pre-check is skipped:
-    * past this point most of the store is dirty, tiles are dense and the
-    * extra (tile, user)-grain pass filters almost nothing (sandbox backfill
-    * batches land here; planetary steady-state trickle stays far below). */
+  /** Dirty-bucket fraction that separates a backfill batch (most buckets
+    * dirty) from a trickle window. Read only by the benchmark's self-test;
+    * `Incremental` takes the same path for both. */
   val FusedCutover = 0.3
 
   final case class BatchResult(version: Long, skipped: Boolean)
@@ -56,31 +71,26 @@ object Incremental {
   private def pbOf(df: DataFrame): DataFrame =
     df.withColumn("pb", TileStore.bucketCol(tileOf(col("gx")), tileOf(col("gy"))))
 
-  /** F8 pre-check (Worker.cs:178-179): the (tx, ty) tiles of `dirtyRows`
-    * (user-pixel rows carrying tx/ty columns) whose EXACT distinct user
-    * count reaches k — only their rows are worth the pixel-grain rebuild;
-    * a sub-k tile's pixels all fail the k-anonymity HAVING regardless.
-    * Exact, not approximate: a tile with exactly k users must survive. */
-  def eligibleTiles(dirtyRows: DataFrame, k: Int): DataFrame =
-    dirtyRows
-      .groupBy("tx", "ty")
-      .agg(countDistinct(col("user_id")).as("tile_users"))
-      .where(col("tile_users") >= k)
-      .select("tx", "ty")
-
-  /** Merge batch delta into persistent user pixels: full-outer sum with the
-    * reference's u32 saturation. */
-  def mergeUserPixels(existing: Option[DataFrame], delta: DataFrame): DataFrame = {
-    val d = delta.groupBy("user_id", "gx", "gy").agg(sum("trips").as("trips"))
-    existing match {
-      case None => d
-      case Some(e) =>
-        e.withColumnRenamed("trips", "trips_old")
-          .join(d.withColumnRenamed("trips", "trips_new"), Seq("user_id", "gx", "gy"), "full_outer")
-          .select(col("user_id"), col("gx"), col("gy"),
-            least(coalesce(col("trips_old"), lit(0L)) + coalesce(col("trips_new"), lit(0L)),
-              lit(graft.core.Codec.U32Max)).as("trips"))
+  /** A3: merge two sorted packed pixel runs (localPix << 32 | trips). A
+    * pixel in both runs gets the sum of its trips, saturating at u32 max as
+    * the reference does on merge (Diffs/HeatMapExtensions.cs:113-117); the
+    * clamp also keeps trips inside the packed low 32 bits. */
+  private[pipeline] def mergeRuns(a: Array[Long], b: Array[Long]): Array[Long] = {
+    val out = new Array[Long](a.length + b.length)
+    var i = 0; var j = 0; var n = 0
+    while (i < a.length || j < b.length) {
+      val pa = if (i < a.length) a(i) >>> 32 else Long.MaxValue
+      val pb = if (j < b.length) b(j) >>> 32 else Long.MaxValue
+      out(n) =
+        if (pa < pb) { i += 1; a(i - 1) }
+        else if (pb < pa) { j += 1; b(j - 1) }
+        else {
+          i += 1; j += 1
+          (pa << 32) | Codec.saturatingAddU32(a(i - 1) & Codec.U32Max, b(j - 1) & Codec.U32Max)
+        }
+      n += 1
     }
+    java.util.Arrays.copyOf(out, n)
   }
 
   /** Process one id-window batch of tracks. Returns the committed version
@@ -101,75 +111,61 @@ object Incremental {
 
   private def applyBatch(store: TileStore, batch: Dataset[Track], fromId: Long, toId: Long,
                          k: Int)(implicit spark: SparkSession): BatchResult = {
+    // every version this code commits has user_tiles (an empty window
+    // writes its _SUCCESS); without it the store's user state would read as
+    // empty and the dirty tiles would silently lose every earlier user
+    val head = store.currentVersion
+    if (head > 0 && !store.hasSnapshot("user_tiles", head))
+      throw new IllegalStateException(
+        s"tile store has no ${store.snapshotPath("user_tiles", head)}: its user state is the " +
+          "older per-pixel user_pixels layout, which is not read or migrated; delete the store and re-run")
     if (store.committedBatches.contains((fromId, toId)))
-      return BatchResult(store.currentVersion, skipped = true)
+      return BatchResult(head, skipped = true)
 
     import spark.implicits._
-    val delta = HeatmapAgg.userGrain(Rasterize.userPixels(batch)).toDF()
-    delta.persist()
+    val visits = Rasterize.tileVisits(batch)
+    visits.persist()
 
     // The per-batch dirty set is bounded by the id-window (maxContributions
     // × tiles-per-track), exactly the reference's in-memory HashSet
     // (Worker.cs:99-103) — collect it once; per-level ancestor sets and
     // bucket sets derive on the driver.
-    val dirtySet: Set[(Long, Long)] = delta
-      .select(tileOf(col("gx")).as("tx"), tileOf(col("gy")).as("ty")).distinct()
-      .as[(Long, Long)].collect().toSet
-    val dirtyByZ: Array[Set[(Long, Long)]] = {
-      val arr = new Array[Set[(Long, Long)]](15)
-      arr(14) = dirtySet
-      var z = 13
-      while (z >= 0) {
-        arr(z) = arr(z + 1).map { case (tx, ty) => (tx / 2, ty / 2) }
-        z -= 1
-      }
-      arr
-    }
+    val dirtyTkeys: Seq[Long] = visits.select("tkey").as[Long].collect().distinct.sorted.toSeq
+    val dirtySet: Set[(Long, Long)] = dirtyTkeys.map(t => (t >>> 32, t & Codec.U32Max)).toSet
+    val dirtyByZ: Seq[Set[(Long, Long)]] =
+      (0 to 14).map(z => dirtySet.map { case (tx, ty) => (tx >> (14 - z), ty >> (14 - z)) })
     def bucketsOf(s: Set[(Long, Long)]): Seq[Int] =
       s.map { case (tx, ty) => TileStore.bucketOf(tx, ty) }.toSeq.distinct.sorted
-    def tilesDf(s: Set[(Long, Long)]): DataFrame =
-      s.toSeq.sorted.toDF("tx", "ty")
     def withTiles(df: DataFrame): DataFrame =
       df.withColumn("tx", tileOf(col("gx"))).withColumn("ty", tileOf(col("gy")))
 
-    // 3. merge user pixels — ONLY the dirty buckets are read (partition-
-    // pruned: the delta's keys all live in dirty tiles, so clean buckets
-    // cannot change) and only they are rewritten; the rest hardlink forward.
+    // 3. merge user tiles — ONLY the dirty buckets are read (every batch
+    // run lives in a dirty tile, and a tile's rows live in its own bucket)
+    // and only they are rewritten; the rest hardlink forward. The dirty
+    // bucket dirs are read by path: a partition-filtered read lists every
+    // bucket dir first, a Spark listing job once they outnumber 32. One
+    // exchange keyed (tkey, user_id), then a per-partition hash merge: the
+    // stored rows are already unique per key and a window adds few, so a
+    // map-side combine would save nothing.
     // localCheckpoint: `merged` feeds both the z14 rebuild and its own write.
     val dirtyB = bucketsOf(dirtySet)
-    val oldUpDirty = store.readBuckets("user_pixels", Some(userPixelsSchemaP), dirtyB)
-      .map(_.select("user_id", "gx", "gy", "trips"))
-    val merged = mergeUserPixels(oldUpDirty, delta).localCheckpoint(false)
+    val userTiles = store.snapshotPath("user_tiles", head)
+    val oldDirs = dirtyB.map(b => s"$userTiles/pb=$b").filter(d => Files.isDirectory(Paths.get(d)))
+    val runs =
+      if (oldDirs.isEmpty) visits
+      else spark.read.schema(userTilesSchemaP).option("basePath", userTiles).parquet(oldDirs: _*)
+        .select("user_id", "tkey", "pixels").as[TileVisit].union(visits)
+    val merged = runs.repartition(col("tkey"), col("user_id")).mapPartitions { it =>
+      val byKey = new java.util.HashMap[(Long, Long), TileVisit]()
+      it.foreach(v => byKey.merge((v.tkey, v.user_id), v, (a, b) => a.copy(pixels = mergeRuns(a.pixels, b.pixels))))
+      byKey.values().iterator().asScala
+    }.localCheckpoint(false)
 
-    // 4. dirty z14 tiles: rebuild the global layer for exactly those tiles
-    // from the merged (dirty-bucket) user pixels with the batch path's
-    // kernel: `merged` holds one row per (user_id, gx, gy), so
-    // globalGrain's count(*) per pixel is the exact distinct-user count.
-    //
-    // F8 (Worker.cs:178-179): tile-level user PRE-CHECK first — a dirty
-    // tile whose distinct user count is below k cannot contribute any
-    // pixel (a pixel's user set ⊆ its tile's), so its rows skip the
-    // pixel-grain rebuild entirely; its absence from the rebuilt output IS
-    // its deletion, exactly like the unfiltered HAVING. The pre-check
-    // exchanges at (tile, user) grain (map-side partial dedup), ≪ pixel
-    // grain — a win exactly in the TRICKLE regime, where most touched
-    // tiles are sparse and most rows never reach the expensive aggregate.
-    // In the backfill regime (most of the store dirty, tiles dense) the
-    // reference's per-tile in-memory check is free but a distributed
-    // pre-agg is a whole extra pass that filters almost nothing —
-    // measured +25 % batch latency at sf0.01 backfill — so it is gated on
-    // the dirty-bucket fraction (FusedCutover).
-    val dirtyFraction = dirtyB.size.toDouble / TileStore.Buckets
-    val preCheckOn = dirtyFraction <= FusedCutover && k > 1
-    val dirtyRows = merged
-      .transform(withTiles)
-      .join(broadcast(tilesDf(dirtySet)), Seq("tx", "ty"), "left_semi")
-    val rebuildRows =
-      if (preCheckOn)
-        dirtyRows.join(broadcast(eligibleTiles(dirtyRows, k)), Seq("tx", "ty"), "left_semi")
-      else dirtyRows
-    val dirtyZ14 = HeatmapAgg.globalGrain(
-      rebuildRows.select("user_id", "gx", "gy", "trips").as[UserPixel], k)
+    // 4. dirty z14 tiles: the flagship kernel over the merged runs of
+    // exactly the dirty tiles (the clean tiles of a dirty bucket keep
+    // their global rows)
+    val dirtyZ14 = HeatmapAgg.cellsToPixels(
+      HeatmapAgg.tileCells(merged.where(col("tkey").isin(dirtyTkeys: _*))), k)
 
     // 5. signed-delta pyramid splice. Levels below z14 are plain sums of
     // the stored z14 layer (Pyramid.scala), so the batch changes every
@@ -191,14 +187,14 @@ object Incremental {
     val dirtyAll = (0 to 14).flatMap(lv =>
       dirtyByZ(lv).toSeq.map { case (tx, ty) => (lv, tx, ty) }).toDF("z", "tx", "ty")
     val dirtyDirs = (0 to 14).flatMap(lv => bucketsOf(dirtyByZ(lv)).map(b => (lv, b)))
-    val oldDirs = store.read("global", Some(globalSchemaP))
+    val oldGlobal = store.read("global", Some(globalSchemaP))
       .map(_.where((col("z") * TileStore.Buckets + col("pb"))
           .isin(dirtyDirs.map { case (lv, b) => lv * TileStore.Buckets + b }: _*))
         .select("z", "gx", "gy", "users", "trips"))
       .getOrElse(emptyGlobal)
       .transform(withTiles)
-    val kept = oldDirs.join(broadcast(dirtyAll), Seq("z", "tx", "ty"), "left_anti").drop("tx", "ty")
-    val oldDirty = oldDirs.join(broadcast(dirtyAll), Seq("z", "tx", "ty"), "left_semi").drop("tx", "ty")
+    val kept = oldGlobal.join(broadcast(dirtyAll), Seq("z", "tx", "ty"), "left_anti").drop("tx", "ty")
+    val oldDirty = oldGlobal.join(broadcast(dirtyAll), Seq("z", "tx", "ty"), "left_semi").drop("tx", "ty")
     val zDelta = dirtyZ14.toDF().unionByName(oldDirty.where(col("z") === 14)
       .select(col("z"), col("gx"), col("gy"), (-col("users")).as("users"), (-col("trips")).as("trips")))
     val newDirty = Pyramid.mergePartials(
@@ -230,12 +226,14 @@ object Incremental {
     val version = store.commit(fromId, toId,
       relations = Map("user_cursors" -> (userCursors, None)),
       partial = Map(
-        "user_pixels" -> TileStore.Partial(pbOf(merged).repartition(col("pb")), Seq("pb"),
-          dirtyB.map(b => s"pb=$b").toSet),
+        "user_tiles" -> TileStore.Partial(
+          merged.withColumn("pb", TileStore.bucketCol(shiftrightunsigned(col("tkey"), 32),
+            col("tkey").bitwiseAND(lit(Codec.U32Max)))).repartition(col("pb")),
+          Seq("pb"), dirtyB.map(b => s"pb=$b").toSet),
         "global" -> TileStore.Partial(newGlobalDirty.repartition(col("z"), col("pb")),
           Seq("z", "pb"), globalDirtyDirs)),
       dirtyTiles = Some(dirtySet.toSeq.sorted))
-    delta.unpersist()
+    visits.unpersist()
     BatchResult(version, skipped = false)
   }
 
@@ -255,13 +253,14 @@ object Incremental {
     StructField("user_id", LongType, nullable = true),
     StructField("last_id", LongType, nullable = true)))
 
-  val userPixelsSchema: StructType = StructType(Seq(
-    StructField("user_id", LongType, nullable = true),
-    StructField("gx", LongType, nullable = true),
-    StructField("gy", LongType, nullable = true),
-    StructField("trips", LongType, nullable = true)))
+  /** user_tiles: `Schemas.TileVisit` + the tile-bucket partition column. */
+  val userTilesSchemaP: StructType =
+    org.apache.spark.sql.Encoders.product[TileVisit].schema.add("pb", IntegerType)
 
-  val userPixelsSchemaP: StructType = userPixelsSchema.add("pb", IntegerType)
+  /** The older per-pixel user_pixels relation (+ pb). `Incremental` neither
+    * writes nor reads it; only the benchmark's store counters do. */
+  val userPixelsSchemaP: StructType =
+    StructType.fromDDL("user_id BIGINT, gx BIGINT, gy BIGINT, trips BIGINT, pb INT")
 
   private def emptyGlobal(implicit spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], globalSchema)

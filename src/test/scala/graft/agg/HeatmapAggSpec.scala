@@ -151,7 +151,7 @@ class HeatmapAggSpec extends AnyFunSuite {
     import s.implicits._
     val up = HeatmapAgg.userGrain(raster.map(v =>
       graft.model.Schemas.UserPixel(v.user_id, v.pkey >>> 32, v.pkey & 0xFFFFFFFFL, v.trips)))
-    val cascade = HeatmapAgg.globalGrain(up).collect()
+    val cascade = AggOracle.globalGrain(up).collect()
       .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
     val fused = HeatmapAgg.globalGrainFused(raster).collect()
       .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap

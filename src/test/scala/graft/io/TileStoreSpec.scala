@@ -48,4 +48,18 @@ class TileStoreSpec extends AnyFunSuite {
       assert(!Files.exists(v3.resolve("z=14/pb=0")), "clean dir carried past the guard")
     } finally graft.stream.StreamDedup.deleteTree(root.toString)
   }
+
+  test("commit: written_dirs counts the leaf dirs actually written, not the declared ones") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("tile-store-commit")
+    try {
+      val store = new TileStore(root.toString)
+      // three declared dirty dirs, rows for two of them
+      store.commit(-1L, 0L, relations = Map.empty, partial = Map("rel" -> TileStore.Partial(
+        Seq((1L, 0), (2L, 1)).toDF("id", "pb"), Seq("pb"), Set("pb=0", "pb=1", "pb=2"))))
+      val record = Files.readAllLines(root.resolve("commits.jsonl")).get(0)
+      assert(record.contains(""""written_dirs": 2"""), record)
+      assert(record.contains(""""carried_dirs": 0"""), record)
+    } finally graft.stream.StreamDedup.deleteTree(root.toString)
+  }
 }

@@ -186,9 +186,9 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     implicit val s: SparkSession = spark
     import s.implicits._
     val up = result.userPixels
-    val k3 = HeatmapAgg.globalGrain(up, 3).count()
-    val k5 = HeatmapAgg.globalGrain(up, 5).count()
-    val k1 = HeatmapAgg.globalGrain(up, 1).count()
+    val k3 = graft.agg.AggOracle.globalGrain(up, 3).count()
+    val k5 = graft.agg.AggOracle.globalGrain(up, 5).count()
+    val k1 = graft.agg.AggOracle.globalGrain(up, 1).count()
     assert(k5 <= k3 && k3 <= k1)
     assert(k1 === oracleUsers.values.flatMap(_.keys).toSet.size)
   }

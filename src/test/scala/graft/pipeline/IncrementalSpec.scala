@@ -75,7 +75,7 @@ class IncrementalSpec extends AnyFunSuite {
     val last = commits.get(2)
     assert(last.contains(s""""to_id": ${N - 1}"""))
     Seq(first, last).foreach { line =>
-      assert(line.contains(""""user_pixels""""))
+      assert(line.contains(""""user_tiles""""))
       assert(line.contains(""""partition_rows""""))
       assert(line.contains(""""bytes""""))
     }
@@ -116,7 +116,7 @@ class IncrementalSpec extends AnyFunSuite {
     // assertion is meaningful (at k=3 the 6-user synthetic corpus survives
     // only ~60 pixels and the ancestor-chain floor dominates)
     assert(!Incremental.processBatch(store, testTracks, -1L, 79L, k = 1).skipped)
-    val upTotal = store.read("user_pixels", Some(Incremental.userPixelsSchemaP)).get.count()
+    val utTotal = store.read("user_tiles", Some(Incremental.userTilesSchemaP)).get.count()
     val gTotal = store.read("global", Some(Incremental.globalSchemaP)).get.count()
     // batch B: ONE short track confined to a single z14 tile
     val confined = s.createDataset(Seq(graft.model.Schemas.Track(999L, 1L,
@@ -136,11 +136,11 @@ class IncrementalSpec extends AnyFunSuite {
       re.findFirstMatchIn(last).map(_.group(1).toLong)
         .getOrElse(fail(s"no $rel.$key in $last"))
     }
-    assert(metric("user_pixels", "rows") < upTotal / 4,
-      s"user_pixels write not dirty-bounded: wrote ${metric("user_pixels", "rows")} of $upTotal")
+    assert(metric("user_tiles", "rows") < utTotal / 4,
+      s"user_tiles write not dirty-bounded: wrote ${metric("user_tiles", "rows")} of $utTotal")
     assert(metric("global", "rows") < gTotal / 4,
       s"global write not dirty-bounded: wrote ${metric("global", "rows")} of $gTotal")
-    assert(metric("user_pixels", "carried_dirs") > 0)
+    assert(metric("user_tiles", "carried_dirs") > 0)
     assert(metric("global", "carried_dirs") > 0)
     assert(last.contains(""""dirty_tiles": [["""))
 
@@ -210,8 +210,8 @@ class IncrementalSpec extends AnyFunSuite {
       .select("z", "gx", "gy", "users", "trips")
     assert(g.count() === g.select("z", "gx", "gy").distinct().count(),
       "duplicate (z, gx, gy) rows in the committed global relation")
-    val up = store.read("user_pixels", Some(Incremental.userPixelsSchemaP)).get
-    assert(up.count() === up.select("user_id", "gx", "gy").distinct().count())
+    val ut = store.read("user_tiles", Some(Incremental.userTilesSchemaP)).get
+    assert(ut.count() === ut.select("user_id", "tkey").distinct().count())
 
     // and the store equals the one-shot pipeline as a MULTISET (row count
     // equality catches duplicates that Map-based comparison collapses)
@@ -249,32 +249,18 @@ class IncrementalSpec extends AnyFunSuite {
   test("F8 pre-check: sub-k tiles are excluded before the pixel-grain rebuild; k-boundary survives") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    // tile A: 3 distinct users (== k, must survive); tile B: 2 users (< k,
-    // must be pre-filtered); tile C: 1 user
-    val rows = Seq(
-      (1L, 100L, 100L, 1L), (2L, 100L, 101L, 1L), (3L, 101L, 100L, 1L), // tile (0,0)
-      (1L, 600L, 600L, 1L), (2L, 601L, 601L, 1L), // tile (1,1)
-      (9L, 1100L, 1100L, 5L)) // tile (2,2)
-      .toDF("user_id", "gx", "gy", "trips")
-      .withColumn("tx", org.apache.spark.sql.functions.floor($"gx" / Incremental.Res))
-      .withColumn("ty", org.apache.spark.sql.functions.floor($"gy" / Incremental.Res))
-    val eligible = Incremental.eligibleTiles(rows, k = 3)
-      .as[(Long, Long)].collect().toSet
-    assert(eligible === Set((0L, 0L)), s"pre-check returned $eligible")
-
-    // end-to-end through the WIRED path: the pre-check gates on the
-    // trickle regime (dirty fraction ≤ cutover AND k > 1), so drive a
-    // confined batch at k=3 over a prior commit — one tile with 3 users
-    // (== k, must survive the pre-check), one with 1 (filtered) — and the
-    // committed store must still equal the one-shot pipeline
+    // F8 is the tile kernel's users >= k HAVING (a pixel's user set ⊆ its
+    // tile's): drive a confined batch at k=3 over a prior commit — one tile
+    // with 3 users (== k, must survive), one with 1 (keeps no pixel) — and
+    // the committed store must still equal the one-shot pipeline
     val d = Files.createTempDirectory("tilestore-f8").toString
     val store = new TileStore(d)
     assert(!Incremental.processBatch(store, testTracks, -1L, 79L).skipped) // k=3 default
     def at(lon: Double, lat: Double) = Array(Array(lon, lat), Array(lon + 5e-4, lat + 4e-4))
     val confined = s.createDataset(Seq(
       Track(990L, 101L, at(4.4000, 51.0000)), Track(991L, 102L, at(4.4001, 51.0001)),
-      Track(992L, 103L, at(4.4002, 51.0002)), // 3 users, one z14 tile → eligible
-      Track(993L, 901L, at(4.6200, 51.2200)))) // 1 user elsewhere → pre-filtered
+      Track(992L, 103L, at(4.4002, 51.0002)), // 3 users, one z14 tile → kept
+      Track(993L, 901L, at(4.6200, 51.2200)))) // 1 user elsewhere → no pixel
     assert(!Incremental.processMicroBatch(store, confined, 990L).skipped)
     val got = store.read("global", Some(Incremental.globalSchema)).get
       .select("z", "gx", "gy", "users", "trips").collect()
@@ -283,6 +269,60 @@ class IncrementalSpec extends AnyFunSuite {
       testTracks.where($"contribution_id" <= 79L).unionByName(confined)).pyramid.collect()
       .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
     assert(want.nonEmpty && got === want)
+  }
+
+  test("mergeRuns: sorted, pixel-unique union of two runs with the u32 saturating add (A3)") {
+    import graft.core.Codec.U32Max
+    def run(ps: (Long, Long)*): Array[Long] = ps.map { case (p, t) => (p << 32) | t }.toArray
+    def pairs(a: Array[Long]): Seq[(Long, Long)] = a.toSeq.map(e => (e >>> 32, e & U32Max))
+    def merge(a: Array[Long], b: Array[Long]) = pairs(Incremental.mergeRuns(a, b))
+    assert(merge(run((1, 2), (5, 1)), run((3, 4), (9, 1))) === Seq((1, 2), (3, 4), (5, 1), (9, 1)))
+    assert(merge(run((1, 2), (3, 1), (7, 5)), run((3, 4), (7, 1), (8, 2))) ===
+      Seq((1, 2), (3, 5), (7, 6), (8, 2)))
+    // a sum landing exactly on u32 max, and sums past it, read u32 max
+    assert(merge(run((4, U32Max - 3)), run((4, 3))) === Seq((4, U32Max)))
+    assert(merge(run((4, U32Max - 3), (6, 1)), run((4, 4), (6, U32Max))) === Seq((4, U32Max), (6, U32Max)))
+    // one side empty
+    assert(merge(Array.empty, run((2, 1), (3, 7))) === Seq((2, 1), (3, 7)))
+    assert(merge(run((2, 1)), Array.empty) === Seq((2, 1)))
+    assert(merge(Array.empty, Array.empty).isEmpty)
+    // randomized against a map oracle: output sorted and pixel-unique
+    val rnd = new java.util.Random(7)
+    (0 until 200).foreach { _ =>
+      def gen(): Array[Long] = run((0 until rnd.nextInt(30)).map { _ =>
+        (rnd.nextInt(64).toLong, if (rnd.nextInt(4) == 0) U32Max - rnd.nextInt(3) else 1L + rnd.nextInt(9))
+      }.toMap.toSeq.sorted: _*)
+      val (a, b) = (gen(), gen())
+      val got = merge(a, b)
+      assert(got.map(_._1) === got.map(_._1).distinct.sorted)
+      assert(got.toMap === (pairs(a) ++ pairs(b)).groupMapReduce(_._1)(_._2)((x, y) => math.min(x + y, U32Max)))
+    }
+  }
+
+  test("a store whose HEAD has user_pixels but no user_tiles is refused and left untouched") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("tilestore-old-layout")
+    val d = root.toString
+    val store = new TileStore(d)
+    val pb = TileStore.bucketOf(0, 0)
+    store.commit(-1L, 39L, relations = Map.empty, partial = Map("user_pixels" -> TileStore.Partial(
+      Seq((1L, 100L, 100L, 2L, pb)).toDF("user_id", "gx", "gy", "trips", "pb"), Seq("pb"), Set(s"pb=$pb"))))
+    assert(store.currentVersion === 1)
+    def tree(): Map[String, Seq[Byte]] = {
+      val walk = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.map(p => root.relativize(p).toString ->
+          (if (Files.isRegularFile(p)) Files.readAllBytes(p).toSeq else Seq.empty[Byte])).toMap
+      } finally walk.close()
+    }
+    val before = tree()
+    val e = intercept[IllegalStateException](Incremental.processBatch(store, testTracks, 39L, 79L))
+    assert(e.getMessage.contains("user_pixels") && e.getMessage.contains(d), e.getMessage)
+    assert(store.currentVersion === 1)
+    assert(before("HEAD") === tree()("HEAD") && before("commits.jsonl") === tree()("commits.jsonl"))
+    assert(tree() === before)
   }
 
   test("time travel: readAt(v) returns each committed version's exact state; dangling/future versions unreadable") {
@@ -456,10 +496,10 @@ class IncrementalSpec extends AnyFunSuite {
         .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
       assert(g.count() === want.size.toLong, s"k=$k scenario $scenario (cuts=$cuts): row count")
       assert(got === want, s"k=$k scenario $scenario (cuts=$cuts): values diverge")
-      // user_pixels must also stay duplicate-free across the carries
-      val up = store.read("user_pixels", Some(Incremental.userPixelsSchemaP)).get
-      assert(up.count() === up.select("user_id", "gx", "gy").distinct().count(),
-        s"k=$k scenario $scenario: duplicate user_pixels keys")
+      // user_tiles must also stay duplicate-free across the carries
+      val ut = store.read("user_tiles", Some(Incremental.userTilesSchemaP)).get
+      assert(ut.count() === ut.select("user_id", "tkey").distinct().count(),
+        s"k=$k scenario $scenario: duplicate user_tiles keys")
     }
   }
 
