@@ -100,8 +100,9 @@ object ServiceMain {
    * Incremental MVT export of the committed state: re-encode ONLY the tiles
    * dirtied by commits since the last export (plus ancestors), rewrite
    * exactly those `{z}/{x}/{y}.mvt` files — byte-identical to what a full
-   * re-export would write for them (`encodeTiles` groups per tile, so the
-   * subset encodes independently). First export (no EXPORTED marker) is a
+   * re-export would write for them (`MvtJobs.encodeLowerFused`, the
+   * flagship's group-per-tile encoder, encodes each tile from its own rows,
+   * so the subset encodes independently). First export (no EXPORTED marker) is a
    * full export. The marker moves only AFTER the files land: a crash
    * mid-export re-exports the same tiles idempotently.
    */
@@ -136,7 +137,7 @@ object ServiceMain {
             .drop("tx", "ty")
         }
       import spark.implicits._
-      val tiles = graft.mvt.MvtJobs.encodeTiles(
+      val tiles = graft.mvt.MvtJobs.encodeLowerFused(
         subset.select("z", "gx", "gy", "users", "trips").as[GlobalPixel])
       if (since == 0) {
         // full export — the O(world) write. Persist the encoded blobs (the

@@ -3,12 +3,11 @@ package graft.agg
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.Schemas.{GlobalPixel, UserPixel}
+import graft.model.Schemas.GlobalPixel
 
 /**
- * Heatmap aggregation: per-user pixel accumulation and the global
- * k-anonymity layer — the reference's per-pixel merge + global tile rebuild
- * (`/root/reference/src/HeatMap.Tiles/Diffs/HeatMapExtensions.cs:49-131`,
+ * Heatmap aggregation: the global k-anonymity layer — the reference's global
+ * tile rebuild (`/root/reference/src/HeatMap.Tiles/Diffs/HeatMapExtensions.cs:49-131`,
  * `Worker.cs:167-222`): exact distinct users + trip sum per z14 pixel,
  * pixels seen by fewer than k users dropped. One form per caller:
  *
@@ -17,9 +16,6 @@ import graft.model.Schemas.{GlobalPixel, UserPixel}
  *                               narrow explode with the k HAVING (A4/A5/F7);
  *                               Incremental runs the same pair over its
  *                               merged (tkey, user) runs of the dirty tiles
- *   tileCellsStriped            its hot-tile guard: (tkey, user stripe) keys
- *   userGrain                   `HeatmapResult.userPixels`: groupBy(user_id,
- *                               gx, gy).sum(trips), u32-clamped (A2/A3)
  *   globalGrainFused            q_hm_from_images and the specs' oracle:
  *                               built-in countDistinct from raw raster rows
  *
@@ -30,16 +26,6 @@ import graft.model.Schemas.{GlobalPixel, UserPixel}
 object HeatmapAgg {
   val KAnonymity = 3 // MIN_USERS — Worker.cs:204-216, Program.cs:34
 
-  /** A2/A3: accumulate each user's pixels (saturating at u32 max as the
-    * reference does on merge — Diffs/HeatMapExtensions.cs:113-117). */
-  def userGrain(pixels: Dataset[UserPixel])(implicit spark: SparkSession): Dataset[UserPixel] = {
-    import spark.implicits._
-    pixels
-      .groupBy($"user_id", $"gx", $"gy")
-      .agg(least(sum($"trips"), lit(graft.core.Codec.U32Max)).as("trips"))
-      .as[UserPixel]
-  }
-
   /** Single-exchange z14 layer from raw raster output (user_id, pkey,
     * trips): Catalyst plans the exact count-distinct as ONE hash exchange
     * on pkey with a map-side partial keyed (pkey, user) — half the shuffle
@@ -47,7 +33,7 @@ object HeatmapAgg {
     * result (proved equal in HeatmapAggSpec). The user-grain saturating
     * clamp (A3) is not applicable on this path: single-batch trip counts
     * cannot approach 2^32 (documented divergence of the fused form;
-    * `userGrain` and Incremental's run merge keep the clamp). */
+    * Incremental's run merge keeps the clamp). */
   def globalGrainFused(rasterPixels: org.apache.spark.sql.Dataset[graft.model.Schemas.PixelVisit],
                        k: Int = KAnonymity)(
       implicit spark: SparkSession): Dataset[GlobalPixel] = {
@@ -82,58 +68,6 @@ object HeatmapAgg {
       .agg(graft.functions.TileUsersFunctions.tileUsers(spark, $"user_id", $"pixels").as("cells"))
       .as[graft.model.Schemas.TileCells]
   }
-
-  /** Hot-tile guard: the STRIPED tile aggregation. `tileCells` concentrates
-    * one buffer per tile on a single reducer — fine for 2^28 z14 tiles in
-    * general, but a planetary urban core with millions of distinct users
-    * makes that one buffer O(distinct (pixel, user) pairs). Striping splits
-    * the key to (tkey, user_id % stripes): each stripe's buffer holds only
-    * its users' pairs (≈ pairs/stripes), and because a user lives in
-    * EXACTLY one stripe, per-pixel distinct-user counts ADD across stripes
-    * — the merge is an exact sum, not an approximation (equality proven
-    * in HeatmapAggSpec, including a pathological one-tile × 10^5-user case
-    * with buffer telemetry).
-    * Cost: one extra (small) exchange of per-stripe cell arrays. */
-  def tileCellsStriped(tiles: org.apache.spark.sql.Dataset[graft.model.Schemas.TileVisit],
-                       stripes: Int)(
-      implicit spark: SparkSession): Dataset[graft.model.Schemas.TileCells] = {
-    import spark.implicits._
-    if (stripes <= 1) return tileCells(tiles)
-    val perStripe = tiles.toDF()
-      .withColumn("stripe", pmod($"user_id", lit(stripes)))
-      .groupBy($"tkey", $"stripe")
-      .agg(graft.functions.TileUsersFunctions.tileUsers(spark, $"user_id", $"pixels").as("cells"))
-      .select($"tkey", $"cells")
-      .as[(Long, Array[graft.model.Schemas.Cell])]
-    perStripe
-      .groupByKey(_._1)
-      .mapGroups { (tkey, it) =>
-        // merge ≤ `stripes` stripe-disjoint cell arrays: users/trips sum per pixel
-        val users = new scala.collection.mutable.LongMap[Long]()
-        val trips = new scala.collection.mutable.LongMap[Long]()
-        it.foreach { case (_, cells) =>
-          cells.foreach { c =>
-            users.update(c.pix.toLong, users.getOrElse(c.pix.toLong, 0L) + c.users)
-            trips.update(c.pix.toLong, trips.getOrElse(c.pix.toLong, 0L) + c.trips)
-          }
-        }
-        val out = new Array[graft.model.Schemas.Cell](users.size)
-        var i = 0
-        users.foreach { case (pix, u) =>
-          out(i) = graft.model.Schemas.Cell(pix.toInt, u, trips(pix)); i += 1
-        }
-        java.util.Arrays.sort(out, Ordering.by((c: graft.model.Schemas.Cell) => c.pix))
-        graft.model.Schemas.TileCells(tkey, out)
-      }
-  }
-
-  /** Size-triggered stripe selection: bound any single tile buffer to
-    * roughly `maxUsersPerStripe` distinct users in the worst (all users on
-    * one tile) case. 1 stripe — the plain single-exchange plan — until the
-    * corpus is big enough to need splitting; capped so the stripe exchange
-    * itself stays small. */
-  def stripesFor(distinctUsers: Long, maxUsersPerStripe: Long = 200000L): Int =
-    math.min(64L, math.max(1L, (distinctUsers + maxUsersPerStripe - 1) / maxUsersPerStripe)).toInt
 
   /** Narrow explode of aggregated tiles into the pixel relation, with the
     * k-anonymity HAVING (no shuffle — cells are already exact). */

@@ -50,8 +50,8 @@ object MvtCodec {
 
   /** Encode with the LINEAR placement (pixel top-left quantized straight to
     * the extent grid: px·extent/res). Kept as the documented fast path; the
-    * reference-faithful Mercator placement is `MvtJobs.encodeTiles`'
-    * default via WebMercator.extentCoords. */
+    * reference-faithful Mercator placement is `MvtJobs`' via
+    * WebMercator.extentCoords. */
   def encodeTile(features: Iterable[PixelFeature], resolution: Int,
                  layerName: String = "heatmap"): Array[Byte] = {
     val scale = Extent / resolution // 8 for the service's 512-px tiles

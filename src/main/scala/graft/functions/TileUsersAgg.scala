@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
  * pixel-row shuffle bottleneck.
  *
  * The pixel-grain plans (`HeatmapAgg.globalGrainFused`, the specs'
- * user-grain oracle) exchange one row per distinct (pixel[, user]) per map
+ * `AggOracle` cascade) exchange one row per distinct (pixel[, user]) per map
  * partition; at sf0.1 that is ~23.5M rows because tracks land randomly, so map-side combine
  * barely collapses anything. Grouping by TILE instead (≈740 keys) exchanges one
  * partial buffer per (map partition × tile) — hundreds of rows, each a
@@ -83,9 +83,6 @@ final class TileBuffer {
   }
 
   private def growPair(): Unit = {
-    // high-water telemetry on the amortized growth path (powers of two, so
-    // the recorded peak is within 2× of the true max — zero per-add cost)
-    TileBuffer.PeakPairs.getAndAccumulate(nPair.toLong, Math.max(_, _))
     val op = pairPix; val ou = pairUser
     pairPix = new Array[Int](op.length * 2)
     pairUser = new Array[Long](op.length * 2)
@@ -182,13 +179,6 @@ final class TileBuffer {
 }
 
 object TileBuffer {
-  /** Diagnostic high-water mark of distinct (pix, user) pairs seen by any
-    * single buffer in this JVM (updated on buffer growth; in local mode —
-    * tests — executors share the JVM, so this observes the whole job). The
-    * HeatmapAggSpec hot-tile case asserts striping bounds it. */
-  val PeakPairs = new java.util.concurrent.atomic.AtomicLong(0L)
-  def resetPeak(): Unit = PeakPairs.set(0L)
-
   def deserialize(bytes: Array[Byte]): TileBuffer = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val buf = new TileBuffer()

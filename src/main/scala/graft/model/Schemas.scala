@@ -27,9 +27,6 @@ object Schemas {
       user_id: Long,
       coords: Array[Array[Double]])
 
-  /** Per-user accumulated pixel at one zoom (global pixel coords). */
-  final case class UserPixel(user_id: Long, gx: Long, gy: Long, trips: Long)
-
   /** Raw rasterizer emission: pkey = gx << 32 | gy. Primitive fields —
     * no per-row boxing in the hot flatMap. */
   final case class PixelVisit(user_id: Long, pkey: Long, trips: Long)

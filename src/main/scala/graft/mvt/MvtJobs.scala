@@ -7,14 +7,26 @@ import graft.core.MvtCodec
 import graft.model.Schemas.{GlobalPixel, MvtTile}
 
 /**
- * MVT export: global pixel relation → one .mvt blob per (z, tx, ty) tile.
+ * MVT export: pixel relation → one .mvt blob per (z, tx, ty) tile.
  *
  * Re-expresses `/root/reference/src/HeatMap.Tiles/IO/VectorTiles/
  * HeatMapExtensions.cs:22-81` + `Worker.cs:257-279`: features are the
- * non-zero pixels with users > 0 (F6); empty tiles are dropped (no rows →
- * no group → no tile). groupBy tile key shuffles pixel rows once; a tile
- * holds at most res² = 262,144 pixels so no group can exceed a few MB —
- * safely within executor memory at any data scale.
+ * non-zero pixels with users > 0 (F6); empty tiles are dropped. Two
+ * encoders, one per input shape: z14 tiles encode NARROW from the tile
+ * relation (`encodeZ14FromTileCells`/`encodeZ14Flat`), and every other
+ * pixel relation goes through the one group-per-tile encoder
+ * (`encodeLowerFused`). A tile holds at most res² = 262,144 pixels so no
+ * group can exceed a few MB — safely within executor memory at any data
+ * scale.
+ *
+ * Placement reproduces the REFERENCE STACK's formulas: linear pixel →
+ * lon/lat (TileGeometryTransform.TransformTo), then the external Mapbox
+ * writer's true-Mercator quantization onto the extent grid
+ * (WebMercator.extentCoords). Caveat: the external NTS writer's exact
+ * float-op ORDER is not verifiable in this sandbox (no captured NTS
+ * output), so placement may differ by ±1 extent unit (≈0.1 % of a pixel)
+ * where a coordinate lands within 1 ulp of an integer boundary — see
+ * WebMercator.TilePlacer.
  */
 object MvtJobs {
   val Resolution = graft.raster.Rasterize.Resolution
@@ -43,16 +55,16 @@ object MvtJobs {
   /** z14 MVTs straight from the aggregated tile relation — NARROW: a tile
     * row already holds its cells sorted by pix (x-major, the reference's
     * block-walk order), so no exchange is needed at all. Byte-identical to
-    * routing the same pixels through `encodeTiles` (HeatmapPipelineSpec). */
+    * routing the same pixels through `encodeLowerFused`
+    * (HeatmapPipelineSpec). */
   def encodeZ14FromTileCells(tc: Dataset[graft.model.Schemas.TileCells], k: Int,
-                             resolution: Int = Resolution, mercator: Boolean = true)(
+                             resolution: Int = Resolution)(
       implicit spark: SparkSession): Dataset[MvtTile] = {
     import spark.implicits._
     val res = resolution
-    val useMercator = mercator
     tc.flatMap { t =>
       encodeOneZ14(t.tkey, t.cells.length, i => t.cells(i).pix,
-        i => t.cells(i).users, i => t.cells(i).trips, k, res, useMercator)
+        i => t.cells(i).users, i => t.cells(i).trips, k, res)
     }
   }
 
@@ -63,13 +75,12 @@ object MvtJobs {
     * per-cell `Cell` allocation was the GC-heavy half of the round-3
     * q_hm_mvt_tiles driver anomaly). */
   def encodeZ14Flat(flat: Dataset[(Long, Array[Int], Array[Long], Array[Long])], k: Int,
-                    resolution: Int = Resolution, mercator: Boolean = true)(
+                    resolution: Int = Resolution)(
       implicit spark: SparkSession): Dataset[MvtTile] = {
     import spark.implicits._
     val res = resolution
-    val useMercator = mercator
     flat.flatMap { case (tkey, pix, users, trips) =>
-      encodeOneZ14(tkey, pix.length, pix(_), users(_), trips(_), k, res, useMercator)
+      encodeOneZ14(tkey, pix.length, pix(_), users(_), trips(_), k, res)
     }
   }
 
@@ -80,13 +91,11 @@ object MvtJobs {
     * q_hm_mvt_tiles oracle dump (same kernel, different execution path). */
   private[graft] def encodeOneZ14(tkey: Long, n: Int, pix: Int => Int,
                            users: Int => Long, trips: Int => Long,
-                           k: Int, res: Int, useMercator: Boolean): Iterator[MvtTile] = {
+                           k: Int, res: Int): Iterator[MvtTile] = {
     val tx = tkey >>> 32
     val ty = tkey & 0xFFFFFFFFL
     val zoom = graft.raster.Rasterize.Zoom
-    val scale = MvtCodec.Extent / res
-    val placer = if (useMercator)
-      graft.core.WebMercator.placer(zoom, tx, ty, res, MvtCodec.Extent) else null
+    val placer = graft.core.WebMercator.placer(zoom, tx, ty, res, MvtCodec.Extent)
     val ex = new Array[Long](n); val ey = new Array[Long](n)
     val fu = new Array[Long](n); val ft = new Array[Long](n)
     var m = 0
@@ -95,8 +104,7 @@ object MvtJobs {
       val u = users(i)
       if (u >= k) {
         val p = pix(i)
-        if (useMercator) { ex(m) = placer.ex(p / res); ey(m) = placer.ey(p % res) }
-        else { ex(m) = (p / res).toLong * scale; ey(m) = (p % res).toLong * scale }
+        ex(m) = placer.ex(p / res); ey(m) = placer.ey(p % res)
         fu(m) = u; ft(m) = trips(i)
         m += 1
       }
@@ -106,67 +114,24 @@ object MvtJobs {
     else Iterator.single(MvtTile(zoom, tx, ty, MvtCodec.encodeTilePoints(m, ex, ey, fu, ft)))
   }
 
-  /** Encode tiles. `mercator = true` (default) reproduces the REFERENCE
-    * STACK's placement formulas: linear pixel → lon/lat
-    * (TileGeometryTransform.TransformTo), then the external Mapbox writer's
-    * true-Mercator quantization onto the extent grid
-    * (WebMercator.extentCoords). Caveat: the external NTS writer's exact
-    * float-op ORDER is not verifiable in this sandbox (no captured NTS
-    * output), so placement may differ by ±1 extent unit (≈0.1 % of a pixel)
-    * where a coordinate lands within 1 ulp of an integer boundary — see
-    * WebMercator.TilePlacer. `mercator = false` is the direct linear
-    * quantization (px·extent/res) — sub-pixel-different in y only
-    * (MvtCodecSpec quantifies the divergence). */
-  def encodeTiles(pixels: Dataset[GlobalPixel], resolution: Int = Resolution,
-                  mercator: Boolean = true)(
-      implicit spark: SparkSession): Dataset[MvtTile] = {
-    import spark.implicits._
-    val res = resolution
-    val useMercator = mercator
-    pixels
-      .where($"users" > 0)
-      .withColumn("tx", $"gx" / res cast "long")
-      .withColumn("ty", $"gy" / res cast "long")
-      .withColumn("px", ($"gx" % res).cast("int"))
-      .withColumn("py", ($"gy" % res).cast("int"))
-      .select($"z", $"tx", $"ty", $"px", $"py", $"users", $"trips")
-      .as[(Int, Long, Long, Int, Int, Long, Long)]
-      .groupByKey(r => (r._1, r._2, r._3))
-      .mapGroups { (key: (Int, Long, Long), rows: Iterator[(Int, Long, Long, Int, Int, Long, Long)]) =>
-        val (z, tx, ty) = key
-        var pos = new Array[Long](256)
-        var us = new Array[Long](256)
-        var tr = new Array[Long](256)
-        var n = 0
-        rows.foreach { case (_, _, _, px, py, users, trips) =>
-          if (n == pos.length) {
-            pos = java.util.Arrays.copyOf(pos, n << 1)
-            us = java.util.Arrays.copyOf(us, n << 1)
-            tr = java.util.Arrays.copyOf(tr, n << 1)
-          }
-          pos(n) = px.toLong * res + py; us(n) = users; tr(n) = trips
-          n += 1
-        }
-        encodeOneTile(z, tx, ty, n, pos, us, tr, res, useMercator)
-      }
-  }
-
-  /** Lower-level MVT export in ONE shuffle, straight from tile-local
-    * pyramid PARTIALS (`Pyramid.lowerPartialsFlat`): the per-pixel merge
-    * that `lowerLevelsFromTiles`' groupBy used to do in its own exchange
-    * happens inside the per-tile group instead — partials for a tile land
-    * on one reducer anyway, so the extra pixel-grain exchange bought
-    * nothing. Byte-identical to
-    * `encodeTiles(lowerLevelsFromTiles(tc))` (HeatmapPipelineSpec). */
+  /** The group-per-tile encoder: ONE exchange keyed by (z, tx, ty), then
+    * each tile's rows are summed per position and encoded. Takes merged
+    * pixels (the service's `global` relation, one row per position) or
+    * unmerged partials (`Pyramid.lowerPartials`/`lowerPartialsFlat`: the
+    * sibling-partial merge that a separate pixel-grain groupBy would do in
+    * its own exchange happens inside the tile group instead — partials for
+    * a tile land on one reducer anyway). F6: a position whose summed users
+    * are not > 0 writes no feature, and a tile left with no feature writes
+    * no blob. Partials of `lowerPartialsFlat` encode byte-identical to
+    * the merged `lowerLevelsFromTiles` rows (HeatmapPipelineSpec). */
   def encodeLowerFused(partials: Dataset[GlobalPixel],
-                       resolution: Int = Resolution, mercator: Boolean = true)(
+                       resolution: Int = Resolution)(
       implicit spark: SparkSession): Dataset[MvtTile] = {
     import spark.implicits._
     val res = resolution
-    val useMercator = mercator
     partials
       .groupByKey(p => (p.z, p.gx / res, p.gy / res))
-      .mapGroups { (key: (Int, Long, Long), rows: Iterator[GlobalPixel]) =>
+      .flatMapGroups { (key: (Int, Long, Long), rows: Iterator[GlobalPixel]) =>
         val (z, tx, ty) = key
         val users = new scala.collection.mutable.LongMap[Long](1024)
         val trips = new scala.collection.mutable.LongMap[Long](1024)
@@ -175,15 +140,15 @@ object MvtJobs {
           users.update(pos, users.getOrElse(pos, 0L) + p.users)
           trips.update(pos, trips.getOrElse(pos, 0L) + p.trips)
         }
-        val n = users.size
-        val pos = new Array[Long](n)
-        var i = 0
-        users.foreachKey { k => pos(i) = k; i += 1 }
-        java.util.Arrays.sort(pos)
+        val pos = new Array[Long](users.size)
+        var n = 0
+        users.foreachEntry { (k, u) => if (u > 0) { pos(n) = k; n += 1 } }
+        java.util.Arrays.sort(pos, 0, n)
         val us = new Array[Long](n); val tr = new Array[Long](n)
-        i = 0
+        var i = 0
         while (i < n) { us(i) = users(pos(i)); tr(i) = trips(pos(i)); i += 1 }
-        encodeOneTile(z, tx, ty, n, pos, us, tr, res, useMercator)
+        if (n == 0) Iterator.empty
+        else Iterator.single(encodeOneTile(z, tx, ty, n, pos, us, tr, res))
       }
   }
 
@@ -192,16 +157,14 @@ object MvtJobs {
     * HeatMapTile.cs:94-112), place, stream-encode. */
   private[graft] def encodeOneTile(z: Int, tx: Long, ty: Long, n: Int,
                             pos: Array[Long], us: Array[Long], tr: Array[Long],
-                            res: Int, useMercator: Boolean): MvtTile = {
+                            res: Int): MvtTile = {
     // sort the three parallel arrays by pos: pack pos (≤ res² < 2^24 bits)
     // with the source index, sort the packed keys, then gather
     val packed = new Array[Long](n)
     var i = 0
     while (i < n) { packed(i) = (pos(i) << 32) | i.toLong; i += 1 }
     java.util.Arrays.sort(packed)
-    val scale = MvtCodec.Extent / res
-    val placer = if (useMercator)
-      graft.core.WebMercator.placer(z, tx, ty, res, MvtCodec.Extent) else null
+    val placer = graft.core.WebMercator.placer(z, tx, ty, res, MvtCodec.Extent)
     val ex = new Array[Long](n); val ey = new Array[Long](n)
     val fu = new Array[Long](n); val ft = new Array[Long](n)
     i = 0
@@ -209,8 +172,7 @@ object MvtJobs {
       val p = packed(i) >>> 32
       val src = (packed(i) & 0xFFFFFFFFL).toInt
       val px = (p / res).toInt; val py = (p % res).toInt
-      if (useMercator) { ex(i) = placer.ex(px); ey(i) = placer.ey(py) }
-      else { ex(i) = px.toLong * scale; ey(i) = py.toLong * scale }
+      ex(i) = placer.ex(px); ey(i) = placer.ey(py)
       fu(i) = us(src); ft(i) = tr(src)
       i += 1
     }

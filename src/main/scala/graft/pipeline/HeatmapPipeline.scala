@@ -16,6 +16,9 @@ import graft.synth.{ImageSynth, TraceSynth}
  *   → z14 k-anon layer (narrow explode) + z13..z0 partials (tile-local)
  *   → MVT blobs (`mvtAll`: z14 narrow, ONE exchange for the lower levels)
  *
+ * One form per stage: `run` returns the z14 layer, the full z14..z0 pyramid
+ * and the cached tile relation they both derive from. Per-user pixel state
+ * is the service's (`Incremental`'s `user_tiles`), not a side output here.
  * Deterministic at any scale; parallelism-independent results.
  */
 object HeatmapPipeline {
@@ -64,19 +67,16 @@ object HeatmapPipeline {
   }
 
   final case class HeatmapResult(
-      userPixels: Dataset[UserPixel],
       z14: Dataset[GlobalPixel],
       pyramid: Dataset[GlobalPixel],
-      cached: Option[Dataset[TileCells]] = None,
-      k: Int = HeatmapAgg.KAnonymity,
-      minZoom: Int = 0) {
+      tiles: Dataset[TileCells],
+      k: Int = HeatmapAgg.KAnonymity) {
     /** Release whatever run() persisted (cache-ownership contract: the
       * caller that triggered the pipeline owns the cached intermediate). */
-    def release(): Unit = cached.foreach(_.unpersist())
+    def release(): Unit = tiles.unpersist()
   }
 
-  def run(tracks: Dataset[Track], k: Int = HeatmapAgg.KAnonymity, minZoom: Int = 0,
-          stripes: Int = 1)(
+  def run(tracks: Dataset[Track], k: Int = HeatmapAgg.KAnonymity)(
       implicit spark: SparkSession): HeatmapResult = {
     // the rasterize flatMap is the CPU-dominant narrow stage: spread it over
     // every core even when the source is a single parquet split. An input
@@ -92,54 +92,20 @@ object HeatmapPipeline {
     // (HeatmapAgg.tileCells; equality proven in HeatmapAggSpec). The cached
     // tile relation then feeds BOTH the z14 layer (narrow explode) and the
     // pyramid (tile-local pre-agg, ~cells/3 partial rows through one
-    // groupBy) — no per-pixel ancestor-explode shuffle. `stripes > 1`
-    // engages the hot-tile guard (`tileCellsStriped`) for corpora whose
-    // user cardinality would concentrate an unbounded buffer on one reducer
-    // (see runAuto for the size-triggered selection).
-    val tc =
-      if (stripes > 1) HeatmapAgg.tileCellsStriped(Rasterize.tileVisits(spread), stripes)
-      else HeatmapAgg.tileCells(Rasterize.tileVisits(spread))
+    // groupBy) — no per-pixel ancestor-explode shuffle.
+    val tc = HeatmapAgg.tileCells(Rasterize.tileVisits(spread))
     tc.persist()
     val z14 = HeatmapAgg.cellsToPixels(tc, k)
-    val pyr =
-      if (minZoom >= Rasterize.Zoom) z14
-      else z14.union(Pyramid.lowerLevelsFromTiles(tc, k, minZoom))
-    // user-grain relation exposed for callers that need it (A3 surface);
-    // plan-only until acted on
-    val up = HeatmapAgg.userGrain(Rasterize.userPixels(spread))
-    HeatmapResult(up, z14, pyr, cached = Some(tc), k = k, minZoom = minZoom)
+    HeatmapResult(z14, z14.union(Pyramid.lowerLevelsFromTiles(tc, k)), tc, k)
   }
-
-  /** `run` with SIZE-TRIGGERED hot-tile striping: estimates the distinct
-    * user cardinality with one cheap sketch aggregation (HLL — an exchange
-    * of sketches, not rows) and engages `tileCellsStriped` only when the
-    * worst case (every user on one tile) would blow a single reducer's
-    * buffer. On a production deployment the cardinality usually comes free
-    * from the catalog/cursor table instead — pass it via `knownUsers`. */
-  def runAuto(tracks: Dataset[Track], k: Int = HeatmapAgg.KAnonymity, minZoom: Int = 0,
-              knownUsers: Option[Long] = None)(
-      implicit spark: SparkSession): HeatmapResult = {
-    import org.apache.spark.sql.functions.approx_count_distinct
-    val users = knownUsers.getOrElse(
-      tracks.select(approx_count_distinct("user_id")).head().getLong(0))
-    run(tracks, k, minZoom, stripes = HeatmapAgg.stripesFor(users))
-  }
-
-  def mvt(pyramid: Dataset[GlobalPixel])(implicit spark: SparkSession): Dataset[MvtTile] =
-    MvtJobs.encodeTiles(pyramid)
 
   /** MVT export of the full pyramid, shuffle-lean: z14 tiles encode NARROW
     * from the cached tile relation (their cells are already grouped and
     * sorted); only the lower levels (~25 % of rows) go through the tile
     * exchange — ONE exchange, with the sibling-partial merge fused into
-    * the encode group. Byte-equal to `mvt(pyramid)` (HeatmapPipelineSpec). */
-  def mvtAll(result: HeatmapResult)(implicit spark: SparkSession): Dataset[MvtTile] = {
-    result.cached match {
-      case Some(tc) =>
-        MvtJobs.encodeZ14FromTileCells(tc, result.k)
-          .union(MvtJobs.encodeLowerFused(
-            Pyramid.lowerPartials(tc, result.k, result.minZoom)))
-      case None => mvt(result.pyramid)
-    }
-  }
+    * the encode group. Byte-equal to `encodeLowerFused(pyramid)`
+    * (HeatmapPipelineSpec). */
+  def mvtAll(result: HeatmapResult)(implicit spark: SparkSession): Dataset[MvtTile] =
+    MvtJobs.encodeZ14FromTileCells(result.tiles, result.k)
+      .union(MvtJobs.encodeLowerFused(Pyramid.lowerPartials(result.tiles, result.k)))
 }

@@ -488,7 +488,7 @@ object GraftQueries {
       tiles.foreach { t =>
         out ++= graft.mvt.MvtJobs.encodeOneZ14(t.tkey, t.cells.length,
           i => t.cells(i).pix, i => t.cells(i).users, i => t.cells(i).trips,
-          k, res, useMercator = true)
+          k, res)
       }
       val acc = scala.collection.mutable.HashMap
         .empty[(Int, Long, Long), (scala.collection.mutable.LongMap[Long], scala.collection.mutable.LongMap[Long])]
@@ -507,7 +507,7 @@ object GraftQueries {
         val pos = new Array[Long](n); val u = new Array[Long](n); val t2 = new Array[Long](n)
         var i = 0
         us.foreach { case (p, uu) => pos(i) = p; u(i) = uu; t2(i) = tr(p); i += 1 }
-        out += graft.mvt.MvtJobs.encodeOneTile(z, tx, ty, n, pos, u, t2, res, useMercator = true)
+        out += graft.mvt.MvtJobs.encodeOneTile(z, tx, ty, n, pos, u, t2, res)
       }
       s.createDataset(out.toSeq.map(t => (t.z, t.tx, t.ty, t.mvt)))
         .toDF("z", "tx", "ty", "mvt")
@@ -769,8 +769,7 @@ object GraftQueries {
     // z14 encodes NARROW from the flat cell arrays; the lower levels go
     // through exactly ONE exchange (tile-grain groupByKey) with the
     // sibling-partial merge fused into the encode group. Byte-identical to
-    // the two-exchange encodeTiles(lowerLevelsFromTiles(.)) form
-    // (HeatmapPipelineSpec).
+    // encoding the merged lowerLevelsFromTiles(.) rows (HeatmapPipelineSpec).
     "q_hm_mvt_tiles" -> ((s, d) => {
       implicit val sp: SparkSession = s
       mvtBlobDump(s, d) // oracle: driver-side same-kernel blob recomputation

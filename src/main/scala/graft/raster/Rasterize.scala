@@ -3,17 +3,19 @@ package graft.raster
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.RasterKernel
-import graft.model.Schemas.{PixelVisit, TileVisit, Track, UserPixel}
+import graft.model.Schemas.{PixelVisit, TileVisit, Track}
 
 /**
- * Distributed rasterization: `Dataset[Track]` → `Dataset[UserPixel]`.
+ * Distributed rasterization: `Dataset[Track]` → per-track pixel visits, at
+ * tile grain (`tileVisits`, the flagship's and the service's input) or
+ * pixel grain (`pixelKeys`, the catalog queries' raw raster relation).
  *
  * The typed flatMap is the engine's UDTF surface for the reference's
  * Bresenham draw loop (`/root/reference/src/HeatMap.Tiles/Draw/Bresenhams.cs:8-37`,
  * `Draw/HeatMapDiffExtensions.cs:35-60`). It is a NARROW transformation:
  * each track rasterizes independently and pre-aggregates its own pixel
  * counts (map-side combine inside the kernel), so the only shuffle the
- * heatmap needs afterwards is the per-user / per-pixel groupBy. At 100 TB
+ * heatmap needs afterwards is the per-tile aggregation. At 100 TB
  * this stage scales embarrassingly — no data exchange, CPU-bound, JVM-typed
  * (Encoders), and the output grain is (track × touched-pixel), bounded by
  * track length, never by world size.
@@ -22,20 +24,9 @@ object Rasterize {
   val Zoom = 14
   val Resolution = 512
 
-  def userPixels(tracks: Dataset[Track], zoom: Int = Zoom, resolution: Int = Resolution)(
-      implicit spark: SparkSession): Dataset[UserPixel] = {
-    import spark.implicits._
-    tracks.flatMap { t =>
-      val acc = RasterKernel.rasterize(t.coords, zoom, resolution)
-      acc.iterator.map { case (key, trips) =>
-        UserPixel(t.user_id, RasterKernel.keyGx(key), RasterKernel.keyGy(key), trips)
-      }
-    }
-  }
-
-  /** Shuffle-lean form: (user_id, pkey = gx<<32|gy, trips) — 3 longs per
-    * row through the exchange instead of 4; the pixel key splits back into
-    * coordinates only after aggregation. */
+  /** Pixel-grain form: (user_id, pkey = gx<<32|gy, trips) — 3 longs per
+    * row; the pixel key splits back into coordinates only after
+    * aggregation. */
   def pixelKeys(tracks: Dataset[Track], zoom: Int = Zoom, resolution: Int = Resolution)(
       implicit spark: SparkSession): Dataset[PixelVisit] = {
     import spark.implicits._

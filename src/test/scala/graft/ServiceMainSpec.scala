@@ -155,7 +155,7 @@ class ServiceMainSpec extends AnyFunSuite {
     // the incremental tree equals a full re-export of the same state, byte for byte
     val fullDir = s"$out/mvt_full"
     val g = store.read("global", Some(graft.pipeline.Incremental.globalSchemaP)).get
-    val fullTiles = graft.mvt.MvtJobs.encodeTiles(
+    val fullTiles = graft.mvt.MvtJobs.encodeLowerFused(
       g.select("z", "gx", "gy", "users", "trips").as[graft.model.Schemas.GlobalPixel])
     graft.mvt.MvtJobs.writeMvtFiles(fullTiles, fullDir)
     val full = mvtFiles(fullDir)

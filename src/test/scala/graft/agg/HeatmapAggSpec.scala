@@ -36,48 +36,6 @@ class HeatmapAggSpec extends AnyFunSuite {
     assert(tiled === fused)
   }
 
-  test("hot-tile guard: striped tile agg == unstriped, buffer peak bounded by 1/stripes") {
-    implicit val s: SparkSession = spark
-    import s.implicits._
-    // pathological regime: ONE z14 tile, 50k distinct users, ~24 pixels each
-    // — the single-buffer worst case the guard exists for
-    val users = 50000L
-    val tkey = (8374L << 32) | 5556L
-    val visits = s.range(users).map { u =>
-      val pixels = Array.tabulate(24) { j =>
-        val pix = ((u * 37 + j * 11) % (512L * 512L))
-        (pix << 32) | 1L
-      }
-      graft.model.Schemas.TileVisit(u, tkey, pixels)
-    }.repartition(8)
-    visits.persist()
-
-    graft.functions.TileBuffer.resetPeak()
-    val unstriped = HeatmapAgg.tileCells(visits).collect()
-    val peakUnstriped = graft.functions.TileBuffer.PeakPairs.get()
-
-    graft.functions.TileBuffer.resetPeak()
-    val striped = HeatmapAgg.tileCellsStriped(visits, stripes = 16).collect()
-    val peakStriped = graft.functions.TileBuffer.PeakPairs.get()
-    visits.unpersist()
-
-    // exactness: identical cells (distinct users + trips per pixel)
-    assert(unstriped.length === 1 && striped.length === 1)
-    val uc = unstriped.head.cells.map(c => (c.pix, c.users, c.trips)).toSeq
-    val sc = striped.head.cells.map(c => (c.pix, c.users, c.trips)).toSeq
-    assert(uc.nonEmpty && sc === uc)
-    // the guard's whole point: no single buffer holds the whole tile's
-    // pairs any more (map-side partials make the unstriped peak the FULL
-    // reduce-side union ≈ 1.2M pairs; striped peaks at ≈ pairs/16)
-    assert(peakUnstriped > users * 10, s"unstriped peak $peakUnstriped")
-    assert(peakStriped * 4 < peakUnstriped,
-      s"striping did not bound the buffer: striped=$peakStriped unstriped=$peakUnstriped")
-    // size-trigger heuristic engages striping exactly when needed
-    assert(HeatmapAgg.stripesFor(1000) === 1)
-    assert(HeatmapAgg.stripesFor(1000000) === 5)
-    assert(HeatmapAgg.stripesFor(Long.MaxValue / 2) === 64)
-  }
-
   test("TileBuffer kernel: dedup, merge, zero user id, serialization round-trip") {
     val a = new graft.functions.TileBuffer()
     a.addRow(0L, Array((7L << 32) | 3L, (9L << 32) | 1L)) // user 0: pix 7 (+3), pix 9 (+1)
@@ -149,8 +107,8 @@ class HeatmapAggSpec extends AnyFunSuite {
   test("explicit user-grain cascade == fused plan") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val up = HeatmapAgg.userGrain(raster.map(v =>
-      graft.model.Schemas.UserPixel(v.user_id, v.pkey >>> 32, v.pkey & 0xFFFFFFFFL, v.trips)))
+    val up = AggOracle.userGrain(raster.map(v =>
+      AggOracle.UserPixel(v.user_id, v.pkey >>> 32, v.pkey & 0xFFFFFFFFL, v.trips)))
     val cascade = AggOracle.globalGrain(up).collect()
       .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
     val fused = HeatmapAgg.globalGrainFused(raster).collect()

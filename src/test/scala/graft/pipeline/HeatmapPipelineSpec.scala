@@ -7,6 +7,8 @@ import graft.SpecOracle
 import graft.agg.HeatmapAgg
 import graft.core.MvtCodec
 import graft.model.Schemas._
+import graft.mvt.MvtJobs
+import graft.raster.Rasterize
 import graft.synth.{ImageSynth, TraceSynth}
 
 /**
@@ -35,13 +37,33 @@ class HeatmapPipelineSpec extends AnyFunSuite {
   }
 
   test("user-grain pixels match the oracle exactly") {
-    val got = result.userPixels.collect()
-      .map(p => ((p.user_id, p.gx, p.gy), p.trips)).toMap
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val tracks = s.createDataset(testTracks)
+    // two commits whose (tkey, user) keys overlap, so `mergeRuns` joins the
+    // second window's runs onto the first window's stored ones
+    val half = N / 2
+    def keys(ds: org.apache.spark.sql.Dataset[Track]) =
+      Rasterize.tileVisits(ds).map(v => (v.tkey, v.user_id)).collect().toSet
+    assert((keys(tracks.where($"contribution_id" < half)) &
+      keys(tracks.where($"contribution_id" >= half))).nonEmpty)
+    val store = new graft.io.TileStore(java.nio.file.Files.createTempDirectory("user-tiles").toString)
+    assert(Incremental.runToLatest(store, tracks, latestId = N - 1, maxContributions = half).size === 2)
+    val res = Rasterize.Resolution
+    val got = store.read("user_tiles", Some(Incremental.userTilesSchemaP)).get
+      .select("user_id", "tkey", "pixels").as[(Long, Long, Array[Long])].collect()
+      .flatMap { case (user, tkey, pixels) =>
+        pixels.map { p =>
+          val pix = p >>> 32
+          ((user, (tkey >>> 32) * res + pix / res, (tkey & 0xFFFFFFFFL) * res + pix % res),
+            p & 0xFFFFFFFFL)
+        }
+      }
     val want = oracleUsers.flatMap { case (u, m) =>
       m.map { case ((gx, gy), t) => ((u, gx, gy), t) }
     }
-    assert(got.size === want.size)
-    assert(got === want)
+    assert(got.length === want.size) // one stored entry per (user, pixel)
+    assert(got.toMap === want)
   }
 
   test("z14 global layer matches: users, trips, k-anonymity") {
@@ -74,7 +96,7 @@ class HeatmapPipelineSpec extends AnyFunSuite {
 
   test("MVT blobs decode back to the oracle's pixel payloads") {
     implicit val s: SparkSession = spark
-    val tiles = HeatmapPipeline.mvt(result.z14).collect()
+    val tiles = MvtJobs.encodeLowerFused(result.z14).collect()
     assert(tiles.nonEmpty)
     val res = 512
     tiles.foreach { t =>
@@ -107,7 +129,7 @@ class HeatmapPipelineSpec extends AnyFunSuite {
 
   test("mvtAll (narrow z14 from tile cells) is byte-equal to mvt(pyramid)") {
     implicit val s: SparkSession = spark
-    val viaPyramid = HeatmapPipeline.mvt(result.pyramid).collect()
+    val viaPyramid = MvtJobs.encodeLowerFused(result.pyramid).collect()
       .map(t => ((t.z, t.tx, t.ty), t.mvt.toSeq)).toMap
     val viaTiles = HeatmapPipeline.mvtAll(result).collect()
       .map(t => ((t.z, t.tx, t.ty), t.mvt.toSeq)).toMap
@@ -118,37 +140,11 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("runAuto: known cardinality engages the striped plan, the HLL estimate keeps one stripe; both == run") {
-    implicit val s: SparkSession = spark
-    import s.implicits._
-    import org.apache.spark.sql.catalyst.plans.logical.MapGroups
-    val tracks = s.createDataset(testTracks)
-    // tileCellsStriped merges its stripes in a mapGroups; tileCells has none
-    def striped(r: HeatmapPipeline.HeatmapResult) =
-      r.cached.get.queryExecution.logical.collectFirst { case m: MapGroups => m }.isDefined
-    def rows(r: HeatmapPipeline.HeatmapResult) = r.pyramid.collect().toSet
-    def tiles(r: HeatmapPipeline.HeatmapResult) = HeatmapPipeline.mvtAll(r).collect()
-      .map(t => ((t.z, t.tx, t.ty), t.mvt.toSeq)).toMap
-    val hot = HeatmapPipeline.runAuto(tracks, knownUsers = Some(1000000L))
-    val auto = HeatmapPipeline.runAuto(tracks)
-    try {
-      assert(striped(hot))
-      assert(!striped(auto))
-      val want = rows(result)
-      assert(want.nonEmpty)
-      assert(rows(hot) === want)
-      assert(tiles(hot) === tiles(result))
-      assert(rows(auto) === want)
-    } finally {
-      hot.release(); auto.release()
-    }
-  }
-
   test("flat-array dump path (encodeZ14Flat + encodeLowerFused) is byte-equal to the object path") {
     implicit val s: SparkSession = spark
     import s.implicits._
     import org.apache.spark.sql.functions.col
-    val tc = result.cached.get
+    val tc = result.tiles
     val dir = java.nio.file.Files.createTempDirectory("cells-flat").toString
     tc.toDF().write.mode("overwrite").parquet(dir)
     val flat = s.read.parquet(dir)
@@ -158,12 +154,12 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     val k = result.k
     def bytesOf(ds: org.apache.spark.sql.Dataset[graft.model.Schemas.MvtTile]) =
       ds.collect().map(t => ((t.z, t.tx, t.ty), t.mvt.toSeq)).toMap
-    val z14Obj = bytesOf(graft.mvt.MvtJobs.encodeZ14FromTileCells(tc, k))
-    val z14Flat = bytesOf(graft.mvt.MvtJobs.encodeZ14Flat(flat, k))
+    val z14Obj = bytesOf(MvtJobs.encodeZ14FromTileCells(tc, k))
+    val z14Flat = bytesOf(MvtJobs.encodeZ14Flat(flat, k))
     assert(z14Flat.nonEmpty && z14Flat === z14Obj)
-    val lowerTwoShuffle = bytesOf(graft.mvt.MvtJobs.encodeTiles(
+    val lowerTwoShuffle = bytesOf(MvtJobs.encodeLowerFused(
       graft.agg.Pyramid.lowerLevelsFromTiles(tc, k)))
-    val lowerFusedFlat = bytesOf(graft.mvt.MvtJobs.encodeLowerFused(
+    val lowerFusedFlat = bytesOf(MvtJobs.encodeLowerFused(
       graft.agg.Pyramid.lowerPartialsFlat(flat, k)))
     assert(lowerFusedFlat.nonEmpty && lowerFusedFlat === lowerTwoShuffle)
   }
@@ -171,8 +167,8 @@ class HeatmapPipelineSpec extends AnyFunSuite {
   test("MVT filesystem sink writes the reference's {z}/{x}/{y}.mvt layout") {
     implicit val s: SparkSession = spark
     val out = java.nio.file.Files.createTempDirectory("mvt-sink").toString
-    val tiles = HeatmapPipeline.mvt(result.z14)
-    graft.mvt.MvtJobs.writeMvtFiles(tiles, out)
+    val tiles = MvtJobs.encodeLowerFused(result.z14)
+    MvtJobs.writeMvtFiles(tiles, out)
     val want = tiles.collect()
     assert(want.nonEmpty)
     want.foreach { t =>
@@ -185,11 +181,39 @@ class HeatmapPipelineSpec extends AnyFunSuite {
   test("k-anonymity: raising k strictly shrinks (or keeps) the surviving pixel set") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val up = result.userPixels
-    val k3 = graft.agg.AggOracle.globalGrain(up, 3).count()
-    val k5 = graft.agg.AggOracle.globalGrain(up, 5).count()
-    val k1 = graft.agg.AggOracle.globalGrain(up, 1).count()
+    val tracks = s.createDataset(testTracks)
+    def kept(k: Int): Long = {
+      val r = HeatmapPipeline.run(tracks, k)
+      try r.z14.count() finally r.release()
+    }
+    val k5 = kept(5)
+    val k3 = kept(3)
+    val k1 = kept(1)
     assert(k5 <= k3 && k3 <= k1)
     assert(k1 === oracleUsers.values.flatMap(_.keys).toSet.size)
+  }
+
+  test("F6: encodeLowerFused writes no feature for a position summing to users = 0, no tile for an all-zero tile") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val res = Rasterize.Resolution
+    def px(z: Int, tx: Long, ty: Long, lx: Long, ly: Long, users: Long, trips: Long) =
+      GlobalPixel(z, tx * res + lx, ty * res + ly, users, trips)
+    val live = Seq(
+      px(14, 8374, 5556, 3, 4, 3, 9),
+      px(14, 8374, 5556, 7, 1, 2, 2), px(14, 8374, 5556, 7, 1, 2, 5), // two partials, one feature
+      px(10, 523, 347, 100, 200, 4, 4))
+    val zeroed = Seq(
+      px(14, 8374, 5556, 3, 5, 2, 6), px(14, 8374, 5556, 3, 5, -2, -6), // partials sum to 0
+      px(14, 8374, 5556, 9, 9, 0, 7),                                   // users = 0 row
+      px(13, 4187, 2778, 1, 1, 5, 5), px(13, 4187, 2778, 1, 1, -5, -5), // tile of zeros only
+      px(13, 4187, 2778, 2, 2, 0, 0))
+    def bytesOf(rows: Seq[GlobalPixel]) = MvtJobs.encodeLowerFused(s.createDataset(rows).repartition(3))
+      .collect().map(t => ((t.z, t.tx, t.ty), t.mvt.toSeq)).toMap
+    val got = bytesOf(live ++ zeroed)
+    assert(got.keySet === Set((14, 8374L, 5556L), (10, 523L, 347L)), "an all-zero tile was written")
+    assert(got === bytesOf(live), "a zero-user position changed a tile's bytes")
+    val feats = MvtCodec.decodeTile(got((14, 8374L, 5556L)).toArray)
+    assert(feats.map { case (_, _, u, t) => (u, t) }.toSet === Set((3L, 9L), (4L, 7L)))
   }
 }

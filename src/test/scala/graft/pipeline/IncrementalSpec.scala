@@ -195,11 +195,8 @@ class IncrementalSpec extends AnyFunSuite {
     assert(!Incremental.processBatch(store, testTracks, -1L, 59L, k = 1).skipped)
     assert(!Incremental.processBatch(store, testTracks, 59L, N - 1L, k = 1).skipped)
     def fractionOf(batch: org.apache.spark.sql.Dataset[Track]): Double = {
-      val buckets = graft.raster.Rasterize.userPixels(batch)
-        .select((org.apache.spark.sql.functions.floor($"gx" / Incremental.Res)).as("tx"),
-          (org.apache.spark.sql.functions.floor($"gy" / Incremental.Res)).as("ty"))
-        .distinct().as[(Long, Long)].collect()
-        .map { case (tx, ty) => TileStore.bucketOf(tx, ty) }.distinct.length
+      val buckets = graft.raster.Rasterize.tileVisits(batch).map(_.tkey).distinct().collect()
+        .map(tkey => TileStore.bucketOf(tkey >>> 32, tkey & 0xFFFFFFFFL)).distinct.length
       buckets.toDouble / TileStore.Buckets
     }
     assert(fractionOf(testTracks.where($"contribution_id" > 59L)) > Incremental.FusedCutover,

@@ -130,8 +130,8 @@ class PlanQualitySpec extends AnyFunSuite {
     s.conf.set("spark.sql.adaptive.enabled", "false")
     val result = graft.pipeline.HeatmapPipeline.run(tracks, k = 1)
     try {
-      result.cached.get.count() // materialize the cache boundary
-      val z14Plan = graft.mvt.MvtJobs.encodeZ14FromTileCells(result.cached.get, k = 1)
+      result.tiles.count() // materialize the cache boundary
+      val z14Plan = graft.mvt.MvtJobs.encodeZ14FromTileCells(result.tiles, k = 1)
         .toDF().queryExecution.executedPlan
       assert(liveExchanges(z14Plan) === 0, z14Plan) // narrow over the cache
       val allPlan = graft.pipeline.HeatmapPipeline.mvtAll(result)
