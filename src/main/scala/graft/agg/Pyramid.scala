@@ -18,12 +18,13 @@ import graft.model.Schemas.GlobalPixel
  * trips < 2^32 (documented carry hazard, HeatMapExtensions.cs:209); we sum
  * the unpacked columns, which is the carry-safe form.
  *
- * Two forms of the rollup live here: the tile-local pre-aggregation
- * (`localRollupArrays`, the flagship path) and the per-pixel ancestor
- * explode (`ancestorPartials`); both feed ONE merge groupBy
- * (`mergePartials`) keyed on (z, gx, gy) — pixel-grain keys, no hot single
- * key, partial aggregation does the combine map-side. The iterative 2×2
- * cascade that defines the semantics is PyramidSpec's oracle.
+ * Two partial producers feed ONE merge groupBy (`mergePartials`) keyed on
+ * (z, gx, gy) — pixel-grain keys, no hot single key, partial aggregation
+ * does the combine map-side: the tile-local pre-aggregation of the flat
+ * `TileCells` layout (`localRollup`, the flagship path) and the per-pixel
+ * ancestor explode (`ancestorPartials`, Incremental's signed z14 delta).
+ * The iterative 2×2 cascade that defines the semantics is PyramidSpec's
+ * oracle.
  */
 object Pyramid {
 
@@ -36,19 +37,10 @@ object Pyramid {
     * associative, so the result equals the iterative 2×2 cascade
     * (HeatMapExtensions.cs:148-214) exactly — proved in PyramidSpec /
     * HeatmapPipelineSpec. */
-  def localRollup(tkey: Long, cells: Array[graft.model.Schemas.Cell], k: Int,
-                  minZoom: Int, maxZoom: Int = graft.raster.Rasterize.Zoom,
-                  resolution: Int = graft.raster.Rasterize.Resolution): Iterator[GlobalPixel] =
-    localRollupArrays(tkey, cells.length, i => cells(i).pix, i => cells(i).users,
-      i => cells(i).trips, k, minZoom, maxZoom, resolution)
-
-  /** `localRollup` over indexed accessors (object cells OR flat primitive
-    * arrays — the flat form skips per-cell `Cell` allocation on the
-    * dump-backed read path). */
-  def localRollupArrays(tkey: Long, len: Int, pix: Int => Int,
-                        users: Int => Long, trips: Int => Long, k: Int,
-                        minZoom: Int, maxZoom: Int = graft.raster.Rasterize.Zoom,
-                        resolution: Int = graft.raster.Rasterize.Resolution): Iterator[GlobalPixel] = {
+  def localRollup(tkey: Long, cells: Array[Int], users: Array[Long], trips: Array[Long],
+                  k: Int, minZoom: Int, maxZoom: Int = graft.raster.Rasterize.Zoom,
+                  resolution: Int = graft.raster.Rasterize.Resolution): Iterator[GlobalPixel] = {
+    val len = cells.length
     val tx = tkey >>> 32
     val ty = tkey & 0xFFFFFFFFL
     // current level's entries, key = gx << 24 | gy (gx at z14 has ≤23 bits)
@@ -60,8 +52,8 @@ object Pyramid {
     while (ci < len) {
       val u = users(ci)
       if (u >= k) {
-        val gx = tx * resolution + pix(ci) / resolution
-        val gy = ty * resolution + pix(ci) % resolution
+        val gx = tx * resolution + cells(ci) / resolution
+        val gy = ty * resolution + cells(ci) % resolution
         curKey(n) = (gx << 24) | gy; curU(n) = u; curT(n) = trips(ci)
         n += 1
       }
@@ -70,21 +62,21 @@ object Pyramid {
     val out = Iterator.newBuilder[GlobalPixel]
     var z = maxZoom - 1
     while (z >= minZoom && n > 0) {
-      val users = new scala.collection.mutable.LongMap[Long](n)
-      val trips = new scala.collection.mutable.LongMap[Long](n)
+      val sumU = new scala.collection.mutable.LongMap[Long](n)
+      val sumT = new scala.collection.mutable.LongMap[Long](n)
       var i = 0
       while (i < n) {
         val key = (((curKey(i) >>> 24) >> 1) << 24) | ((curKey(i) & 0xFFFFFFL) >> 1)
-        users.update(key, users.getOrElse(key, 0L) + curU(i))
-        trips.update(key, trips.getOrElse(key, 0L) + curT(i))
+        sumU.update(key, sumU.getOrElse(key, 0L) + curU(i))
+        sumT.update(key, sumT.getOrElse(key, 0L) + curT(i))
         i += 1
       }
-      n = users.size
+      n = sumU.size
       curKey = new Array[Long](n); curU = new Array[Long](n); curT = new Array[Long](n)
       var j = 0
-      users.foreach { case (key, u) =>
-        curKey(j) = key; curU(j) = u; curT(j) = trips(key)
-        out += GlobalPixel(z, key >>> 24, key & 0xFFFFFFL, u, trips(key))
+      sumU.foreach { case (key, u) =>
+        curKey(j) = key; curU(j) = u; curT(j) = sumT(key)
+        out += GlobalPixel(z, key >>> 24, key & 0xFFFFFFL, u, sumT(key))
         j += 1
       }
       z -= 1
@@ -111,22 +103,8 @@ object Pyramid {
                     resolution: Int = graft.raster.Rasterize.Resolution)(
       implicit spark: SparkSession): Dataset[GlobalPixel] = {
     import spark.implicits._
-    tc.flatMap(t => localRollup(t.tkey, t.cells, k, minZoom,
+    tc.flatMap(t => localRollup(t.tkey, t.cells, t.users, t.trips, k, minZoom,
       graft.raster.Rasterize.Zoom, resolution))
-  }
-
-  /** `lowerPartials` over the FLAT cell-array projection (tkey, cells.pix,
-    * cells.users, cells.trips): primitive-array decode, no per-cell
-    * objects — the dump-backed catalog path. */
-  def lowerPartialsFlat(flat: Dataset[(Long, Array[Int], Array[Long], Array[Long])], k: Int,
-                        minZoom: Int = 0,
-                        resolution: Int = graft.raster.Rasterize.Resolution)(
-      implicit spark: SparkSession): Dataset[GlobalPixel] = {
-    import spark.implicits._
-    flat.flatMap { case (tkey, pix, users, trips) =>
-      localRollupArrays(tkey, pix.length, pix(_), users(_), trips(_), k, minZoom,
-        graft.raster.Rasterize.Zoom, resolution)
-    }
   }
 
   /** Merge sibling-tile partials per pixel (the one groupBy of the
@@ -140,16 +118,6 @@ object Pyramid {
       .select($"z", $"gx", $"gy", $"users", $"trips")
       .as[GlobalPixel]
   }
-
-  /** All levels z14 → minZoom in ONE shuffle: `ancestorPartials` + one
-    * `mergePartials`. Addition is associative, so this is exactly the
-    * iterative 2×2 rollup cascade (HeatMapExtensions.cs:148-214) — but
-    * instead of 14 sequential small jobs it is one well-partitioned
-    * aggregation with map-side partials: the form that survives a 1000×
-    * scale-up (proved equal to the iterative form in PyramidSpec). */
-  def allLevels(z14: Dataset[GlobalPixel], minZoom: Int = 0)(
-      implicit spark: SparkSession): Dataset[GlobalPixel] =
-    mergePartials(ancestorPartials(z14, minZoom))
 
   /** Each z14 pixel exploded into its ancestor chain (z, gx >> (14-z),
     * gy >> (14-z)) for z = minZoom..14, itself included; unmerged. Values

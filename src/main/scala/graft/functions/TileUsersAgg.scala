@@ -3,9 +3,9 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /**
@@ -13,22 +13,24 @@ import org.apache.spark.sql.types._
  * pixel's (trip sum, distinct-user set) — the engine's answer to the
  * pixel-row shuffle bottleneck.
  *
- * The pixel-grain plans (`HeatmapAgg.globalGrainFused`, the specs'
- * `AggOracle` cascade) exchange one row per distinct (pixel[, user]) per map
- * partition; at sf0.1 that is ~23.5M rows because tracks land randomly, so map-side combine
- * barely collapses anything. Grouping by TILE instead (≈740 keys) exchanges one
- * partial buffer per (map partition × tile) — hundreds of rows, each a
- * compact binary blob — while the same (pixel, user) de-duplication happens
- * inside the buffer, off the row path. This reproduces the reference's own
+ * A pixel-grain count-distinct exchanges one row per distinct (pixel, user)
+ * per map partition; at sf0.1 that is ~23.5M rows because tracks land
+ * randomly, so map-side combine barely collapses anything. Grouping by TILE
+ * instead (≈740 keys) exchanges one partial buffer per (map partition ×
+ * tile) — hundreds of rows, each a compact binary blob — while the same
+ * (pixel, user) de-duplication happens inside the buffer, off the row path.
+ * This reproduces the reference's own
  * unit of work (one `HeatMapTile` accumulated at a time —
  * `/root/reference/src/HeatMap.Tiles/HeatMapTile.cs:17-83`,
  * `Worker.cs:167-222`) as a distributive Spark aggregate: update folds a
  * track's per-tile pixel runs in, merge unions buffers, eval emits the
- * per-pixel (users, trips) cells.
+ * tile's cells.
  *
  * Input: (user_id: Long, pixels: Array[Long]) with each element packing
  * (localPix << 32 | trips) — see `Rasterize.tileVisits`.
- * Output: array<struct<pix:int, users:bigint, trips:bigint>> (sorted by pix).
+ * Output: the `Schemas.TileCells` layout, three parallel primitive arrays
+ * struct<cells: array<int>, users: array<bigint>, trips: array<bigint>>
+ * with `cells` (the local pixels) ascending — no per-cell rows.
  */
 final class TileBuffer {
   // pix → trips sum (open addressing; key stored as pix+1, 0 = empty slot)
@@ -135,8 +137,10 @@ final class TileBuffer {
     }
   }
 
-  /** Per-pixel cells (pix, users, trips), sorted by pix (deterministic). */
-  def cells(): Array[(Int, Long, Long)] = {
+  /** The tile's cells as three parallel arrays — local pixel (ascending),
+    * distinct users, trip sum — ordered by sorting primitive packed
+    * `pix << 32 | slot` keys (deterministic, no boxing). */
+  def cells(): (Array[Int], Array[Long], Array[Long]) = {
     // distinct-user count per pixel: probe each pair's pixel slot once
     val counts = new Array[Long](pixKeys.length)
     val mask = pixKeys.length - 1
@@ -150,15 +154,22 @@ final class TileBuffer {
       }
       s += 1
     }
-    val out = new Array[(Int, Long, Long)](nPix)
+    val order = new Array[Long](nPix)
     var o = 0
     s = 0
     while (s < pixKeys.length) {
-      if (pixKeys(s) != 0) { out(o) = (pixKeys(s) - 1, counts(s), pixTrips(s)); o += 1 }
+      if (pixKeys(s) != 0) { order(o) = ((pixKeys(s) - 1).toLong << 32) | s; o += 1 }
       s += 1
     }
-    java.util.Arrays.sort(out, Ordering.by((c: (Int, Long, Long)) => c._1))
-    out
+    java.util.Arrays.sort(order)
+    val pix = new Array[Int](nPix); val users = new Array[Long](nPix); val trips = new Array[Long](nPix)
+    var i = 0
+    while (i < nPix) {
+      val slot = order(i).toInt
+      pix(i) = (order(i) >>> 32).toInt; users(i) = counts(slot); trips(i) = pixTrips(slot)
+      i += 1
+    }
+    (pix, users, trips)
   }
 
   def serialize(): Array[Byte] = {
@@ -213,10 +224,10 @@ case class TileUsersAgg(
   }
   override def children: Seq[Expression] = Seq(userCol, pixelsCol)
   override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pix", IntegerType, nullable = false),
-    StructField("users", LongType, nullable = false),
-    StructField("trips", LongType, nullable = false))), containsNull = false)
+  override def dataType: DataType = StructType(Seq(
+    StructField("cells", ArrayType(IntegerType, containsNull = false), nullable = false),
+    StructField("users", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("trips", ArrayType(LongType, containsNull = false), nullable = false)))
 
   override def createAggregationBuffer(): TileBuffer = new TileBuffer()
 
@@ -243,14 +254,9 @@ case class TileUsersAgg(
   }
 
   override def eval(buf: TileBuffer): Any = {
-    val cs = buf.cells()
-    val rows = new Array[Any](cs.length)
-    var i = 0
-    while (i < cs.length) {
-      rows(i) = InternalRow(cs(i)._1, cs(i)._2, cs(i)._3)
-      i += 1
-    }
-    new GenericArrayData(rows)
+    val (pix, users, trips) = buf.cells()
+    InternalRow(UnsafeArrayData.fromPrimitiveArray(pix),
+      UnsafeArrayData.fromPrimitiveArray(users), UnsafeArrayData.fromPrimitiveArray(trips))
   }
 
   override def serialize(buf: TileBuffer): Array[Byte] = buf.serialize()

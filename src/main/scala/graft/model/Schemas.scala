@@ -37,14 +37,12 @@ object Schemas {
     * aggregate — ~100× fewer rows than PixelVisit through the exchange. */
   final case class TileVisit(user_id: Long, tkey: Long, pixels: Array[Long])
 
-  /** One aggregated heatmap cell inside a tile (localPix, distinct users,
-    * trip sum) — the element type of TileUsersAgg's output. */
-  final case class Cell(pix: Int, users: Long, trips: Long)
-
-  /** A fully aggregated z14 tile: every surviving cell with exact
-    * (users, trips) — the post-aggregate, pre-explode relation the flagship
-    * derives both the z14 layer and the pyramid from. */
-  final case class TileCells(tkey: Long, cells: Array[Cell])
+  /** A fully aggregated z14 tile in one flat layout: cell i is local pixel
+    * `cells(i)` (x-major lx·res + ly, ascending) with exact distinct
+    * `users(i)` and trip sum `trips(i)` — every cell, before the k HAVING.
+    * The post-aggregate, pre-explode relation the flagship derives both the
+    * z14 layer and the pyramid from; no per-cell objects. */
+  final case class TileCells(tkey: Long, cells: Array[Int], users: Array[Long], trips: Array[Long])
 
   /** Global heatmap pixel at one zoom (post count-distinct / rollup). */
   final case class GlobalPixel(z: Int, gx: Long, gy: Long, users: Long, trips: Long)

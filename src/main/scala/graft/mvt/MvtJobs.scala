@@ -12,9 +12,9 @@ import graft.model.Schemas.{GlobalPixel, MvtTile}
  * Re-expresses `/root/reference/src/HeatMap.Tiles/IO/VectorTiles/
  * HeatMapExtensions.cs:22-81` + `Worker.cs:257-279`: features are the
  * non-zero pixels with users > 0 (F6); empty tiles are dropped. Two
- * encoders, one per input shape: z14 tiles encode NARROW from the tile
- * relation (`encodeZ14FromTileCells`/`encodeZ14Flat`), and every other
- * pixel relation goes through the one group-per-tile encoder
+ * encoders, one per input shape: z14 tiles encode NARROW from the flat
+ * `TileCells` layout (`encodeZ14FromTileCells`), and every other pixel
+ * relation goes through the one group-per-tile encoder
  * (`encodeLowerFused`). A tile holds at most res² = 262,144 pixels so no
  * group can exceed a few MB — safely within executor memory at any data
  * scale.
@@ -62,40 +62,21 @@ object MvtJobs {
       implicit spark: SparkSession): Dataset[MvtTile] = {
     import spark.implicits._
     val res = resolution
-    tc.flatMap { t =>
-      encodeOneZ14(t.tkey, t.cells.length, i => t.cells(i).pix,
-        i => t.cells(i).users, i => t.cells(i).trips, k, res)
-    }
+    tc.flatMap(t => encodeOneZ14(t.tkey, t.cells, t.users, t.trips, k, res))
   }
 
-  /** `encodeZ14FromTileCells` over the FLAT cell-array projection
-    * (tkey, cells.pix, cells.users, cells.trips) — byte-identical output,
-    * but the input decodes as three primitive arrays per tile instead of
-    * one object per cell (the dump-backed catalog path reads ~10^7 cells;
-    * per-cell `Cell` allocation was the GC-heavy half of the round-3
-    * q_hm_mvt_tiles driver anomaly). */
-  def encodeZ14Flat(flat: Dataset[(Long, Array[Int], Array[Long], Array[Long])], k: Int,
-                    resolution: Int = Resolution)(
-      implicit spark: SparkSession): Dataset[MvtTile] = {
-    import spark.implicits._
-    val res = resolution
-    flat.flatMap { case (tkey, pix, users, trips) =>
-      encodeOneZ14(tkey, pix.length, pix(_), users(_), trips(_), k, res)
-    }
-  }
-
-  /** Shared z14 tile-encode kernel: filter by k, place, stream-encode —
-    * single pass, primitive buffers only. Cells arrive sorted by pix
-    * (x-major), which is the feature order the reference walks.
+  /** The z14 tile-encode kernel over one tile's flat cell arrays: filter
+    * by k, place, stream-encode — single pass, primitive buffers only.
+    * Cells arrive sorted by pix (x-major), which is the feature order the reference walks.
     * `private[graft]`: also driven as a driver-side loop by the
     * q_hm_mvt_tiles oracle dump (same kernel, different execution path). */
-  private[graft] def encodeOneZ14(tkey: Long, n: Int, pix: Int => Int,
-                           users: Int => Long, trips: Int => Long,
-                           k: Int, res: Int): Iterator[MvtTile] = {
+  private[graft] def encodeOneZ14(tkey: Long, cells: Array[Int], users: Array[Long],
+                                  trips: Array[Long], k: Int, res: Int): Iterator[MvtTile] = {
     val tx = tkey >>> 32
     val ty = tkey & 0xFFFFFFFFL
     val zoom = graft.raster.Rasterize.Zoom
     val placer = graft.core.WebMercator.placer(zoom, tx, ty, res, MvtCodec.Extent)
+    val n = cells.length
     val ex = new Array[Long](n); val ey = new Array[Long](n)
     val fu = new Array[Long](n); val ft = new Array[Long](n)
     var m = 0
@@ -103,7 +84,7 @@ object MvtJobs {
     while (i < n) {
       val u = users(i)
       if (u >= k) {
-        val p = pix(i)
+        val p = cells(i)
         ex(m) = placer.ex(p / res); ey(m) = placer.ey(p % res)
         fu(m) = u; ft(m) = trips(i)
         m += 1
@@ -117,13 +98,14 @@ object MvtJobs {
   /** The group-per-tile encoder: ONE exchange keyed by (z, tx, ty), then
     * each tile's rows are summed per position and encoded. Takes merged
     * pixels (the service's `global` relation, one row per position) or
-    * unmerged partials (`Pyramid.lowerPartials`/`lowerPartialsFlat`: the
-    * sibling-partial merge that a separate pixel-grain groupBy would do in
-    * its own exchange happens inside the tile group instead — partials for
-    * a tile land on one reducer anyway). F6: a position whose summed users
-    * are not > 0 writes no feature, and a tile left with no feature writes
-    * no blob. Partials of `lowerPartialsFlat` encode byte-identical to
-    * the merged `lowerLevelsFromTiles` rows (HeatmapPipelineSpec). */
+    * unmerged partials (`Pyramid.lowerPartials`: the sibling-partial merge
+    * that a separate pixel-grain groupBy would do in its own exchange
+    * happens inside the tile group instead — partials for a tile land on
+    * one reducer anyway). F6: a position whose summed users are not > 0
+    * writes no feature, and a tile left with no feature writes no blob.
+    * Partials of `lowerPartials` encode byte-identical to the merged
+    * `lowerLevelsFromTiles` rows (HeatmapPipelineSpec). The positions go
+    * to `encodeOneTile` in map order; it sorts them once. */
   def encodeLowerFused(partials: Dataset[GlobalPixel],
                        resolution: Int = Resolution)(
       implicit spark: SparkSession): Dataset[MvtTile] = {
@@ -141,12 +123,11 @@ object MvtJobs {
           trips.update(pos, trips.getOrElse(pos, 0L) + p.trips)
         }
         val pos = new Array[Long](users.size)
+        val us = new Array[Long](users.size); val tr = new Array[Long](users.size)
         var n = 0
-        users.foreachEntry { (k, u) => if (u > 0) { pos(n) = k; n += 1 } }
-        java.util.Arrays.sort(pos, 0, n)
-        val us = new Array[Long](n); val tr = new Array[Long](n)
-        var i = 0
-        while (i < n) { us(i) = users(pos(i)); tr(i) = trips(pos(i)); i += 1 }
+        users.foreachEntry { (p, u) =>
+          if (u > 0) { pos(n) = p; us(n) = u; tr(n) = trips(p); n += 1 }
+        }
         if (n == 0) Iterator.empty
         else Iterator.single(encodeOneTile(z, tx, ty, n, pos, us, tr, res))
       }

@@ -73,7 +73,7 @@ object GraftQueries {
     * over the identical rows. */
   val RasterDumpPath = "/tmp/graft_oracle/raster_pixels.parquet"
 
-  /** The aggregated tile relation (tkey, cells), materialized ONCE per sf
+  /** The aggregated tile relation (`TileCells`), materialized ONCE per sf
     * dir and shared by the whole q_hm_* family on the SPARK side: the z14
     * layer, the pyramid stats, the MVT export and the overlay all derive
     * from it NARROW (explode / tile-local rollup — zero live exchanges),
@@ -82,8 +82,8 @@ object GraftQueries {
     * DuckDB reading the raster dump see the same computation. */
   val CellsDumpPath = "/tmp/graft_oracle/tile_cells.parquet"
 
-  /** Raster dump of the IMAGE-derived tracks (the input_hint path), used by
-    * q_hm_from_images on both sides of the compare. Input is the fixed
+  /** Raster dump of the IMAGE-derived tracks (the input_hint path), the
+    * input of the q_hm_from_images oracle. Input is the fixed
     * deterministic synthetic image table — no sf dependence. */
   val ImgRasterDumpPath = "/tmp/graft_oracle/raster_pixels_img.parquet"
   val ImgPipelineRows = 2000L
@@ -142,29 +142,17 @@ object GraftQueries {
     }
   }
 
-  private def cellsDumpDf(s: SparkSession, d: String): DataFrame = {
+  /** The shared tile relation of the sf dir. Its source label carries the
+    * `TileCells` schema as well as the sf dir, so a dump another cell
+    * layout wrote is rewritten instead of misread. */
+  private[graft] def cellsDump(s: SparkSession, d: String): org.apache.spark.sql.Dataset[graft.model.Schemas.TileCells] = {
     implicit val sp: SparkSession = s
     import sp.implicits._
-    sharedDump(s, CellsDumpPath, d) { path =>
+    val layout = org.apache.spark.sql.Encoders.product[graft.model.Schemas.TileCells].schema.catalogString
+    sharedDump(s, CellsDumpPath, s"$d $layout") { path =>
       graft.agg.HeatmapAgg.tileCells(graft.raster.Rasterize.tileVisits(eventTracks(s, d)))
         .toDF().write.mode("overwrite").parquet(path)
-    }
-  }
-
-  private def cellsDump(s: SparkSession, d: String): org.apache.spark.sql.Dataset[graft.model.Schemas.TileCells] = {
-    import s.implicits._
-    cellsDumpDf(s, d).as[graft.model.Schemas.TileCells]
-  }
-
-  /** The dump as FLAT primitive cell arrays (tkey, pix[], users[], trips[]):
-    * decodes without per-cell `Cell` objects — the allocation-light read
-    * the encode/rollup kernels consume directly. */
-  private[graft] def cellsDumpFlat(s: SparkSession, d: String): org.apache.spark.sql.Dataset[(Long, Array[Int], Array[Long], Array[Long])] = {
-    import s.implicits._
-    cellsDumpDf(s, d)
-      .select(col("tkey"), col("cells.pix").as("pix"),
-        col("cells.users").as("users"), col("cells.trips").as("trips"))
-      .as[(Long, Array[Int], Array[Long], Array[Long])]
+    }.as[graft.model.Schemas.TileCells]
   }
 
   /** Persisted IVF index over the sf dir's embeddings (index-once / query-
@@ -486,14 +474,12 @@ object GraftQueries {
       val tiles = cellsDump(s, d).collect() // bounded: the aggregated tile relation
       val out = scala.collection.mutable.ArrayBuffer.empty[graft.model.Schemas.MvtTile]
       tiles.foreach { t =>
-        out ++= graft.mvt.MvtJobs.encodeOneZ14(t.tkey, t.cells.length,
-          i => t.cells(i).pix, i => t.cells(i).users, i => t.cells(i).trips,
-          k, res)
+        out ++= graft.mvt.MvtJobs.encodeOneZ14(t.tkey, t.cells, t.users, t.trips, k, res)
       }
       val acc = scala.collection.mutable.HashMap
         .empty[(Int, Long, Long), (scala.collection.mutable.LongMap[Long], scala.collection.mutable.LongMap[Long])]
       tiles.foreach { t =>
-        graft.agg.Pyramid.localRollup(t.tkey, t.cells, k, 0).foreach { p =>
+        graft.agg.Pyramid.localRollup(t.tkey, t.cells, t.users, t.trips, k, 0).foreach { p =>
           val key = (p.z, p.gx / res, p.gy / res)
           val (us, tr) = acc.getOrElseUpdate(key,
             (scala.collection.mutable.LongMap.empty[Long], scala.collection.mutable.LongMap.empty[Long]))
@@ -752,10 +738,9 @@ object GraftQueries {
     "q_hm_pyramid_stats" -> ((s, d) => {
       implicit val sp: SparkSession = s
       rasterDump(s, d)
-      val pyr = graft.agg.HeatmapAgg.cellsToPixels(cellsDump(s, d)).toDF()
-        .unionByName(graft.agg.Pyramid.mergePartials(
-          graft.agg.Pyramid.lowerPartialsFlat(cellsDumpFlat(s, d),
-            graft.agg.HeatmapAgg.KAnonymity)).toDF())
+      val tc = cellsDump(s, d)
+      val pyr = graft.agg.HeatmapAgg.cellsToPixels(tc).toDF()
+        .unionByName(graft.agg.Pyramid.lowerLevelsFromTiles(tc, graft.agg.HeatmapAgg.KAnonymity).toDF())
       pyr.groupBy(col("z"))
         .agg(count(lit(1)).as("pixels"), sum(col("users")).cast("long").as("users"),
           sum(col("trips")).cast("long").as("trips"))
@@ -765,18 +750,17 @@ object GraftQueries {
     // NARROW from the tile relation; only the lower levels go through the
     // tile exchange. No persisted intermediate — the dump IS the shared
     // materialization (round-2 leaked one cached Dataset per invocation
-    // and re-ran the full tile exchange; 77 s → ~2 s at sf0.1).
-    // z14 encodes NARROW from the flat cell arrays; the lower levels go
-    // through exactly ONE exchange (tile-grain groupByKey) with the
-    // sibling-partial merge fused into the encode group. Byte-identical to
-    // encoding the merged lowerLevelsFromTiles(.) rows (HeatmapPipelineSpec).
+    // and re-ran the full tile exchange; 77 s → ~2 s at sf0.1). The
+    // sibling-partial merge is fused into the encode group, byte-identical
+    // to encoding the merged lowerLevelsFromTiles(.) rows
+    // (HeatmapPipelineSpec).
     "q_hm_mvt_tiles" -> ((s, d) => {
       implicit val sp: SparkSession = s
       mvtBlobDump(s, d) // oracle: driver-side same-kernel blob recomputation
-      val tc = cellsDumpFlat(s, d)
+      val tc = cellsDump(s, d)
       val k = graft.agg.HeatmapAgg.KAnonymity
-      graft.mvt.MvtJobs.encodeZ14Flat(tc, k)
-        .union(graft.mvt.MvtJobs.encodeLowerFused(graft.agg.Pyramid.lowerPartialsFlat(tc, k)))
+      graft.mvt.MvtJobs.encodeZ14FromTileCells(tc, k)
+        .union(graft.mvt.MvtJobs.encodeLowerFused(graft.agg.Pyramid.lowerPartials(tc, k)))
         .toDF()
         .select(col("z"), col("tx"), col("ty"), length(col("mvt")).as("mvt_bytes"),
           md5(hex(col("mvt"))).as("mvt_md5"))
@@ -799,15 +783,17 @@ object GraftQueries {
     }),
 
     // the input_hint-shaped path end-to-end: Iceberg-shaped image+caption
-    // rows → derived tracks → rasterize (dumped for the oracle) → k-anon
-    // pyramid. DuckDB-oracled since round 3 (was rows-only): both engines
-    // aggregate the identical image-derived pixel rows.
+    // rows → derived tracks → the flagship's tile-grain z14 + tile-local
+    // pyramid (nothing persisted: the two branches share one tile
+    // exchange). DuckDB recomputes the pyramid from the same tracks'
+    // pixel rows, which imgRasterDump writes for it.
     "q_hm_from_images" -> ((s, d) => {
       implicit val sp: SparkSession = s
-      import sp.implicits._
-      val z14 = graft.agg.HeatmapAgg.globalGrainFused(
-        imgRasterDump(s).as[graft.model.Schemas.PixelVisit])
-      graft.agg.Pyramid.allLevels(z14).toDF()
+      imgRasterDump(s)
+      val tc = graft.agg.HeatmapAgg.tileCells(graft.raster.Rasterize.tileVisits(
+        HeatmapPipeline.tracks(HeatmapPipeline.images(ImgPipelineRows))))
+      graft.agg.HeatmapAgg.cellsToPixels(tc).toDF()
+        .unionByName(graft.agg.Pyramid.lowerLevelsFromTiles(tc, graft.agg.HeatmapAgg.KAnonymity).toDF())
         .groupBy(col("z"))
         .agg(count(lit(1)).as("pixels"), sum(col("trips")).cast("long").as("trips"))
     }),

@@ -4,16 +4,11 @@ object ExplainPlans {
   def main(args: Array[String]): Unit = {
     implicit val spark: SparkSession = graft.spark.Sessions.local(8, "explain")
     val tracks = graft.queries.GraftQueries.eventTracks(spark, "/root/testdata/sf0.001")
-    val z14 = graft.agg.HeatmapAgg.globalGrainFused(graft.raster.Rasterize.pixelKeys(tracks))
-    println("=== fused z14 ===")
-    z14.explain("formatted")
     println("=== tiled z14 (flagship: ONE exchange of per-tile buffers) ===")
     val tc = graft.agg.HeatmapAgg.tileCells(graft.raster.Rasterize.tileVisits(tracks))
     graft.agg.HeatmapAgg.cellsToPixels(tc).explain("formatted")
     println("=== pyramid (tile-local rollup + one merge shuffle) ===")
     graft.agg.Pyramid.lowerLevelsFromTiles(tc, graft.agg.HeatmapAgg.KAnonymity).explain("formatted")
-    println("=== pyramid (ancestor-explode form) ===")
-    graft.agg.Pyramid.allLevels(z14).explain("formatted")
     println("=== events scan pruning ===")
     graft.queries.Tables.events(spark, "/root/testdata/sf0.001")
       .where(org.apache.spark.sql.functions.col("event_id") > 100)

@@ -28,7 +28,7 @@ class HeatmapAggSpec extends AnyFunSuite {
       val ph = ImageSynth.phashOf(i)
       Track(i, TraceSynth.userOf(ph, 8), TraceSynth.trace(ph))
     })
-    val fused = HeatmapAgg.globalGrainFused(Rasterize.pixelKeys(tracks)).collect()
+    val fused = AggOracle.globalGrainFused(Rasterize.pixelKeys(tracks)).collect()
       .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
     val tiled = HeatmapAgg.cellsToPixels(HeatmapAgg.tileCells(Rasterize.tileVisits(tracks))).collect()
       .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
@@ -45,10 +45,12 @@ class HeatmapAggSpec extends AnyFunSuite {
     b.addRow(2L, Array((7L << 32) | 1L, (11L << 32) | 4L))
     val ser = graft.functions.TileBuffer.deserialize(b.serialize())
     a.mergeFrom(ser)
-    val cells = a.cells().map(c => c._1 -> ((c._2, c._3))).toMap
-    assert(cells === Map(7 -> ((3L, 11L)), 9 -> ((1L, 1L)), 11 -> ((1L, 4L))))
-    // sorted by pix
-    assert(a.cells().map(_._1).toSeq === Seq(7, 9, 11))
+    val (pix, users, trips) = a.cells()
+    assert(pix.length === users.length && users.length === trips.length)
+    // sorted by pix, users and trips at the same position
+    assert(pix.toSeq === Seq(7, 9, 11))
+    assert(users.toSeq === Seq(3L, 1L, 1L))
+    assert(trips.toSeq === Seq(11L, 1L, 4L))
   }
 
   test("tileVisits: packed runs reproduce pixelKeys exactly") {
@@ -82,7 +84,7 @@ class HeatmapAggSpec extends AnyFunSuite {
       Track(i, TraceSynth.userOf(ph, 8), TraceSynth.trace(ph))
     })
     val res = 1024
-    val fused = HeatmapAgg.globalGrainFused(Rasterize.pixelKeys(tracks, resolution = res)).collect()
+    val fused = AggOracle.globalGrainFused(Rasterize.pixelKeys(tracks, resolution = res)).collect()
       .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
     val tiled = HeatmapAgg.cellsToPixels(HeatmapAgg.tileCells(
         Rasterize.tileVisits(tracks, resolution = res)), resolution = res).collect()
@@ -99,7 +101,7 @@ class HeatmapAggSpec extends AnyFunSuite {
         Rasterize.tileVisits(tracks, resolution = res)), HeatmapAgg.KAnonymity,
         resolution = res).toDF())
       .collect().map(r => ((r.getInt(0), r.getLong(1), r.getLong(2)), (r.getLong(3), r.getLong(4)))).toMap
-    val viaExplode = Pyramid.allLevels(z14).collect()
+    val viaExplode = AggOracle.allLevels(z14).collect()
       .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
     assert(viaTiles === viaExplode)
   }
@@ -111,7 +113,7 @@ class HeatmapAggSpec extends AnyFunSuite {
       AggOracle.UserPixel(v.user_id, v.pkey >>> 32, v.pkey & 0xFFFFFFFFL, v.trips)))
     val cascade = AggOracle.globalGrain(up).collect()
       .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
-    val fused = HeatmapAgg.globalGrainFused(raster).collect()
+    val fused = AggOracle.globalGrainFused(raster).collect()
       .map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
     assert(cascade === fused)
   }

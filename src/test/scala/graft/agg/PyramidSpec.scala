@@ -57,7 +57,7 @@ class PyramidSpec extends AnyFunSuite {
       .groupBy($"z", $"gx", $"gy")
       .agg(sum($"users").as("users"), sum($"trips").as("trips"))
       .as[GlobalPixel]
-    val a = Pyramid.allLevels(z14).collect()
+    val a = AggOracle.allLevels(z14).collect()
       .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap
     val b = allLevelsIterative(z14).collect()
       .map(p => ((p.z, p.gx, p.gy), (p.users, p.trips))).toMap

@@ -51,9 +51,9 @@ class GeometryTextSpec extends AnyFunSuite {
       t.coords.map(p => s"${p(0)} ${p(1)}").mkString("LINESTRING (", ", ", ")")
     val viaWkt = GeometryText.tracksFromWkt(
       direct.map(t => (t.contribution_id, t.user_id, wktOf(t))).toDF("contribution_id", "user_id", "wkt"))
-    val a = graft.agg.HeatmapAgg.globalGrainFused(graft.raster.Rasterize.pixelKeys(viaWkt))
+    val a = graft.agg.AggOracle.globalGrainFused(graft.raster.Rasterize.pixelKeys(viaWkt))
       .collect().map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
-    val b = graft.agg.HeatmapAgg.globalGrainFused(
+    val b = graft.agg.AggOracle.globalGrainFused(
         graft.raster.Rasterize.pixelKeys(s.createDataset(direct)))
       .collect().map(p => ((p.gx, p.gy), (p.users, p.trips))).toMap
     assert(a === b)

@@ -140,28 +140,22 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("flat-array dump path (encodeZ14Flat + encodeLowerFused) is byte-equal to the object path") {
+  test("tile relation parquet round-trip: z14 + lower MVTs byte-equal") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.col
     val tc = result.tiles
-    val dir = java.nio.file.Files.createTempDirectory("cells-flat").toString
+    val dir = java.nio.file.Files.createTempDirectory("tile-cells").toString
     tc.toDF().write.mode("overwrite").parquet(dir)
-    val flat = s.read.parquet(dir)
-      .select(col("tkey"), col("cells.pix").as("pix"),
-        col("cells.users").as("users"), col("cells.trips").as("trips"))
-      .as[(Long, Array[Int], Array[Long], Array[Long])]
+    val read = s.read.parquet(dir).as[TileCells]
     val k = result.k
-    def bytesOf(ds: org.apache.spark.sql.Dataset[graft.model.Schemas.MvtTile]) =
+    def bytesOf(ds: org.apache.spark.sql.Dataset[MvtTile]) =
       ds.collect().map(t => ((t.z, t.tx, t.ty), t.mvt.toSeq)).toMap
-    val z14Obj = bytesOf(MvtJobs.encodeZ14FromTileCells(tc, k))
-    val z14Flat = bytesOf(MvtJobs.encodeZ14Flat(flat, k))
-    assert(z14Flat.nonEmpty && z14Flat === z14Obj)
-    val lowerTwoShuffle = bytesOf(MvtJobs.encodeLowerFused(
-      graft.agg.Pyramid.lowerLevelsFromTiles(tc, k)))
-    val lowerFusedFlat = bytesOf(MvtJobs.encodeLowerFused(
-      graft.agg.Pyramid.lowerPartialsFlat(flat, k)))
-    assert(lowerFusedFlat.nonEmpty && lowerFusedFlat === lowerTwoShuffle)
+    val z14Cached = bytesOf(MvtJobs.encodeZ14FromTileCells(tc, k))
+    val z14Read = bytesOf(MvtJobs.encodeZ14FromTileCells(read, k))
+    assert(z14Read.nonEmpty && z14Read === z14Cached)
+    val lowerCached = bytesOf(MvtJobs.encodeLowerFused(graft.agg.Pyramid.lowerLevelsFromTiles(tc, k)))
+    val lowerRead = bytesOf(MvtJobs.encodeLowerFused(graft.agg.Pyramid.lowerPartials(read, k)))
+    assert(lowerRead.nonEmpty && lowerRead === lowerCached)
   }
 
   test("MVT filesystem sink writes the reference's {z}/{x}/{y}.mvt layout") {

@@ -91,17 +91,6 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(exchanges === 1, plan)
   }
 
-  test("fused z14: exactly two exchanges (partial (pixel,user), final pixel)") {
-    implicit val s: SparkSession = spark
-    import s.implicits._
-    val raster = graft.raster.Rasterize.pixelKeys(
-      s.createDataset(Seq(graft.model.Schemas.Track(1, 1,
-        Array(Array(4.35, 50.85), Array(4.351, 50.851))))))
-    val plan = physical(graft.agg.HeatmapAgg.globalGrainFused(raster).toDF())
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges === 2, plan)
-  }
-
   test("tile-grain aggregate: ONE exchange, keyed by tile not pixel") {
     implicit val s: SparkSession = spark
     import s.implicits._
@@ -150,7 +139,7 @@ class PlanQualitySpec extends AnyFunSuite {
     implicit val s: SparkSession = spark
     import s.implicits._
     val z14 = s.createDataset(Seq(graft.model.Schemas.GlobalPixel(14, 100, 100, 3, 5)))
-    val plan = physical(graft.agg.Pyramid.allLevels(z14).toDF())
+    val plan = physical(graft.agg.Pyramid.mergePartials(graft.agg.Pyramid.ancestorPartials(z14)).toDF())
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(exchanges === 1, plan)
   }
