@@ -20,7 +20,8 @@ import graft.model.Schemas.{GlobalPixel, TileCells, TileVisit}
  *                               catalog queries all run this pair.
  *
  * The count-distinct is EXACT (the reference enumerates real user sets, no
- * sketches): the (pixel, user) set rides inside the tile buffer. The
+ * sketches): each user's pixel-unique run rides inside the tile buffer, and
+ * a pixel's users are its entries in the tile's sorted runs. The
  * pixel-grain count-distinct it is proved equal to is a test-scope oracle
  * (`AggOracle`).
  */
@@ -33,10 +34,15 @@ object HeatmapAgg {
     * most hot pixels, so that exchange carries millions of rows. Grouping
     * by tile (`Rasterize.tileVisits` + `TileUsersAgg`) exchanges one compact
     * binary buffer per (map partition × tile) — the row count drops by the
-    * pixels-per-tile factor (~500× at sf0.1). The flagship caches THIS
-    * relation and derives both the z14 layer (`cellsToPixels`, narrow) and
-    * the pyramid (`Pyramid.lowerLevelsFromTiles`, tile-local pre-agg) from
-    * it. */
+    * pixels-per-tile factor (~500× at sf0.1). A buffer holds one sorted,
+    * pixel-unique run per user (8 B an entry): merging joins a user's runs
+    * with `TileBuffer.mergeRuns`, and eval counts each pixel's users with
+    * one sort of the tile's runs — users are hashed, pixel entries never.
+    * Trips clamp at u32 per (user, pixel) as the reference's merge does
+    * (A3); a pixel's trip sum over its users is a Long. The flagship caches
+    * THIS relation and derives both the z14 layer (`cellsToPixels`,
+    * narrow) and the pyramid (`Pyramid.lowerLevelsFromTiles`, tile-local
+    * pre-agg) from it. */
   def tileCells(tiles: Dataset[TileVisit])(implicit spark: SparkSession): Dataset[TileCells] = {
     import spark.implicits._
     tiles.toDF()

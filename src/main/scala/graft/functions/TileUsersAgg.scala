@@ -8,23 +8,26 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+import graft.core.Codec
+
 /**
  * Tile-grain exact heatmap aggregate: ONE buffer per z14 TILE carrying every
- * pixel's (trip sum, distinct-user set) — the engine's answer to the
- * pixel-row shuffle bottleneck.
+ * user's pixel run over it — the engine's answer to the pixel-row shuffle
+ * bottleneck.
  *
  * A pixel-grain count-distinct exchanges one row per distinct (pixel, user)
  * per map partition; at sf0.1 that is ~23.5M rows because tracks land
  * randomly, so map-side combine barely collapses anything. Grouping by TILE
  * instead (≈740 keys) exchanges one partial buffer per (map partition ×
- * tile) — hundreds of rows, each a compact binary blob — while the same
- * (pixel, user) de-duplication happens inside the buffer, off the row path.
- * This reproduces the reference's own
- * unit of work (one `HeatMapTile` accumulated at a time —
+ * tile) — hundreds of rows, each a compact binary blob of 8-byte run
+ * entries. The buffer maps user → one pixel-ascending, pixel-unique run, so
+ * (pixel, user) de-duplication is a sorted-run merge (`mergeRuns`) and
+ * nothing is hashed per pixel. This reproduces the reference's own unit of
+ * work (each user's own tile summed into the global one —
  * `/root/reference/src/HeatMap.Tiles/HeatMapTile.cs:17-83`,
  * `Worker.cs:167-222`) as a distributive Spark aggregate: update folds a
- * track's per-tile pixel runs in, merge unions buffers, eval emits the
- * tile's cells.
+ * track's per-tile pixel run in, merge unions buffers, eval sorts the
+ * tile's runs once and emits its cells.
  *
  * Input: (user_id: Long, pixels: Array[Long]) with each element packing
  * (localPix << 32 | trips) — see `Rasterize.tileVisits`.
@@ -33,157 +36,65 @@ import org.apache.spark.sql.types._
  * with `cells` (the local pixels) ascending — no per-cell rows.
  */
 final class TileBuffer {
-  // pix → trips sum (open addressing; key stored as pix+1, 0 = empty slot)
-  var pixKeys: Array[Int] = new Array[Int](16)
-  var pixTrips: Array[Long] = new Array[Long](16)
-  var nPix: Int = 0
-  // distinct (pix, user) set (parallel arrays; pix stored as pix+1)
-  var pairPix: Array[Int] = new Array[Int](16)
-  var pairUser: Array[Long] = new Array[Long](16)
-  var nPair: Int = 0
+  /** user → one pixel-ascending, pixel-unique run (localPix << 32 | trips). */
+  val runs = new scala.collection.mutable.LongMap[Array[Long]]()
+  /** Entries over all runs. */
+  var entries: Int = 0
 
-  def addTrips(pix: Int, t: Long): Unit = {
-    val mask = pixKeys.length - 1
-    var i = (pix * 0x9E3779B1) & mask
-    while (pixKeys(i) != 0) {
-      if (pixKeys(i) == pix + 1) { pixTrips(i) += t; return }
-      i = (i + 1) & mask
-    }
-    pixKeys(i) = pix + 1
-    pixTrips(i) = t
-    nPix += 1
-    if (nPix * 2 > pixKeys.length) growPix()
-  }
-
-  private def growPix(): Unit = {
-    val ok = pixKeys; val ot = pixTrips
-    pixKeys = new Array[Int](ok.length * 2)
-    pixTrips = new Array[Long](ok.length * 2)
-    val mask = pixKeys.length - 1
-    var s = 0
-    while (s < ok.length) {
-      if (ok(s) != 0) {
-        var i = ((ok(s) - 1) * 0x9E3779B1) & mask
-        while (pixKeys(i) != 0) i = (i + 1) & mask
-        pixKeys(i) = ok(s); pixTrips(i) = ot(s)
-      }
-      s += 1
+  /** Fold in one normalized run; a user already present gets the two runs
+    * merged. The buffer keeps `run` itself. */
+  private def put(user: Long, run: Array[Long]): Unit = {
+    val old = runs.getOrNull(user)
+    if (old == null) { runs.update(user, run); entries += run.length }
+    else {
+      val merged = TileBuffer.mergeRuns(old, run)
+      runs.update(user, merged); entries += merged.length - old.length
     }
   }
 
-  def addPair(pix: Int, user: Long): Unit = {
-    val mask = pairPix.length - 1
-    var i = ((pix * 0x9E3779B1) ^ (java.lang.Long.hashCode(user) * 0x85EBCA6B)) & mask
-    while (pairPix(i) != 0) {
-      if (pairPix(i) == pix + 1 && pairUser(i) == user) return
-      i = (i + 1) & mask
-    }
-    pairPix(i) = pix + 1
-    pairUser(i) = user
-    nPair += 1
-    if (nPair * 2 > pairPix.length) growPair()
-  }
+  /** Fold one input row: a user's pixel run over this tile, in any order
+    * and with repeated pixels allowed (normalized in place). */
+  def addRow(user: Long, packed: Array[Long]): Unit =
+    if (packed.length > 0) put(user, TileBuffer.normalize(packed))
 
-  private def growPair(): Unit = {
-    val op = pairPix; val ou = pairUser
-    pairPix = new Array[Int](op.length * 2)
-    pairUser = new Array[Long](op.length * 2)
-    val mask = pairPix.length - 1
-    var s = 0
-    while (s < op.length) {
-      if (op(s) != 0) {
-        var i = (((op(s) - 1) * 0x9E3779B1) ^ (java.lang.Long.hashCode(ou(s)) * 0x85EBCA6B)) & mask
-        while (pairPix(i) != 0) i = (i + 1) & mask
-        pairPix(i) = op(s); pairUser(i) = ou(s)
-      }
-      s += 1
-    }
-  }
-
-  /** Fold one input row: a user's pixel run over this tile. */
-  def addRow(user: Long, packed: Array[Long]): Unit = {
-    var i = 0
-    while (i < packed.length) {
-      addPacked(user, packed(i))
-      i += 1
-    }
-  }
-
-  @inline def addPacked(user: Long, el: Long): Unit = {
-    val pix = (el >>> 32).toInt
-    addTrips(pix, el & 0xFFFFFFFFL)
-    addPair(pix, user)
-  }
-
-  /** Pre-size both tables for an expected entry count: one rehash up front
-    * instead of log₂(n) doubling rehashes on a known-size insert stream
-    * (deserialize knows its exact counts; merge knows an upper bound). */
-  def ensureCapacity(pix: Int, pairs: Int): Unit = {
-    while (pix * 2 > pixKeys.length) growPix()
-    while (pairs * 2 > pairPix.length) growPair()
-  }
-
-  def mergeFrom(other: TileBuffer): Unit = {
-    ensureCapacity(nPix + other.nPix, nPair + other.nPair)
-    var s = 0
-    while (s < other.pixKeys.length) {
-      if (other.pixKeys(s) != 0) addTrips(other.pixKeys(s) - 1, other.pixTrips(s))
-      s += 1
-    }
-    s = 0
-    while (s < other.pairPix.length) {
-      if (other.pairPix(s) != 0) addPair(other.pairPix(s) - 1, other.pairUser(s))
-      s += 1
-    }
-  }
+  def mergeFrom(other: TileBuffer): Unit = other.runs.foreachEntry(put)
 
   /** The tile's cells as three parallel arrays — local pixel (ascending),
-    * distinct users, trip sum — ordered by sorting primitive packed
-    * `pix << 32 | slot` keys (deterministic, no boxing). */
+    * distinct users, trip sum — from one primitive sort of the concatenated
+    * runs: a run holds a pixel at most once, so a pixel's entries number
+    * its distinct users. */
   def cells(): (Array[Int], Array[Long], Array[Long]) = {
-    // distinct-user count per pixel: probe each pair's pixel slot once
-    val counts = new Array[Long](pixKeys.length)
-    val mask = pixKeys.length - 1
-    var s = 0
-    while (s < pairPix.length) {
-      if (pairPix(s) != 0) {
-        val pk = pairPix(s)
-        var i = ((pk - 1) * 0x9E3779B1) & mask
-        while (pixKeys(i) != pk) i = (i + 1) & mask
-        counts(i) += 1
-      }
-      s += 1
-    }
-    val order = new Array[Long](nPix)
+    val all = new Array[Long](entries)
     var o = 0
-    s = 0
-    while (s < pixKeys.length) {
-      if (pixKeys(s) != 0) { order(o) = ((pixKeys(s) - 1).toLong << 32) | s; o += 1 }
-      s += 1
-    }
-    java.util.Arrays.sort(order)
-    val pix = new Array[Int](nPix); val users = new Array[Long](nPix); val trips = new Array[Long](nPix)
+    runs.foreachValue { r => System.arraycopy(r, 0, all, o, r.length); o += r.length }
+    java.util.Arrays.sort(all)
+    var m = 0
     var i = 0
-    while (i < nPix) {
-      val slot = order(i).toInt
-      pix(i) = (order(i) >>> 32).toInt; users(i) = counts(slot); trips(i) = pixTrips(slot)
+    while (i < all.length) {
+      if (i == 0 || (all(i) >>> 32) != (all(i - 1) >>> 32)) m += 1
+      i += 1
+    }
+    val pix = new Array[Int](m); val users = new Array[Long](m); val trips = new Array[Long](m)
+    var c = -1
+    i = 0
+    while (i < all.length) {
+      val p = (all(i) >>> 32).toInt
+      if (c < 0 || pix(c) != p) { c += 1; pix(c) = p }
+      users(c) += 1
+      trips(c) += all(i) & Codec.U32Max
       i += 1
     }
     (pix, users, trips)
   }
 
+  /** `(user, len, run)` records after the user count. */
   def serialize(): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 + 12 * nPix + 12 * nPair)
-    bb.putInt(nPix); bb.putInt(nPair)
-    var s = 0
-    while (s < pixKeys.length) {
-      if (pixKeys(s) != 0) { bb.putInt(pixKeys(s) - 1); bb.putLong(pixTrips(s)) }
-      s += 1
-    }
-    s = 0
-    while (s < pairPix.length) {
-      if (pairPix(s) != 0) { bb.putInt(pairPix(s) - 1); bb.putLong(pairUser(s)) }
-      s += 1
+    val bb = java.nio.ByteBuffer.allocate(4 + 12 * runs.size + 8 * entries)
+    bb.putInt(runs.size)
+    runs.foreachEntry { (user, run) =>
+      bb.putLong(user); bb.putInt(run.length)
+      var i = 0
+      while (i < run.length) { bb.putLong(run(i)); i += 1 }
     }
     bb.array()
   }
@@ -193,13 +104,59 @@ object TileBuffer {
   def deserialize(bytes: Array[Byte]): TileBuffer = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val buf = new TileBuffer()
-    val np = bb.getInt; val nq = bb.getInt
-    buf.ensureCapacity(np, nq) // exact counts known — size once, no rehashes
-    var i = 0
-    while (i < np) { buf.addTrips(bb.getInt, bb.getLong); i += 1 }
-    i = 0
-    while (i < nq) { buf.addPair(bb.getInt, bb.getLong); i += 1 }
+    var u = bb.getInt
+    while (u > 0) {
+      val user = bb.getLong
+      val run = new Array[Long](bb.getInt)
+      var i = 0
+      while (i < run.length) { run(i) = bb.getLong; i += 1 }
+      buf.runs.update(user, run)
+      buf.entries += run.length
+      u -= 1
+    }
     buf
+  }
+
+  /** A3: merge two pixel-ascending, pixel-unique packed runs (localPix << 32
+    * | trips). A pixel in both runs gets the sum of its trips, saturating at
+    * u32 max as the reference does on merge (Diffs/HeatMapExtensions.cs:113-117);
+    * the clamp also keeps trips inside the packed low 32 bits. */
+  def mergeRuns(a: Array[Long], b: Array[Long]): Array[Long] = {
+    val out = new Array[Long](a.length + b.length)
+    var i = 0; var j = 0; var n = 0
+    while (i < a.length || j < b.length) {
+      val pa = if (i < a.length) a(i) >>> 32 else Long.MaxValue
+      val pb = if (j < b.length) b(j) >>> 32 else Long.MaxValue
+      out(n) =
+        if (pa < pb) { i += 1; a(i - 1) }
+        else if (pb < pa) { j += 1; b(j - 1) }
+        else {
+          i += 1; j += 1
+          (pa << 32) | Codec.saturatingAddU32(a(i - 1) & Codec.U32Max, b(j - 1) & Codec.U32Max)
+        }
+      n += 1
+    }
+    java.util.Arrays.copyOf(out, n)
+  }
+
+  /** `run` as one pixel-ascending, pixel-unique run. A run that already is
+    * one (a linear check) is returned as is; otherwise it is sorted in place
+    * and repeated pixels are combined with the u32 saturating add. */
+  def normalize(run: Array[Long]): Array[Long] = {
+    var i = 1
+    while (i < run.length && (run(i - 1) >>> 32) < (run(i) >>> 32)) i += 1
+    if (i >= run.length) return run
+    java.util.Arrays.sort(run)
+    var n = 1
+    i = 1
+    while (i < run.length) {
+      if ((run(i) >>> 32) == (run(n - 1) >>> 32))
+        run(n - 1) = (run(i) & ~Codec.U32Max) |
+          Codec.saturatingAddU32(run(n - 1) & Codec.U32Max, run(i) & Codec.U32Max)
+      else { run(n) = run(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(run, n)
   }
 }
 
@@ -234,17 +191,8 @@ case class TileUsersAgg(
   override def update(buf: TileBuffer, input: InternalRow): TileBuffer = {
     val u = userCol.eval(input)
     val p = pixelsCol.eval(input)
-    if (u != null && p != null) {
-      val user = u.asInstanceOf[Long]
-      val ad = p.asInstanceOf[ArrayData]
-      // iterate in place — toLongArray would copy the run per input row
-      val n = ad.numElements()
-      var i = 0
-      while (i < n) {
-        buf.addPacked(user, ad.getLong(i))
-        i += 1
-      }
-    }
+    if (u != null && p != null)
+      buf.addRow(u.asInstanceOf[Long], p.asInstanceOf[ArrayData].toLongArray()) // a copy the buffer keeps
     buf
   }
 

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.agg.{HeatmapAgg, Pyramid}
 import graft.core.Codec
+import graft.functions.TileBuffer
 import graft.io.TileStore
 import graft.model.Schemas.{GlobalPixel, TileVisit, Track}
 import graft.raster.Rasterize
@@ -26,8 +27,9 @@ import graft.raster.Rasterize
  *   3. MERGE the runs into the persistent user_tiles relation — one
  *      `TileVisit` row per (tkey, user_id), partitioned by the tile's own
  *      bucket — reading ONLY the dirty bucket partitions; runs of the same
- *      key merge by a sorted-run saturating add (`mergeRuns`, the
- *      reference's per-pixel merge, Diffs/HeatMapExtensions.cs:49-131)
+ *      key merge by a sorted-run saturating add (`TileBuffer.mergeRuns`,
+ *      the kernel `TileUsersAgg` merges its runs with too — the reference's
+ *      per-pixel merge, Diffs/HeatMapExtensions.cs:49-131)
  *   4. recompute the global z14 layer ONLY for dirty tiles
  *      (Worker.cs:167-222) with the flagship's kernel,
  *      `HeatmapAgg.tileCells` + `cellsToPixels`. Its users >= k HAVING also
@@ -70,28 +72,6 @@ object Incremental {
 
   private def pbOf(df: DataFrame): DataFrame =
     df.withColumn("pb", TileStore.bucketCol(tileOf(col("gx")), tileOf(col("gy"))))
-
-  /** A3: merge two sorted packed pixel runs (localPix << 32 | trips). A
-    * pixel in both runs gets the sum of its trips, saturating at u32 max as
-    * the reference does on merge (Diffs/HeatMapExtensions.cs:113-117); the
-    * clamp also keeps trips inside the packed low 32 bits. */
-  private[pipeline] def mergeRuns(a: Array[Long], b: Array[Long]): Array[Long] = {
-    val out = new Array[Long](a.length + b.length)
-    var i = 0; var j = 0; var n = 0
-    while (i < a.length || j < b.length) {
-      val pa = if (i < a.length) a(i) >>> 32 else Long.MaxValue
-      val pb = if (j < b.length) b(j) >>> 32 else Long.MaxValue
-      out(n) =
-        if (pa < pb) { i += 1; a(i - 1) }
-        else if (pb < pa) { j += 1; b(j - 1) }
-        else {
-          i += 1; j += 1
-          (pa << 32) | Codec.saturatingAddU32(a(i - 1) & Codec.U32Max, b(j - 1) & Codec.U32Max)
-        }
-      n += 1
-    }
-    java.util.Arrays.copyOf(out, n)
-  }
 
   /** Process one id-window batch of tracks. Returns the committed version
     * (or skipped=true when the window was already committed). */
@@ -157,7 +137,7 @@ object Incremental {
         .select("user_id", "tkey", "pixels").as[TileVisit].union(visits)
     val merged = runs.repartition(col("tkey"), col("user_id")).mapPartitions { it =>
       val byKey = new java.util.HashMap[(Long, Long), TileVisit]()
-      it.foreach(v => byKey.merge((v.tkey, v.user_id), v, (a, b) => a.copy(pixels = mergeRuns(a.pixels, b.pixels))))
+      it.foreach(v => byKey.merge((v.tkey, v.user_id), v, (a, b) => a.copy(pixels = TileBuffer.mergeRuns(a.pixels, b.pixels))))
       byKey.values().iterator().asScala
     }.localCheckpoint(false)
 

@@ -783,17 +783,18 @@ object GraftQueries {
     }),
 
     // the input_hint-shaped path end-to-end: Iceberg-shaped image+caption
-    // rows → derived tracks → the flagship's tile-grain z14 + tile-local
-    // pyramid (nothing persisted: the two branches share one tile
-    // exchange). DuckDB recomputes the pyramid from the same tracks'
-    // pixel rows, which imgRasterDump writes for it.
+    // rows → derived tracks → the flagship's tile-grain z14 layer, then
+    // every level from it by the ancestor explode `Incremental` splices
+    // with (one reference to the tile relation, so the final tile_users
+    // aggregate runs once; nothing persisted). DuckDB recomputes the
+    // pyramid from the same tracks' pixel rows, which imgRasterDump writes
+    // for it.
     "q_hm_from_images" -> ((s, d) => {
       implicit val sp: SparkSession = s
       imgRasterDump(s)
-      val tc = graft.agg.HeatmapAgg.tileCells(graft.raster.Rasterize.tileVisits(
-        HeatmapPipeline.tracks(HeatmapPipeline.images(ImgPipelineRows))))
-      graft.agg.HeatmapAgg.cellsToPixels(tc).toDF()
-        .unionByName(graft.agg.Pyramid.lowerLevelsFromTiles(tc, graft.agg.HeatmapAgg.KAnonymity).toDF())
+      val z14 = graft.agg.HeatmapAgg.cellsToPixels(graft.agg.HeatmapAgg.tileCells(
+        graft.raster.Rasterize.tileVisits(HeatmapPipeline.tracks(HeatmapPipeline.images(ImgPipelineRows)))))
+      graft.agg.Pyramid.mergePartials(graft.agg.Pyramid.ancestorPartials(z14)).toDF()
         .groupBy(col("z"))
         .agg(count(lit(1)).as("pixels"), sum(col("trips")).cast("long").as("trips"))
     }),

@@ -53,6 +53,58 @@ class HeatmapAggSpec extends AnyFunSuite {
     assert(trips.toSeq === Seq(11L, 1L, 4L))
   }
 
+  private def cellsOf(b: graft.functions.TileBuffer) = {
+    val (pix, users, trips) = b.cells()
+    (pix.toSeq, users.toSeq, trips.toSeq)
+  }
+
+  test("TileBuffer round-trip: empty buffer and user ids 0, -1, Long.MinValue, Long.MaxValue") {
+    import graft.functions.TileBuffer
+    val empty = TileBuffer.deserialize(new TileBuffer().serialize())
+    assert(empty.runs.isEmpty && empty.entries === 0)
+    assert(cellsOf(empty) === ((Seq.empty, Seq.empty, Seq.empty)))
+    val ids = Seq(0L, -1L, Long.MinValue, Long.MaxValue)
+    val b = new TileBuffer()
+    ids.zipWithIndex.foreach { case (u, i) =>
+      b.addRow(u, Array((5L << 32) | (i + 1), ((10L + i) << 32) | 7L))
+    }
+    val rt = TileBuffer.deserialize(b.serialize())
+    assert(rt.entries === b.entries)
+    assert(rt.runs.keys.toSet === ids.toSet)
+    ids.foreach(u => assert(rt.runs(u).toSeq === b.runs(u).toSeq, s"user $u"))
+    assert(cellsOf(rt) === ((Seq(5, 10, 11, 12, 13), Seq(4L, 1L, 1L, 1L, 1L), Seq(10L, 7L, 7L, 7L, 7L))))
+  }
+
+  test("TileBuffer clamps one user's trips per pixel at u32; the per-pixel sum stays Long (A3)") {
+    import graft.core.Codec.U32Max
+    val a = new graft.functions.TileBuffer()
+    a.addRow(4L, Array((3L << 32) | (U32Max - 2), (8L << 32) | 1L))
+    val b = new graft.functions.TileBuffer()
+    b.addRow(4L, Array((3L << 32) | 10L))
+    a.mergeFrom(graft.functions.TileBuffer.deserialize(b.serialize()))
+    assert(a.runs(4L).toSeq === Seq((3L << 32) | U32Max, (8L << 32) | 1L))
+    assert(cellsOf(a) === ((Seq(3, 8), Seq(1L, 1L), Seq(U32Max, 1L))))
+    // a second user's trips add past u32 in the Long per-pixel sum
+    a.addRow(5L, Array((3L << 32) | 6L))
+    assert(cellsOf(a) === ((Seq(3, 8), Seq(2L, 1L), Seq(U32Max + 6L, 1L))))
+  }
+
+  test("TileBuffer normalizes an unsorted run: descending with repeated pixels == pre-normalized") {
+    import graft.core.Codec.U32Max
+    def run(ps: (Long, Long)*): Array[Long] = ps.map { case (p, t) => (p << 32) | t }.toArray
+    val raw = run((9, 2), (9, 1), (7, 4), (5, 1), (5, U32Max - 1), (5, 3), (2, 6))
+    val pre = run((2, 6), (5, U32Max), (7, 4), (9, 3))
+    assert(graft.functions.TileBuffer.normalize(raw.clone()).toSeq === pre.toSeq)
+    val a = new graft.functions.TileBuffer()
+    a.addRow(1L, raw)
+    a.addRow(2L, run((5, 1), (3, 1), (5, 1)))
+    val b = new graft.functions.TileBuffer()
+    b.addRow(1L, pre)
+    b.addRow(2L, run((3, 1), (5, 2)))
+    assert(cellsOf(a) === cellsOf(b))
+    assert(cellsOf(a) === ((Seq(2, 3, 5, 7, 9), Seq(1L, 1L, 2L, 1L, 1L), Seq(6L, 1L, U32Max + 2L, 4L, 3L))))
+  }
+
   test("tileVisits: packed runs reproduce pixelKeys exactly") {
     implicit val s: SparkSession = spark
     import s.implicits._

@@ -40,8 +40,8 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     implicit val s: SparkSession = spark
     import s.implicits._
     val tracks = s.createDataset(testTracks)
-    // two commits whose (tkey, user) keys overlap, so `mergeRuns` joins the
-    // second window's runs onto the first window's stored ones
+    // two commits whose (tkey, user) keys overlap, so `TileBuffer.mergeRuns`
+    // joins the second window's runs onto the first window's stored ones
     val half = N / 2
     def keys(ds: org.apache.spark.sql.Dataset[Track]) =
       Rasterize.tileVisits(ds).map(v => (v.tkey, v.user_id)).collect().toSet

@@ -272,7 +272,7 @@ class IncrementalSpec extends AnyFunSuite {
     import graft.core.Codec.U32Max
     def run(ps: (Long, Long)*): Array[Long] = ps.map { case (p, t) => (p << 32) | t }.toArray
     def pairs(a: Array[Long]): Seq[(Long, Long)] = a.toSeq.map(e => (e >>> 32, e & U32Max))
-    def merge(a: Array[Long], b: Array[Long]) = pairs(Incremental.mergeRuns(a, b))
+    def merge(a: Array[Long], b: Array[Long]) = pairs(graft.functions.TileBuffer.mergeRuns(a, b))
     assert(merge(run((1, 2), (5, 1)), run((3, 4), (9, 1))) === Seq((1, 2), (3, 4), (5, 1), (9, 1)))
     assert(merge(run((1, 2), (3, 1), (7, 5)), run((3, 4), (7, 1), (8, 2))) ===
       Seq((1, 2), (3, 5), (7, 6), (8, 2)))

@@ -162,6 +162,16 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!mvtPlan.contains("Exchange"), mvtPlan)
   }
 
+  test("q_hm_from_images: ONE final tile_users aggregate, nothing persisted") {
+    implicit val s: SparkSession = spark
+    val df = graft.queries.GraftQueries.queries("q_hm_from_images")(s, sf)
+    assert(df.count() === 15) // one row per zoom level
+    val plan = physical(df)
+    assert("functions=\\[tile_users\\(".r.findAllIn(plan).size === 1, plan)
+    assert("functions=\\[partial_tile_users\\(".r.findAllIn(plan).size === 1, plan)
+    assert(!plan.contains("InMemory"), plan)
+  }
+
   test("slippy_cell is a native expression, not a UDF") {
     implicit val s: SparkSession = spark
     import s.implicits._
