@@ -246,9 +246,10 @@ object Ann {
     * CONTRACT — this method alone is neither atomic nor idempotent: a
     * crash mid-append leaves a partially visible batch, and re-invoking
     * after a failure duplicates vec_ids (mode "append", no marker).
-    * `graft.ann.IvfService` brackets it with the INFLIGHT/HEAD commit +
-    * crash-excision machinery the dedup indexes use — a resident service
-    * appends through IT, never through this method directly. */
+    * `graft.ann.IvfService` runs it only inside an uncommitted
+    * `index/v<N+1>` that HEAD moves to after it returns (the versioned
+    * protocol the dedup indexes use) — a resident service appends through
+    * IT, never through this method directly. */
   def appendIvf(newEmb: DataFrame, dir: String)(implicit spark: SparkSession): Unit = {
     import spark.implicits._
     graft.dedup.IndexFiles.recover(dir, "vectors")

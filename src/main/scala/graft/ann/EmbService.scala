@@ -1,19 +1,18 @@
 package graft.ann
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.dedup.{ClusterModality, IndexService, IndexTable}
+import graft.dedup.{ClusterModality, IndexService}
 
 /**
  * RESUMABLE incremental EMBEDDING dedup service — the `IndexService` loop
  * bound to the persisted sign-LSH embedding index (`EmbIndex`), completing
  * the near-dup service triad: text `DedupService`, image `PhashService`,
  * embeddings here. Input rows: (vec_id: Long, embedding: Array[Float]).
- * At every committed point the labels equal batch-mode `Ann.lshClusters`
- * of every vector below the cursor (EmbServiceSpec + the
- * q_emb_svc_clusters oracle).
+ * The index lives in `index/v<N>/vecs` under the same versioned HEAD
+ * commit as every service's. At every committed point the labels equal
+ * batch-mode `Ann.lshClusters` of every vector below the cursor
+ * (CrossSignalServiceSpec + the q_emb_svc_clusters oracle).
  */
 object EmbService {
 
@@ -25,8 +24,6 @@ object EmbService {
                           maxBucket: Int = Int.MaxValue)
       extends ClusterModality {
     val idCol = "vec_id"
-    val tables = Seq(IndexTable("vecs", partitioned = true, "bp", "vec_id"))
-    def built(idxDir: String): Boolean = Files.exists(Paths.get(idxDir, "vecs"))
     def build(batch: DataFrame, idxDir: String)(implicit s: SparkSession): Unit =
       EmbIndex.build(batch.select("vec_id", "embedding"), idxDir, nPlanes)
     def firstPairs(batch: DataFrame)(implicit s: SparkSession): DataFrame =
@@ -43,9 +40,6 @@ object EmbService {
 
   def labels(stateDir: String)(implicit spark: SparkSession): DataFrame =
     IndexService.labels(stateDir)
-
-  def recover(stateDir: String)(implicit spark: SparkSession): Unit =
-    IndexService.recover(stateDir, EmbLsh())
 
   def run(vecs: DataFrame, stateDir: String, batchSize: Long,
           threshold: Double = 0.95, nPlanes: Int = 12,

@@ -1,85 +1,55 @@
 package graft.ann
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+
+import graft.dedup.IndexService
 
 /**
  * RESUMABLE IVF index maintenance — the embedding leg of the service triad
  * (text `DedupService`, image `PhashService`, embeddings here). The IVF
  * index carries no clustering state, so this service is the
- * commit-machinery subset: id-range batching from a committed cursor,
- * INFLIGHT/HEAD atomic commits, and crash EXCISION of half-appended
- * batches — closing `Ann.appendIvf`'s documented non-atomic /
- * non-idempotent gap (a crash mid-append left a partially visible batch;
- * a blind retry duplicated vec_ids).
+ * commit-protocol subset of `IndexService`: id-range batching from a
+ * committed cursor and immutable index versions under one HEAD commit —
+ * closing `Ann.appendIvf`'s documented non-atomic / non-idempotent gap (a
+ * crash mid-append left a partially visible batch; a blind retry
+ * duplicated vec_ids).
  *
  * State layout under `stateDir`:
- *   index/centroids, index/vectors  the persisted IVF index (`Ann`)
- *   HEAD                            text "version cursor" — the commit point
- *   INFLIGHT                        text "<cursor>" crash marker
+ *   index/v<N>/{centroids,vectors,NLISTS}  the persisted IVF index (`Ann`),
+ *                                          one immutable dir per version
+ *   HEAD                                   text "version cursor" — the commit point
  *
- * Recovery mirrors the dedup services: INFLIGHT == HEAD.cursor means the
- * batch never committed — its vectors are excised by rewriting the list
- * table filtered to vec_id < cursor (crash-safe two-rename); a first-build
- * crash drops the whole index. After recovery a re-run reprocesses the
- * batch deterministically — exactly-once index contents from
- * at-least-once execution (IvfServiceSpec injects both crash points).
+ * A crashed batch leaves only `index/v<HEAD+1>`, which the next run deletes
+ * before anything else (`IndexService.drain`); the batch then re-runs
+ * deterministically — exactly-once index contents from at-least-once
+ * execution (IvfServiceSpec plants the crash points). A state whose
+ * HEAD > 0 has no `index/v<HEAD>` was written by an older layout and is
+ * refused before any file changes.
  */
 object IvfService {
 
-  type Head = graft.dedup.IndexService.Head
+  type Head = IndexService.Head
 
-  private def inflightFile(stateDir: String) = Paths.get(stateDir, "INFLIGHT")
-  def indexDir(stateDir: String): String = Paths.get(stateDir, "index").toString
+  /** The committed index, `index/v<HEAD>`. */
+  def indexDir(stateDir: String): String = IndexService.indexDir(stateDir)
 
-  def readHead(stateDir: String): Head = graft.dedup.IndexService.readHead(stateDir)
-
-  /** Excise a batch that crashed between its first index mutation and the
-    * HEAD commit. No-op when the state is clean. */
-  def recover(stateDir: String)(implicit spark: SparkSession): Unit = {
-    val inflight = inflightFile(stateDir)
-    if (!Files.exists(inflight)) return
-    val started = new String(Files.readAllBytes(inflight), "UTF-8").trim.toLong
-    val head = readHead(stateDir)
-    if (started == head.cursor) {
-      val idx = indexDir(stateDir)
-      if (head.version == 0L) graft.stream.StreamDedup.deleteTree(idx)
-      else {
-        graft.dedup.IndexFiles.recover(idx, "vectors")
-        graft.dedup.IndexFiles.rewriteFiltered(idx, "vectors", partitioned = true,
-          col("vec_id") < head.cursor, partCol = "list_id")
-      }
-      println(s"[ivf-service] recovered: excised uncommitted batch at cursor=$started")
-    }
-    Files.delete(inflight)
-  }
+  def readHead(stateDir: String): Head = IndexService.readHead(stateDir)
 
   /** Drain every pending batch of `vecs` (columns (vec_id, embedding); ids
     * assigned monotonically). The first non-empty batch BUILDS the index
     * (trains centroids); later batches append with frozen centroids —
     * production IVF's posture (retraining is a rebuild). `compactEvery`
-    * compacts the fragmented list table after every Nth committed version. */
+    * compacts the fragmented list table in every Nth version before it
+    * commits. The last 2 index versions are kept. */
   def run(vecs: DataFrame, stateDir: String, batchSize: Long, nLists: Int = 16,
           iters: Int = 3, compactEvery: Int = 0)(
       implicit spark: SparkSession): Head = {
-    Files.createDirectories(Paths.get(stateDir))
-    recover(stateDir)
-    val idx = indexDir(stateDir)
-    // crashed-compaction rollback is owned by the Ann layer: appendIvf and
-    // ivfTopKIndexed both run IndexFiles.recover("vectors") first-thing, so
-    // a compaction that died between its two renames heals on the next
-    // append/probe (IvfServiceSpec pins the scenario end-to-end)
-    // the shared cursor drain (ONE implementation of the commit protocol —
-    // min/max guards, sparse jumps, INFLIGHT/HEAD bracket live in
-    // IndexService.drain; only the per-batch index mutation is IVF's)
-    graft.dedup.IndexService.drain(
-      vecs.select("vec_id", "embedding"), "vec_id", stateDir, batchSize) { (batch, _, _) =>
-      if (!Files.exists(Paths.get(idx, "NLISTS"))) Ann.buildIvfIndex(batch, idx, nLists, iters)
+    IndexService.requireLayout(stateDir, "index")
+    IndexService.drain(
+      vecs.select("vec_id", "embedding"), "vec_id", stateDir, batchSize) { (batch, head, idx) =>
+      if (head.version == 0L) Ann.buildIvfIndex(batch, idx, nLists, iters)
       else Ann.appendIvf(batch, idx)
-    } { (committed, _) =>
-      if (compactEvery > 0 && committed.version % compactEvery == 0) Ann.compactIvf(idx)
-    }
+      if (compactEvery > 0 && (head.version + 1) % compactEvery == 0) Ann.compactIvf(idx)
+    } { (committed, _) => IndexService.dropVersionsUpTo(stateDir, committed.version - 2) }
   }
 }

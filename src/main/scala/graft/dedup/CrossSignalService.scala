@@ -1,6 +1,6 @@
 package graft.dedup
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -11,13 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * the text MinHash-LSH index and the embedding sign-LSH index are both
  * probed, the two pair relations UNION over the shared id space, and ONE
  * `incrementalDelta` fold updates the standing clustering — committed
- * atomically under the same INFLIGHT/HEAD machinery as every other
- * modality (a crash mid-append on EITHER index is excised on resume).
+ * atomically under the same versioned HEAD protocol as every other
+ * modality (a crash mid-append on EITHER index leaves only versions above
+ * HEAD, deleted on resume).
  *
  * Input rows: (doc_id, text, embedding) — the documents table joined with
- * its embeddings on the shared id. Index layout under `stateDir/index`:
- * `text/{bands,shingles}` (LshIndex) + `emb/vecs` (EmbIndex); excision
- * rewrites all three tables to the committed cursor.
+ * its embeddings on the shared id. Index layout under `stateDir/index/v<N>`:
+ * `text/{bands,shingles}` (LshIndex) + `emb/vecs` (EmbIndex), one
+ * immutable version of both per commit.
  */
 object CrossSignalService {
 
@@ -28,12 +29,6 @@ object CrossSignalService {
                                nPlanes: Int = 12, maxBucket: Int = Int.MaxValue)
       extends ClusterModality {
     val idCol = "doc_id"
-    val tables = Seq(
-      IndexTable("text/bands", partitioned = true, "bpb", "doc_id"),
-      IndexTable("text/shingles", partitioned = false, "bpb", "doc_id"),
-      IndexTable("emb/vecs", partitioned = true, "bp", "vec_id"))
-    def built(idxDir: String): Boolean =
-      Files.exists(Paths.get(idxDir, "text", "bands"))
     private def textDir(idxDir: String) = Paths.get(idxDir, "text").toString
     private def embDir(idxDir: String) = Paths.get(idxDir, "emb").toString
     private def embRows(batch: DataFrame): DataFrame =
@@ -66,9 +61,6 @@ object CrossSignalService {
 
   def labels(stateDir: String)(implicit spark: SparkSession): DataFrame =
     IndexService.labels(stateDir)
-
-  def recover(stateDir: String)(implicit spark: SparkSession): Unit =
-    IndexService.recover(stateDir, CrossSignal())
 
   /** `rows` needs (doc_id, text, embedding); ids shared across signals. */
   def run(rows: DataFrame, stateDir: String, batchSize: Long,

@@ -1,7 +1,5 @@
 package graft.dedup
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,13 +10,14 @@ import org.apache.spark.sql.functions._
  * store fixes with atomic data+cursor commits) applied end-to-end to the
  * TEXT dedup pipeline. It is a thin binding of the
  * modality-generic `IndexService` loop (probe → append → fold → atomic
- * labels+cursor commit, O(dirty) bucketed label commits, crash excision —
- * see IndexService's scaladoc for the machinery) to the MinHash-LSH index:
+ * index+labels+cursor commit of immutable versions, O(dirty) bucketed
+ * label commits — see IndexService's scaladoc for the machinery) to the MinHash-LSH index:
  * the image pHash service (`PhashService`) runs the identical engine.
  *
  * At every committed point `labels/v<version>` is exactly the batch-mode
  * clustering of all documents below `cursor` (spec'd), and a crashed batch
- * is excised and deterministically re-run on resume.
+ * leaves only versions above HEAD, which the resume deletes before it
+ * deterministically re-runs the batch.
  */
 object DedupService {
 
@@ -31,9 +30,6 @@ object DedupService {
                            bands: Int = 8, maxBucket: Int = Int.MaxValue)
       extends ClusterModality {
     val idCol = "doc_id"
-    val tables = Seq(IndexTable("bands", partitioned = true, "bpb", "doc_id"),
-      IndexTable("shingles", partitioned = false, "bpb", "doc_id"))
-    def built(idxDir: String): Boolean = Files.exists(Paths.get(idxDir, "bands"))
     def build(batch: DataFrame, idxDir: String)(implicit s: SparkSession): Unit =
       LshIndex.build(batch, idxDir, numHashes, bands)
     def firstPairs(batch: DataFrame)(implicit s: SparkSession): DataFrame =
@@ -51,11 +47,6 @@ object DedupService {
   /** Current committed labels (id, cluster_id). */
   def labels(stateDir: String)(implicit spark: SparkSession): DataFrame =
     IndexService.labels(stateDir)
-
-  /** Excise a crashed batch (see IndexService.recover). Parameters other
-    * than the table layout are irrelevant to excision. */
-  def recover(stateDir: String)(implicit spark: SparkSession): Unit =
-    IndexService.recover(stateDir, TextLsh())
 
   /** Process every pending batch of `docs` (columns (doc_id, text); ids
     * assigned monotonically). Returns the committed head after draining.

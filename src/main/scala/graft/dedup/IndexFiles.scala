@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions.col
  * (`LshIndex`, `PhashIndex`, `Ann`'s IVF): append fragments their
  * hive-partitioned tables one file per touched directory per batch, so
  * probes open ~batches files per directory until a compaction rewrite.
- * Both rewrites here — compaction and the service's crash excision — go
- * through one staged two-rename swap.
+ * A service runs the compaction inside an uncommitted index version, so
+ * its crash strands only that version; a standalone index (no HEAD) relies
+ * on the staged two-rename swap and `recover` below.
  */
 private[graft] object IndexFiles {
 
@@ -21,29 +22,13 @@ private[graft] object IndexFiles {
     * a mixed layout. */
   def compactDir(dir: String, sub: String, partitioned: Boolean,
                  partCol: String = "bpb")(
-      implicit spark: SparkSession): Unit =
-    stagedRewrite(dir, sub, partitioned, partCol, identity)
-
-  /** Rewrite `dir/sub` keeping only rows matching `pred` — the crash
-    * recovery behind `DedupService`: a batch half-appended before the
-    * HEAD commit is excised by rewriting both index tables filtered to
-    * the committed cursor. Same two-rename crash safety as compaction
-    * (and, like it, rolled back by `recover` if interrupted). */
-  def rewriteFiltered(dir: String, sub: String, partitioned: Boolean,
-                      pred: org.apache.spark.sql.Column, partCol: String = "bpb")(
-      implicit spark: SparkSession): Unit =
-    stagedRewrite(dir, sub, partitioned, partCol, _.where(pred))
-
-  private def stagedRewrite(dir: String, sub: String, partitioned: Boolean,
-                            partCol: String,
-                            transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)(
       implicit spark: SparkSession): Unit = {
     val live = java.nio.file.Paths.get(dir, sub)
     val tmp = java.nio.file.Paths.get(dir, s"$sub.compacting")
     val old = java.nio.file.Paths.get(dir, s"$sub.old")
     graft.stream.StreamDedup.deleteTree(tmp.toString)
     graft.stream.StreamDedup.deleteTree(old.toString)
-    val df = transform(spark.read.parquet(live.toString))
+    val df = spark.read.parquet(live.toString)
     val writer =
       if (partitioned) df.repartition(col(partCol)).write.partitionBy(partCol)
       else df.coalesce(1).write

@@ -7,29 +7,18 @@ import org.apache.spark.sql.functions._
 
 import graft.io.TileStore
 
-/** One persisted index table of a modality: its subdir (may be nested,
-  * e.g. "text/bands"), hive-partitioning, and the id column the
-  * crash-excision rewrite filters on (tables of one modality can disagree
-  * — the cross-signal index mixes doc_id and vec_id tables). */
-final case class IndexTable(sub: String, partitioned: Boolean,
-                            partCol: String, idCol: String)
-
 /**
  * A near-dup index family pluggable into the resumable service loop: one
  * persisted, incrementally-appendable index (LshIndex / PhashIndex shape)
- * plus its pair operators. The service machinery (INFLIGHT/HEAD atomic
- * commits, crash excision, cursor batching, bucketed label store) is
- * modality-agnostic; everything hash-family-specific lives behind this
- * trait. Pairs frames must expose columns (a, b).
+ * plus its pair operators. The service machinery (versioned index and
+ * label dirs under one HEAD commit, cursor batching, bucketed label
+ * store) is modality-agnostic; everything hash-family-specific lives
+ * behind this trait. Every `idxDir` it is handed is an uncommitted
+ * `index/v<N>`. Pairs frames must expose columns (a, b).
  */
 trait ClusterModality {
   /** id column of the input rows (doc_id / id / vec_id). */
   def idCol: String
-  /** Every persisted index table — the crash-excision surface
-    * (`IndexFiles.rewriteFiltered`). */
-  def tables: Seq[IndexTable]
-  /** True once a build has produced the index under `idxDir`. */
-  def built(idxDir: String): Boolean
   def build(batch: DataFrame, idxDir: String)(implicit s: SparkSession): Unit
   /** Batch-internal pairs for the FIRST batch (no index to probe yet). */
   def firstPairs(batch: DataFrame)(implicit s: SparkSession): DataFrame
@@ -42,30 +31,30 @@ trait ClusterModality {
 
 /**
  * RESUMABLE incremental near-dup service, generic over the index modality
- * (text MinHash-LSH, image pHash blocks, …) — the INFLIGHT/HEAD commit +
- * crash-excision machinery `DedupService` proved out for text, extracted
- * so every persisted index runs the same validated loop:
+ * (text MinHash-LSH, image pHash blocks, …) — the versioned commit
+ * protocol `DedupService` proved out for text, extracted so every
+ * persisted index runs the same validated loop:
  *
  *   probe the persisted index (pairs vs indexed corpus + in-batch)
  *   → append the batch to the index
  *   → fold the pairs into the standing clustering (`incrementalDelta`)
- *   → commit labels + cursor ATOMICALLY
+ *   → commit index + labels + cursor ATOMICALLY
  *
  * State layout under `stateDir`:
- *   index/<tables>                the modality's persisted index
+ *   index/v<N>/<tables>           the modality's persisted index, one
+ *                                 immutable dir per version
  *   labels/v<N>/lb=<B>/…          immutable labels versions, RANGE-BUCKETED
  *                                 by lb = cluster_id / labelRangeWidth
  *   labels_by_id/v<N>/ib=<B>/…    the same relation keyed by id,
  *                                 ib = id / labelRangeWidth
  *   HEAD                          text "version cursor" — THE commit point
- *   INFLIGHT                      text "<cursor>" crash marker
  *   commits.jsonl                 per-commit write metrics (metadata only)
  *
- * This is the only layout `run` accepts. Every commit writes both label
- * projections before HEAD moves, so a state whose HEAD > 0 lacks
- * `labels_by_id/v<HEAD>` was written by an older layout: `run` refuses it
- * before touching any file (delete the state dir and re-run to rebuild it
- * from the source). Nothing is migrated in place.
+ * This is the only layout `run` accepts. Every commit writes all three
+ * relations' v<N> before HEAD moves to N, so a state whose HEAD > 0 lacks
+ * `labels_by_id/v<HEAD>` or `index/v<HEAD>` was written by an older
+ * layout: `run` refuses it before touching any file (delete the state dir
+ * and re-run to rebuild it from the source). Nothing is migrated in place.
  *
  * O(dirty) LABEL COMMITS — the labels table is hive-partitioned by the
  * RANGE bucket of cluster_id. Because cluster ids are member MINIMA and the
@@ -84,11 +73,11 @@ trait ClusterModality {
  * change; a row inside them can only move to lb(new_cluster), which is
  * dirty by construction.
  *
- * Crash safety is unchanged from DedupService (see its scaladoc): every
- * index mutation happens between INFLIGHT(cursor) and the HEAD commit;
- * recovery excises half-appended batches by rewriting the index tables
- * filtered to the committed cursor and deletes the orphan labels version
- * (hardlinked files delete like any other — links are per-version).
+ * Crash safety is the tile store's rule (see `drain`): versions are
+ * immutable, moving HEAD is the commit, and nothing above HEAD exists —
+ * a crashed batch leaves only `v<HEAD+1>` dirs, which the next run deletes
+ * before it does anything else (hardlinked files delete like any other —
+ * links are per-version).
  *
  * O(dirty) FOLD READS — the fold's endpoint→representative lookup reads
  * the SECOND projection of the same relation, `labels_by_id/v<N>/ib=<B>`
@@ -119,12 +108,15 @@ object IndexService {
   val DefaultLabelRangeWidth = 1L << 16
 
   private def headFile(stateDir: String) = Paths.get(stateDir, "HEAD")
-  private def inflightFile(stateDir: String) = Paths.get(stateDir, "INFLIGHT")
   private def commitsFile(stateDir: String) = Paths.get(stateDir, "commits.jsonl")
-  private[dedup] def indexDir(stateDir: String) = Paths.get(stateDir, "index").toString
-  private def labelsDir(stateDir: String, v: Long) = Paths.get(stateDir, "labels", s"v$v")
-  private[dedup] def labelsByIdDir(stateDir: String, v: Long) =
-    Paths.get(stateDir, "labels_by_id", s"v$v")
+  private def versionDir(stateDir: String, relation: String, v: Long) =
+    Paths.get(stateDir, relation, s"v$v")
+  private def labelsDir(stateDir: String, v: Long) = versionDir(stateDir, "labels", v)
+  private def labelsByIdDir(stateDir: String, v: Long) = versionDir(stateDir, "labels_by_id", v)
+
+  /** The committed index, `index/v<HEAD>` (absent before the first commit). */
+  private[graft] def indexDir(stateDir: String): String =
+    versionDir(stateDir, "index", readHead(stateDir).version).toString
 
   def readHead(stateDir: String): Head = {
     val f = headFile(stateDir)
@@ -152,47 +144,75 @@ object IndexService {
       .select("id", "cluster_id")
   }
 
-  /** Excise a batch that crashed between its first index mutation and the
-    * HEAD commit. Loud no-op when the state is clean. */
-  def recover(stateDir: String, modality: ClusterModality)(
-      implicit spark: SparkSession): Unit = {
-    val inflight = inflightFile(stateDir)
-    if (!Files.exists(inflight)) return
-    val started = new String(Files.readAllBytes(inflight), "UTF-8").trim.toLong
-    val head = readHead(stateDir)
-    if (started == head.cursor) {
-      // the batch never committed: excise its index rows + orphan labels
-      val idx = indexDir(stateDir)
-      if (head.version == 0L) {
-        // crash during the very first build: nothing committed, drop all
-        graft.stream.StreamDedup.deleteTree(idx)
-      } else modality.tables.foreach { t =>
-        IndexFiles.recover(idx, t.sub)
-        IndexFiles.rewriteFiltered(idx, t.sub, t.partitioned,
-          col(t.idCol) < head.cursor, t.partCol)
-      }
-      graft.stream.StreamDedup.deleteTree(labelsDir(stateDir, head.version + 1).toString)
-      graft.stream.StreamDedup.deleteTree(labelsByIdDir(stateDir, head.version + 1).toString)
-      println(s"[index-service] recovered: excised uncommitted batch at cursor=$started")
+  /** Refuse, before any file changes, a state this layout cannot read:
+    * every commit writes each of `relations`' v<N> before HEAD moves to N,
+    * so a HEAD without one was written by an older layout. */
+  private[graft] def requireLayout(stateDir: String, relations: String*): Unit = {
+    val v = readHead(stateDir).version
+    val missing = if (v == 0L) Nil
+      else relations.map(r => s"$r/v$v").filterNot(r => Files.exists(Paths.get(stateDir, r)))
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"service state $stateDir is at v$v but has no ${missing.mkString(" and no ")}: " +
+          "it was written by an older layout. " +
+          "Delete the state dir and re-run to rebuild it from the source.")
+  }
+
+  /** Every `<relation>/v<M>` dir of a service state, with its M. */
+  private def versionDirs(stateDir: String): Seq[(String, Long)] = {
+    def dirs(f: java.io.File) = Option(f.listFiles()).toSeq.flatten.filter(_.isDirectory)
+    dirs(new java.io.File(stateDir)).flatMap(dirs).flatMap { d =>
+      (if (d.getName.startsWith("v")) d.getName.drop(1).toLongOption else None).map(d.getPath -> _)
     }
-    Files.delete(inflight)
+  }
+
+  /** Retention: delete EVERY version dir at or below `floor`, not just the
+    * newest one, so a crash between a commit and its sweep strands nothing. */
+  private[graft] def dropVersionsUpTo(stateDir: String, floor: Long): Unit =
+    versionDirs(stateDir).collect {
+      case (d, v) if v <= floor => graft.stream.StreamDedup.deleteTree(d)
+    }
+
+  /** `to` as hardlinks of every file of `from` (`TileStore.linkDir`), minus
+    * the job markers a Spark append re-creates IN PLACE: truncating a
+    * linked `_SUCCESS` or its `.crc` would rewrite `from`'s inode too, so
+    * `to` drops those links and the append writes fresh files. */
+  private[graft] def carryIndex(from: Path, to: Path): Unit = {
+    TileStore.linkDir(from, to)
+    val s = Files.walk(to)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.toList
+        .filter(p => Set("_SUCCESS", "._SUCCESS.crc")(p.getFileName.toString))
+        .foreach(Files.delete)
+    } finally s.close()
   }
 
   /** The id-range cursor drain shared by every resumable index service
     * (this one and `graft.ann.IvfService` — ONE implementation of the
-    * subtle commit protocol): min/max guards, sparse-id jumps, and the
-    * INFLIGHT(cursor) → processBatch → HEAD-commit → INFLIGHT-delete
-    * bracket per batch. `processBatch(batch, head, newCursor)` runs every
-    * index mutation for the batch; its result feeds `afterCommit(committed
-    * head, result)` — the place for retention sweeps / metrics /
-    * compaction, AFTER the commit point so a crash there strands nothing.
-    * The caller runs its recovery BEFORE draining. */
+    * commit protocol, the tile store's: versions are immutable `v<N>`
+    * dirs, moving HEAD is the commit, and nothing above HEAD exists).
+    * Recovery is its first step and all of it: every `<relation>/v<M>`
+    * with M > HEAD is an uncommitted batch's leftover and is deleted. Then
+    * per batch: min/max guards and sparse-id jumps pick the id range,
+    * `index/v<N+1>` starts as hardlinks of `index/v<N>` (empty for the
+    * first batch), `processBatch(batch, head, index/v<N+1>)` writes every
+    * v<N+1> of the batch — index append, a due compaction, labels — and
+    * HEAD moves to N+1. The result feeds `afterCommit(committed head,
+    * result)`, the place for metrics and retention sweeps. The caller
+    * refuses an older layout (`requireLayout`) BEFORE draining. */
   private[graft] def drain[A](rows: DataFrame, idCol: String, stateDir: String,
       batchSize: Long)(
-      processBatch: (DataFrame, Head, Long) => A)(
+      processBatch: (DataFrame, Head, String) => A)(
       afterCommit: (Head, A) => Unit): Head = {
     require(batchSize > 0, "batchSize must be positive")
     var head = readHead(stateDir)
+    versionDirs(stateDir).collect {
+      case (d, v) if v > head.version =>
+        graft.stream.StreamDedup.deleteTree(d)
+        println(s"[index-service] recovered: deleted uncommitted $d")
+    }
+    Files.createDirectories(Paths.get(stateDir))
     val maxIdRow = rows.agg(max(col(idCol)), min(col(idCol))).head()
     if (maxIdRow.isNullAt(0)) return head // nothing to do
     val maxId = maxIdRow.getLong(0)
@@ -226,10 +246,10 @@ object IndexService {
       val batch = rows
         .where(col(idCol) >= head.cursor && col(idCol) < head.cursor + batchSize)
       val newCursor = math.min(head.cursor + batchSize, maxId + 1)
-      writeAtomic(inflightFile(stateDir), head.cursor.toString)
-      val result = processBatch(batch, head, newCursor)
+      val idx = versionDir(stateDir, "index", head.version + 1)
+      if (head.version > 0) carryIndex(versionDir(stateDir, "index", head.version), idx)
+      val result = processBatch(batch, head, idx.toString)
       writeAtomic(headFile(stateDir), s"${head.version + 1} $newCursor") // commit point
-      Files.delete(inflightFile(stateDir))
       head = Head(head.version + 1, newCursor)
       afterCommit(head, result)
     }
@@ -249,30 +269,13 @@ object IndexService {
     require(keepLabelVersions >= 1, "keepLabelVersions must be >= 1")
     require(labelRangeWidth > 0, "labelRangeWidth must be positive")
     val idc = modality.idCol
-    // refuse, before any mutation, a state this layout cannot read: every
-    // commit writes labels_by_id/v<N> before HEAD moves to N, so a HEAD
-    // without it was written by an older layout
-    val committed = readHead(stateDir)
-    if (committed.version > 0 && !Files.exists(labelsByIdDir(stateDir, committed.version)))
-      throw new IllegalStateException(
-        s"service state $stateDir is at v${committed.version} but has no " +
-          s"labels_by_id/v${committed.version}: it was written by an older layout. " +
-          "Delete the state dir and re-run to rebuild it from the source.")
-    Files.createDirectories(Paths.get(stateDir, "labels"))
-    recover(stateDir, modality)
-    val idx = indexDir(stateDir)
-    // a compaction that crashed between its two renames (post-commit, so
-    // INFLIGHT is gone and recover() above won't see it) leaves no live
-    // table dir + a .old backup; roll it back BEFORE built() looks, or the
-    // missing dir reads as "first build" and the batch-only labeling would
-    // overwrite the standing labels
-    modality.tables.foreach(t => IndexFiles.recover(idx, t.sub))
+    requireLayout(stateDir, "labels_by_id", "index")
     val lb = lbOf(labelRangeWidth) _
     val ib = lbOf(labelRangeWidth) _ // same range-bucket fn, keyed by id
-    drain(rows, idc, stateDir, batchSize) { (batch, head, _) =>
+    drain(rows, idc, stateDir, batchSize) { (batch, head, idx) =>
       val vdir = labelsDir(stateDir, head.version + 1)
       val ibVdir = labelsByIdDir(stateDir, head.version + 1)
-      if (!modality.built(idx)) {
+      val metrics = if (head.version == 0L) {
         // first non-empty batch: build the index, cluster internally,
         // write the FULL labeling (every bucket is dirty by definition)
         // into BOTH projections
@@ -367,6 +370,10 @@ object IndexService {
         CommitMetrics(written.size, carried, obs.get("rows").asInstanceOf[Long],
           ibWritten.size, ibCarried, foldReadRows)
       }
+      // a due compaction rewrites the uncommitted index version, last, so
+      // a crash in it strands only v<N+1>
+      if (compactEvery > 0 && (head.version + 1) % compactEvery == 0) modality.compact(idx)
+      metrics
     } { case (committed, m) =>
       // metrics AFTER the commit (metadata only, not part of the commit)
       Files.write(commitsFile(stateDir),
@@ -376,18 +383,9 @@ object IndexService {
           s""""ib_written_dirs": ${m.ibWrittenDirs}, "ib_carried_dirs": ${m.ibCarriedDirs}, """ +
           s""""fold_read_rows": ${m.foldReadRows}}""" + "\n").getBytes("UTF-8"),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-      // retention, after the commit (old versions are unreferenced).
-      // Sweep EVERY version at-or-below the floor, not just one — a crash
-      // between the commit and this delete must not strand a version
-      val floor = committed.version - keepLabelVersions
-      Seq("labels", "labels_by_id").foreach { root =>
-        Option(Paths.get(stateDir, root).toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith("v") &&
-            f.getName.drop(1).toLongOption.exists(_ <= floor))
-          .foreach(f => graft.stream.StreamDedup.deleteTree(f.getPath))
-      }
-      if (compactEvery > 0 && committed.version % compactEvery == 0)
-        modality.compact(idx)
+      // retention of index and label versions, after the commit (older
+      // versions are unreferenced)
+      dropVersionsUpTo(stateDir, committed.version - keepLabelVersions)
     }
   }
 

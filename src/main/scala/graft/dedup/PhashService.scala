@@ -1,18 +1,15 @@
 package graft.dedup
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /**
  * RESUMABLE incremental IMAGE dedup service — the `IndexService` loop
- * (probe → append → fold → atomic labels+cursor commit, crash excision,
- * O(dirty) bucketed label commits) bound to the persisted perceptual-hash
- * block index. Completes the service story round 5 left text-only: the
- * image loop the `PhashLoopProbe` harness validated piecewise now runs
- * under the same INFLIGHT/HEAD machinery, so a crash mid-append on the
- * image index is excised automatically instead of needing manual recovery.
+ * (probe → append → fold → atomic index+labels+cursor commit of immutable
+ * versions, O(dirty) bucketed label commits) bound to the persisted
+ * perceptual-hash block index. The block index lives in `index/v<N>` like
+ * every service's: a crash mid-append leaves only `index/v<HEAD+1>`, which
+ * the next run deletes before re-running the batch, so no manual recovery
+ * is ever needed.
  *
  * Input rows: (id: Long, phash: Long) — callers hash bytes upstream with
  * `ImageOps.computePhashes` (the q_img_dedup_e2e path). At every committed
@@ -27,8 +24,6 @@ object PhashService {
   final case class PhashBlocks(maxDist: Int = 3, maxBucket: Int = Int.MaxValue)
       extends ClusterModality {
     val idCol = "id"
-    val tables = Seq(IndexTable("blocks", partitioned = true, "bpb", "id"))
-    def built(idxDir: String): Boolean = Files.exists(Paths.get(idxDir, "blocks"))
     def build(batch: DataFrame, idxDir: String)(implicit s: SparkSession): Unit =
       PhashIndex.build(batch.select("id", "phash"), idxDir, maxDist)
     def firstPairs(batch: DataFrame)(implicit s: SparkSession): DataFrame =
@@ -45,9 +40,6 @@ object PhashService {
 
   def labels(stateDir: String)(implicit spark: SparkSession): DataFrame =
     IndexService.labels(stateDir)
-
-  def recover(stateDir: String)(implicit spark: SparkSession): Unit =
-    IndexService.recover(stateDir, PhashBlocks())
 
   def run(imgs: DataFrame, stateDir: String, batchSize: Long, maxDist: Int = 3,
           maxBucket: Int = Int.MaxValue, keepLabelVersions: Int = 2,

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
  * ATOMIC_MOVE over the target. Readers see either the old or the new
  * content, never a torn write — every cursor/HEAD/marker file in the
  * engine (tile store HEAD + EXPORTED, users-index files, the dedup
- * service's HEAD/INFLIGHT) commits through here, so a future durability
+ * services' HEAD) commits through here, so a future durability
  * change (e.g. fsync of the file or parent directory) lands in one spot.
  */
 object AtomicWrite {

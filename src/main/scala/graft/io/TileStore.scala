@@ -459,7 +459,7 @@ object TileStore {
   /** Hardlink every regular file under `from` into the same relative
     * location under `to` (no data copy — clean partitions carried forward
     * into the new immutable version). */
-  private def linkDir(from: Path, to: Path): Unit = {
+  private[graft] def linkDir(from: Path, to: Path): Unit = {
     val s = Files.walk(from)
     try {
       import scala.jdk.CollectionConverters._

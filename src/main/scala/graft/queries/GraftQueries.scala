@@ -511,7 +511,7 @@ object GraftQueries {
   private def phashSvcStateDir(s: SparkSession): String = {
     implicit val sp: SparkSession = s
     import sp.implicits._
-    val source = s"planted:$PhashQueryRows:v6"
+    val source = s"planted:$PhashQueryRows:v7"
     val marker = java.nio.file.Paths.get(PhashSvcStatePath + ".source")
     val fresh = java.nio.file.Files.exists(marker) &&
       new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == source
@@ -537,9 +537,10 @@ object GraftQueries {
   val IvfSvcRows = 500L
   private def ivfSvcStateDir(s: SparkSession, d: String): String = {
     implicit val sp: SparkSession = s
+    val source = s"$d:v7" // state layout tag: index/v<N> under HEAD
     val marker = java.nio.file.Paths.get(IvfSvcStatePath + ".source")
     val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == d
+      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == source
     if (!fresh) {
       java.nio.file.Files.deleteIfExists(marker)
       graft.stream.StreamDedup.deleteTree(IvfSvcStatePath)
@@ -549,7 +550,7 @@ object GraftQueries {
       IvfSvcStatePath, batchSize = 200, nLists = 16, iters = 3)
     if (!fresh) {
       java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.write(marker, d.getBytes("UTF-8"))
+      java.nio.file.Files.write(marker, source.getBytes("UTF-8"))
     }
     IvfSvcStatePath
   }
@@ -587,9 +588,10 @@ object GraftQueries {
   val EmbSvcRows = 500L
   private def embSvcStateDir(s: SparkSession, d: String): String = {
     implicit val sp: SparkSession = s
+    val source = s"$d:v7" // state layout tag: index/v<N> under HEAD
     val marker = java.nio.file.Paths.get(EmbSvcStatePath + ".source")
     val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == d
+      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == source
     if (!fresh) {
       java.nio.file.Files.deleteIfExists(marker)
       graft.stream.StreamDedup.deleteTree(EmbSvcStatePath)
@@ -600,7 +602,7 @@ object GraftQueries {
       labelRangeWidth = 125)
     if (!fresh) {
       java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.write(marker, d.getBytes("UTF-8"))
+      java.nio.file.Files.write(marker, source.getBytes("UTF-8"))
     }
     EmbSvcStatePath
   }
@@ -613,9 +615,10 @@ object GraftQueries {
   val CrossSvcStatePath = "/tmp/graft_oracle/cross_svc_state"
   private def crossSvcStateDir(s: SparkSession, d: String): String = {
     implicit val sp: SparkSession = s
+    val source = s"$d:v7" // state layout tag: index/v<N> under HEAD
     val marker = java.nio.file.Paths.get(CrossSvcStatePath + ".source")
     val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == d
+      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == source
     if (!fresh) {
       java.nio.file.Files.deleteIfExists(marker)
       graft.stream.StreamDedup.deleteTree(CrossSvcStatePath)
@@ -627,7 +630,7 @@ object GraftQueries {
       embThreshold = 0.2, nPlanes = 8, labelRangeWidth = 125)
     if (!fresh) {
       java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.write(marker, d.getBytes("UTF-8"))
+      java.nio.file.Files.write(marker, source.getBytes("UTF-8"))
     }
     CrossSvcStatePath
   }
@@ -1000,8 +1003,8 @@ object GraftQueries {
     }),
 
     // RESUMABLE IMAGE SERVICE end-to-end: the generic IndexService loop
-    // (INFLIGHT/HEAD atomic commits, O(dirty) bucketed label rewrites,
-    // crash excision) bound to the persisted pHash block index, driven over
+    // (immutable index/label versions under one HEAD commit, O(dirty)
+    // bucketed label rewrites) bound to the persisted pHash block index, driven over
     // the planted corpus in 4 batches. The committed labels must equal
     // batch-mode phashClusters of the whole corpus; DuckDB independently
     // closes its own brute-force pair recomputation with the recursive
@@ -1046,7 +1049,7 @@ object GraftQueries {
     }),
 
     // RESUMABLE EMBEDDING-INDEX SERVICE: IVF build + frozen-centroid
-    // appends under atomic cursor commits (crash-excised, duplicate-free —
+    // appends under atomic cursor commits (versioned, duplicate-free —
     // the service wrapper Ann.appendIvf alone lacks), then a full probe
     // over the service-maintained index — must equal brute-force top-k
     // over the same slice exactly.

@@ -10,7 +10,7 @@ import graft.synth.{ImageSynth, TraceSynth}
 
 /** The spark-submit service entry end-to-end: conf-driven, streaming and
   * batch modes, MVT tree exported, results equal across modes. */
-class ServiceMainSpec extends AnyFunSuite {
+class ServiceMainSpec extends AnyFunSuite with TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(4, "service-spec")
 
   private val N = 150
@@ -24,8 +24,8 @@ class ServiceMainSpec extends AnyFunSuite {
 
   private def runMode(mode: String, userThreshold: Int = 3): (String, Long) = {
     implicit val s: SparkSession = spark
-    val data = Files.createTempDirectory(s"svc-data-$mode").toString
-    val out = Files.createTempDirectory(s"svc-out-$mode").toString
+    val data = tempDir(s"svc-data-$mode")
+    val out = tempDir(s"svc-out-$mode")
     writeTracks(data)
     s.conf.set("spark.graft.mode", mode)
     s.conf.set("spark.graft.dataPath", data)
@@ -103,7 +103,7 @@ class ServiceMainSpec extends AnyFunSuite {
       val ph = ImageSynth.phashOf(i)
       Track(i, TraceSynth.userOf(ph, 6), TraceSynth.trace(ph))
     })
-    val out = Files.createTempDirectory("svc-incexp").toString
+    val out = tempDir("svc-incexp")
     val store = new graft.io.TileStore(s"$out/store")
     val mvtDir = s"$out/mvt"
 
@@ -185,7 +185,7 @@ class ServiceMainSpec extends AnyFunSuite {
     implicit val s: SparkSession = spark
     import s.implicits._
     def seed(threshold: Long) = {
-      val out = Files.createTempDirectory("svc-balexp").toString
+      val out = tempDir("svc-balexp")
       val store = new graft.io.TileStore(s"$out/store")
       val tracks = s.createDataset((0L until N).map { i =>
         val ph = ImageSynth.phashOf(i)

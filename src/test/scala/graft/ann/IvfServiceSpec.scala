@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * injected mid-append crashes, which previously (bare `Ann.appendIvf`)
  * left partial batches and duplicated vec_ids on retry.
  */
-class IvfServiceSpec extends AnyFunSuite {
+class IvfServiceSpec extends AnyFunSuite with graft.TempDirs {
   private implicit lazy val spark: SparkSession = graft.spark.Sessions.local(4, "ivf-service-spec")
 
   private def vecs(n: Int): Seq[(Long, Array[Float])] = {
@@ -53,14 +53,13 @@ class IvfServiceSpec extends AnyFunSuite {
     val state = java.nio.file.Files.createTempDirectory("ivf-service-crash").toString
     try {
       IvfService.run(df.where(col("vec_id") < 100), state, batchSize = 100, nLists = 8, iters = 2)
-      val head = IvfService.readHead(state)
-      val idx = IvfService.indexDir(state)
-      // simulate: INFLIGHT written, batch (partially) appended, HEAD unmoved
-      java.nio.file.Files.write(java.nio.file.Paths.get(state, "INFLIGHT"),
-        head.cursor.toString.getBytes("UTF-8"))
-      Ann.appendIvf(df.where(col("vec_id") >= 100 && col("vec_id") < 150), idx)
-      // resume: the orphan rows are excised, the batch re-runs exactly once
+      // simulate: batch (partially) appended into the next index version,
+      // HEAD unmoved
+      Ann.appendIvf(df.where(col("vec_id") >= 100 && col("vec_id") < 150),
+        graft.dedup.ServiceStates.nextIndex(state))
+      // resume: the orphan version is deleted, the batch re-runs exactly once
       IvfService.run(df, state, batchSize = 100, nLists = 8, iters = 2)
+      val idx = IvfService.indexDir(state)
       val ids = spark.read.parquet(s"$idx/vectors").select("vec_id").as[Long].collect()
       assert(ids.length === 300 && ids.toSet.size === 300,
         s"duplicate or missing vec_ids after crash recovery (${ids.length} rows)")
@@ -79,14 +78,16 @@ class IvfServiceSpec extends AnyFunSuite {
     val state = java.nio.file.Files.createTempDirectory("ivf-service-compact-crash").toString
     try {
       IvfService.run(df.where(col("vec_id") < 200), state, batchSize = 100, nLists = 8, iters = 2)
-      val idx = IvfService.indexDir(state)
-      // simulate Ann.compactIvf dying between its two renames: vectors
-      // gone, backup present, NLISTS intact — the append branch would
-      // otherwise write a fresh batch-only vectors table over it
+      // simulate Ann.compactIvf dying between its two renames inside the
+      // uncommitted next version: vectors gone, backup present, NLISTS
+      // intact — an append into that version would write a fresh
+      // batch-only vectors table
+      val next = graft.dedup.ServiceStates.nextIndex(state)
       java.nio.file.Files.move(
-        java.nio.file.Paths.get(idx, "vectors"),
-        java.nio.file.Paths.get(idx, "vectors.old"))
+        java.nio.file.Paths.get(next, "vectors"),
+        java.nio.file.Paths.get(next, "vectors.old"))
       IvfService.run(df, state, batchSize = 100, nLists = 8, iters = 2)
+      val idx = IvfService.indexDir(state)
       val ids = spark.read.parquet(s"$idx/vectors").select("vec_id").as[Long].collect()
       assert(ids.length === 300 && ids.toSet.size === 300,
         s"stranded or duplicated vec_ids after compaction-crash recovery (${ids.length} rows)")
@@ -121,17 +122,31 @@ class IvfServiceSpec extends AnyFunSuite {
     val df = data.toDF("vec_id", "embedding")
     val state = java.nio.file.Files.createTempDirectory("ivf-service-first").toString
     try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(state, "INFLIGHT"),
-        "0".getBytes("UTF-8"))
-      // partial first build (no NLISTS yet — crashed before the marker)
-      Ann.buildIvfIndex(df.where(col("vec_id") < 50), IvfService.indexDir(state),
-        nLists = 8, iters = 1)
-      java.nio.file.Files.delete(
-        java.nio.file.Paths.get(IvfService.indexDir(state), "NLISTS"))
+      // partial first build into index/v1 (no NLISTS yet — crashed before
+      // the marker), HEAD never written
+      val v1 = java.nio.file.Paths.get(state, "index", "v1").toString
+      Ann.buildIvfIndex(df.where(col("vec_id") < 50), v1, nLists = 8, iters = 1)
+      java.nio.file.Files.delete(java.nio.file.Paths.get(v1, "NLISTS"))
       IvfService.run(df, state, batchSize = 200, nLists = 8, iters = 2)
       val ids = spark.read.parquet(s"${IvfService.indexDir(state)}/vectors")
         .select("vec_id").as[Long].collect()
       assert(ids.length === 120 && ids.toSet.size === 120)
     } finally graft.stream.StreamDedup.deleteTree(state)
+  }
+
+  test("a state whose HEAD has no index/v<HEAD> is refused and left untouched") {
+    import spark.implicits._
+    val df = vecs(200).toDF("vec_id", "embedding")
+    val state = tempDir("ivf-service-legacy")
+    // the older layout: centroids, vectors and NLISTS directly in index/
+    IvfService.run(df.where(col("vec_id") < 100), state, batchSize = 100, nLists = 8, iters = 1)
+    graft.dedup.ServiceStates.unversionIndex(state)
+    val before = graft.dedup.ServiceStates.tree(state)
+    val e = intercept[IllegalStateException] {
+      IvfService.run(df, state, batchSize = 100, nLists = 8, iters = 1)
+    }
+    assert(e.getMessage.contains(state) && e.getMessage.contains("index/v1"),
+      s"refusal does not name the state and the missing index/v1: ${e.getMessage}")
+    assert(graft.dedup.ServiceStates.tree(state) === before, "the refused state was modified")
   }
 }

@@ -56,15 +56,13 @@ class CrossSignalServiceSpec extends AnyFunSuite {
       // re-run no-op
       assert(graft.ann.EmbService.run(vecsDf, state, batchSize = 20,
         threshold = 0.9, nPlanes = 12, maxBucket = noCap, labelRangeWidth = 16) === head)
-      // injected crash: INFLIGHT + half-appended next batch, HEAD unmoved
+      // injected crash: half-appended next index version, HEAD unmoved
       val more = corpus.map { case (id, _, v) => (id, v) } ++
         corpus.take(10).map { case (id, _, v) => (100L + id, v.clone()) } // dups of old
       val moreDf = more.toDF("vec_id", "embedding")
-      java.nio.file.Files.write(java.nio.file.Paths.get(state, "INFLIGHT"),
-        head.cursor.toString.getBytes("UTF-8"))
       graft.ann.EmbIndex.append(
         moreDf.where(col("vec_id") >= 100L && col("vec_id") < 105L),
-        s"$state/index", nPlanes = 12)
+        ServiceStates.nextIndex(state), nPlanes = 12)
       graft.ann.EmbService.run(moreDf, state, batchSize = 20,
         threshold = 0.9, nPlanes = 12, maxBucket = noCap, labelRangeWidth = 16)
       assert(labelMap(graft.ann.EmbService.labels(state)) ===
@@ -110,10 +108,8 @@ class CrossSignalServiceSpec extends AnyFunSuite {
         maxBucket = noCap, labelRangeWidth = 16) === head)
       val more = (corpus ++ corpus.take(5).map { case (id, t, v) => (100L + id, t, v) })
         .toDF("doc_id", "text", "embedding")
-      java.nio.file.Files.write(java.nio.file.Paths.get(state, "INFLIGHT"),
-        head.cursor.toString.getBytes("UTF-8"))
       LshIndex.append(more.where(col("doc_id") >= 100L).select("doc_id", "text"),
-        s"$state/index/text", bands = 8)
+        s"${ServiceStates.nextIndex(state)}/text", bands = 8)
       CrossSignalService.run(more, state, batchSize = 20,
         textThreshold = 0.8, bands = 8, embThreshold = 0.9, nPlanes = 12,
         maxBucket = noCap, labelRangeWidth = 16)

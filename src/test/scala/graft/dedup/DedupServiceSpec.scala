@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * crashes. Uncapped so the identity is unconditional (cap semantics have
  * their own oracles).
  */
-class DedupServiceSpec extends AnyFunSuite {
+class DedupServiceSpec extends AnyFunSuite with graft.TempDirs {
   private implicit lazy val spark: SparkSession = graft.spark.Sessions.local(4, "dedup-service-spec")
 
   private val sf = "/root/testdata/sf0.001"
@@ -63,11 +63,11 @@ class DedupServiceSpec extends AnyFunSuite {
         threshold = 0.8, bands = 8, maxBucket = noCap)
       assert(labelMap(DedupService.labels(state)) === batchModeLabels(half))
       // simulate a compaction dying between move(live -> .old) and
-      // move(staged -> live): live table gone, backup present, INFLIGHT
-      // long deleted (compaction runs post-commit) — so built() would see
-      // a missing table and relapse into the first-build branch, wiping
-      // the standing labels, unless run() rolls the rename back first
-      val idx = IndexService.indexDir(state)
+      // move(staged -> live) inside the uncommitted next version: its live
+      // table gone, backup present, HEAD unmoved — a resume that read that
+      // version would relapse into a batch-only table, wiping the standing
+      // labels, unless it deletes the version first
+      val idx = ServiceStates.nextIndex(state)
       java.nio.file.Files.move(
         java.nio.file.Paths.get(idx, "bands"),
         java.nio.file.Paths.get(idx, "bands.old"))
@@ -99,16 +99,14 @@ class DedupServiceSpec extends AnyFunSuite {
       DedupService.run(half, state, batchSize = 25,
         threshold = 0.8, bands = 8, maxBucket = noCap)
       val head = DedupService.readHead(state)
-      // simulate a crash mid-batch: INFLIGHT written, the next batch
-      // ALREADY appended to the index, an orphan labels version on disk,
-      // but HEAD never moved
+      // simulate a crash mid-batch: the next batch ALREADY appended to
+      // the next index version, an orphan labels version on disk, but HEAD
+      // never moved
       val tail = docs.where(col("doc_id") >= 25 && col("doc_id") < 40)
-      java.nio.file.Files.write(java.nio.file.Paths.get(state, "INFLIGHT"),
-        head.cursor.toString.getBytes("UTF-8"))
-      LshIndex.append(tail, s"$state/index", bands = 8)
+      LshIndex.append(tail, ServiceStates.nextIndex(state), bands = 8)
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(state, "labels", s"v${head.version + 1}"))
-      // resume must excise the half-applied batch and still converge
+      // resume must delete the half-applied version and still converge
       DedupService.run(docs, state, batchSize = 25,
         threshold = 0.8, bands = 8, maxBucket = noCap)
       assert(labelMap(DedupService.labels(state)) === batchModeLabels(docs))
@@ -119,11 +117,9 @@ class DedupServiceSpec extends AnyFunSuite {
     val state = tmpState()
     try {
       val some = docs.where(col("doc_id") < 30)
-      // partial first build on disk + INFLIGHT, HEAD never written
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(state, "labels"))
-      java.nio.file.Files.write(java.nio.file.Paths.get(state, "INFLIGHT"),
-        "0".getBytes("UTF-8"))
-      LshIndex.build(some, s"$state/index", bands = 8)
+      // partial first build on disk, HEAD never written
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(state, "labels", "v1"))
+      LshIndex.build(some, s"$state/index/v1", bands = 8)
       DedupService.run(docs, state, batchSize = 50,
         threshold = 0.8, bands = 8, maxBucket = noCap)
       assert(labelMap(DedupService.labels(state)) === batchModeLabels(docs))
@@ -150,7 +146,7 @@ class DedupServiceSpec extends AnyFunSuite {
       DedupService.run(docs, state, batchSize = 20,
         threshold = 0.8, bands = 8, maxBucket = noCap, compactEvery = 1)
       assert(labelMap(DedupService.labels(state)) === batchModeLabels(docs))
-      val bandsRoot = new java.io.File(s"$state/index/bands")
+      val bandsRoot = new java.io.File(s"${IndexService.indexDir(state)}/bands")
       val dirs = bandsRoot.listFiles().filter(f => f.isDirectory && f.getName.startsWith("bpb="))
       val files = dirs.map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).sum
       assert(files === dirs.length, "exactly one file per live partition after compaction")
@@ -256,45 +252,45 @@ class DedupServiceSpec extends AnyFunSuite {
   }
 
   test("a state without labels_by_id at HEAD is refused and left untouched") {
-    val state = tmpState()
-    try {
-      val half = docs.where(col("doc_id") < 30)
-      // an older on-disk layout, built by hand: a COMMITTED index without
-      // its PARAMS marker, a FLAT (un-bucketed) labels version, no id-keyed
-      // projection, and HEAD pointing at them
-      LshIndex.build(half, s"$state/index", bands = 8)
-      java.nio.file.Files.delete(java.nio.file.Paths.get(state, "index", "PARAMS"))
-      val legacy = Dedup.connectedComponents(
-        Dedup.minhashNearDups(half, threshold = 0.8, bands = 8, maxBucket = noCap)
-          .select("a", "b"),
-        half.select("doc_id"))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(state, "labels"))
-      legacy.coalesce(1).write.parquet(s"$state/labels/v1")
-      graft.io.AtomicWrite.write(java.nio.file.Paths.get(state, "HEAD"), "1 30")
-      // relative path -> file bytes (None for a directory)
-      def tree(): Map[String, Option[Seq[Byte]]] = {
-        val root = java.nio.file.Paths.get(state)
-        val walk = java.nio.file.Files.walk(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.map { p =>
-            root.relativize(p).toString ->
-              (if (java.nio.file.Files.isRegularFile(p))
-                Some(java.nio.file.Files.readAllBytes(p).toSeq) else None)
-          }.toMap
-        } finally walk.close()
-      }
-      val before = tree()
+    // two older on-disk layouts, each with the relation it lacks at HEAD
+    val legacyStates: Seq[(String => Unit, String)] = Seq(
+      ({ state: String =>
+        val half = docs.where(col("doc_id") < 30)
+        // built by hand: a COMMITTED index without its PARAMS marker, a
+        // FLAT (un-bucketed) labels version, no id-keyed projection, and
+        // HEAD pointing at them
+        LshIndex.build(half, s"$state/index", bands = 8)
+        java.nio.file.Files.delete(java.nio.file.Paths.get(state, "index", "PARAMS"))
+        val legacy = Dedup.connectedComponents(
+          Dedup.minhashNearDups(half, threshold = 0.8, bands = 8, maxBucket = noCap)
+            .select("a", "b"),
+          half.select("doc_id"))
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(state, "labels"))
+        legacy.coalesce(1).write.parquet(s"$state/labels/v1")
+        graft.io.AtomicWrite.write(java.nio.file.Paths.get(state, "HEAD"), "1 30")
+      }, "labels_by_id/v1"),
+      ({ state: String =>
+        // both label projections at HEAD, but the index unversioned in
+        // index/bands + index/shingles (and, like the first, without PARAMS)
+        DedupService.run(docs.where(col("doc_id") < 30), state, batchSize = 30,
+          threshold = 0.8, bands = 8, maxBucket = noCap, labelRangeWidth = 16)
+        ServiceStates.unversionIndex(state)
+        java.nio.file.Files.delete(java.nio.file.Paths.get(state, "index", "PARAMS"))
+      }, "index/v1"))
+    legacyStates.foreach { case (plant, missing) =>
+      val state = tempDir("dedup-service-legacy")
+      plant(state)
+      val before = ServiceStates.tree(state)
       val e = intercept[IllegalStateException] {
         DedupService.run(docs, state, batchSize = 30, threshold = 0.8,
           bands = 8, maxBucket = noCap, labelRangeWidth = 16)
       }
-      assert(e.getMessage.contains(state) && e.getMessage.contains("labels_by_id/v1"),
-        s"refusal does not name the state and the missing projection: ${e.getMessage}")
-      assert(tree() === before, "the refused state was modified")
+      assert(e.getMessage.contains(state) && e.getMessage.contains(missing),
+        s"refusal does not name the state and the missing $missing: ${e.getMessage}")
+      assert(ServiceStates.tree(state) === before, "the refused state was modified")
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(state, "index", "PARAMS")))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(state, "INFLIGHT")))
-    } finally graft.stream.StreamDedup.deleteTree(state)
+    }
   }
 
   test("commitStats drops a truncated commits.jsonl line instead of misparsing it") {

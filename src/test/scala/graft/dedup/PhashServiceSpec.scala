@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * everything below the cursor, across incremental arrival, restarts, and
  * injected crashes — the same contract DedupServiceSpec pins for text.
  */
-class PhashServiceSpec extends AnyFunSuite {
+class PhashServiceSpec extends AnyFunSuite with graft.TempDirs {
   private implicit lazy val spark: SparkSession = graft.spark.Sessions.local(4, "phash-service-spec")
 
   private val N = 256L
@@ -65,11 +65,10 @@ class PhashServiceSpec extends AnyFunSuite {
       val half = d.where(col("id") < 128)
       PhashService.run(half, state, batchSize = 128, maxDist = 3)
       val head = PhashService.readHead(state)
-      // simulate a crash mid-batch: INFLIGHT written, the next batch
-      // already appended to the block index, orphan labels dir, HEAD unmoved
-      java.nio.file.Files.write(java.nio.file.Paths.get(state, "INFLIGHT"),
-        head.cursor.toString.getBytes("UTF-8"))
-      PhashIndex.append(d.where(col("id") >= 128 && col("id") < 192), s"$state/index", maxDist = 3)
+      // simulate a crash mid-batch: the next batch already appended to the
+      // next block index version, orphan labels dir, HEAD unmoved
+      PhashIndex.append(d.where(col("id") >= 128 && col("id") < 192),
+        ServiceStates.nextIndex(state), maxDist = 3)
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(state, "labels", s"v${head.version + 1}"))
       PhashService.run(d, state, batchSize = 128, maxDist = 3)
@@ -81,12 +80,31 @@ class PhashServiceSpec extends AnyFunSuite {
     val state = java.nio.file.Files.createTempDirectory("phash-service-first").toString
     try {
       val d = imgs(128)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(state, "labels"))
-      java.nio.file.Files.write(java.nio.file.Paths.get(state, "INFLIGHT"),
-        "0".getBytes("UTF-8"))
-      PhashIndex.build(d.where(col("id") < 50), s"$state/index", maxDist = 3)
+      // partial first build on disk, HEAD never written
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(state, "labels", "v1"))
+      PhashIndex.build(d.where(col("id") < 50), s"$state/index/v1", maxDist = 3)
       PhashService.run(d, state, batchSize = 128, maxDist = 3)
       assert(labelMap(PhashService.labels(state)) === batchMode(d))
     } finally graft.stream.StreamDedup.deleteTree(state)
+  }
+
+  test("batch N+1 leaves every file of index/v<N> as it was (linked, appended, compacted)") {
+    val state = tempDir("phash-service-immutable")
+    // compactEvery = 2: v2 appends onto links of v1 and compacts, v3
+    // appends onto links of the compacted v2
+    val committed = (1 to 3).map { b =>
+      PhashService.run(imgs(b * 32L), state, batchSize = 32, maxDist = 3,
+        keepLabelVersions = 3, compactEvery = 2, labelRangeWidth = 32)
+      ServiceStates.stamps(IndexService.indexDir(state))
+    }
+    committed.zipWithIndex.foreach { case (files, i) =>
+      assert(ServiceStates.stamps(s"$state/index/v${i + 1}") === files,
+        s"index/v${i + 1} changed after a later batch")
+    }
+    val v3 = java.nio.file.Paths.get(state, "index", "v3", "blocks")
+    val linked = ServiceStates.stamps(v3.toString).keys.count(f =>
+      java.nio.file.Files.getAttribute(v3.resolve(f), "unix:nlink")
+        .asInstanceOf[Number].intValue >= 2)
+    assert(linked > 0, "index/v3 carried no hardlink of index/v2")
   }
 }

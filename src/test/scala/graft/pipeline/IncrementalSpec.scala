@@ -16,7 +16,7 @@ import graft.synth.{ImageSynth, TraceSynth}
  * (idempotent resume — the fix for the reference's at-least-once
  * double-count, Worker.cs:122-129). One store drives all assertions.
  */
-class IncrementalSpec extends AnyFunSuite {
+class IncrementalSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(8, "incremental-spec")
 
   private val N = 120
@@ -28,7 +28,7 @@ class IncrementalSpec extends AnyFunSuite {
     })
   }
 
-  private lazy val dir = Files.createTempDirectory("tilestore").toString
+  private lazy val dir = suiteTempDir("tilestore")
   private lazy val ran: Seq[Incremental.BatchResult] = {
     implicit val s: SparkSession = spark
     val store = new TileStore(dir)
@@ -109,7 +109,7 @@ class IncrementalSpec extends AnyFunSuite {
   test("dirty-partition commits: write bounded by the dirty subtree, clean partitions carried") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val d = Files.createTempDirectory("tilestore-dirty").toString
+    val d = tempDir("tilestore-dirty")
     val store = new TileStore(d)
     // batch A: 80 spread tracks dirty many tile buckets
     // k=1 so the global relation is dense enough that the bounded-write
@@ -186,7 +186,7 @@ class IncrementalSpec extends AnyFunSuite {
     // partition ended up with both files, duplicating (z, gx, gy) rows.
     implicit val s: SparkSession = spark
     import s.implicits._
-    val d = Files.createTempDirectory("tilestore-fused").toString
+    val d = tempDir("tilestore-fused")
     val store = new TileStore(d)
     // two successive SPREAD batches (each dirties > FusedCutover of the 64
     // buckets → both take the fused path; the second runs over prev > 0
@@ -222,7 +222,7 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("crash BETWEEN commit record and HEAD move: batch re-runs, no silent loss") {
     implicit val s: SparkSession = spark
-    val d2 = Files.createTempDirectory("tilestore-crashwin").toString
+    val d2 = tempDir("tilestore-crashwin")
     val store = new TileStore(d2)
     assert(!Incremental.processBatch(store, testTracks, -1L, 39L).skipped)
     assert(store.currentVersion === 1)
@@ -250,7 +250,7 @@ class IncrementalSpec extends AnyFunSuite {
     // tile's): drive a confined batch at k=3 over a prior commit — one tile
     // with 3 users (== k, must survive), one with 1 (keeps no pixel) — and
     // the committed store must still equal the one-shot pipeline
-    val d = Files.createTempDirectory("tilestore-f8").toString
+    val d = tempDir("tilestore-f8")
     val store = new TileStore(d)
     assert(!Incremental.processBatch(store, testTracks, -1L, 79L).skipped) // k=3 default
     def at(lon: Double, lat: Double) = Array(Array(lon, lat), Array(lon + 5e-4, lat + 4e-4))
@@ -299,7 +299,7 @@ class IncrementalSpec extends AnyFunSuite {
   test("a store whose HEAD has user_pixels but no user_tiles is refused and left untouched") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val root = Files.createTempDirectory("tilestore-old-layout")
+    val root = java.nio.file.Paths.get(tempDir("tilestore-old-layout"))
     val d = root.toString
     val store = new TileStore(d)
     val pb = TileStore.bucketOf(0, 0)
@@ -360,7 +360,7 @@ class IncrementalSpec extends AnyFunSuite {
   test("version GC: old snapshots unlink, HEAD stays byte-identical, resume + next commit unaffected") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val d = Files.createTempDirectory("tilestore-gc").toString
+    val d = tempDir("tilestore-gc")
     val store = new TileStore(d)
     Incremental.runToLatest(store, testTracks, latestId = N - 1, maxContributions = 40)
     assert(store.currentVersion === 3)
@@ -420,8 +420,8 @@ class IncrementalSpec extends AnyFunSuite {
         .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
         .map(f => s"${r.getName}/${f.getName}")).toSeq
     }
-    val gcDir = Files.createTempDirectory("tilestore-longhaul-gc").toString
-    val refDir = Files.createTempDirectory("tilestore-longhaul-ref").toString
+    val gcDir = tempDir("tilestore-longhaul-gc")
+    val refDir = tempDir("tilestore-longhaul-ref")
     val gcStore = new TileStore(gcDir)
     val refStore = new TileStore(refDir)
     val batches = (0 until 6).map(i => (i * 20L - 1L, i * 20L + 19L))
@@ -474,7 +474,7 @@ class IncrementalSpec extends AnyFunSuite {
     // store, most pixels suppressed) and k = 1 (dense store)
     val rnd = new java.util.Random(20260817L)
     for (k <- Seq(3, 1); scenario <- 0 until 3) {
-      val d = Files.createTempDirectory(s"tilestore-rand-k$k-$scenario").toString
+      val d = tempDir(s"tilestore-rand-k$k-$scenario")
       val store = new TileStore(d)
       val cuts = (Seq(-1L, N - 1L) ++ Seq.fill(2 + rnd.nextInt(3))(rnd.nextInt(N).toLong))
         .distinct.sorted
@@ -507,7 +507,7 @@ class IncrementalSpec extends AnyFunSuite {
     // every ancestor of a retracted pixel must shrink by exactly its value
     implicit val s: SparkSession = spark
     import s.implicits._
-    val d = Files.createTempDirectory("tilestore-kchange").toString
+    val d = tempDir("tilestore-kchange")
     val store = new TileStore(d)
     def checked(label: String): Map[(Int, Long, Long), (Long, Long)] = {
       val g = store.read("global", Some(Incremental.globalSchema)).get

@@ -8,14 +8,14 @@ import graft.model.Schemas.TileCells
 
 /** The shared tile-relation dump is keyed by its cell layout as well as by
   * its sf dir: a dump another layout wrote must be rewritten, not misread. */
-class CellsDumpSpec extends AnyFunSuite {
+class CellsDumpSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(2, "cells-dump-spec")
 
   test("cellsDump rewrites a dump in another cell layout whose marker names the same sf dir") {
     implicit val s: SparkSession = spark
     import s.implicits._
     // a small sf dir of its own: the events table is all eventTracks reads
-    val sf = java.nio.file.Files.createTempDirectory("cells-dump-sf").toString
+    val sf = tempDir("cells-dump-sf")
     (0L until 200L).map(i => (i, i % 8)).toDF("event_id", "user_id")
       .write.parquet(s"$sf/events.parquet")
     val path = GraftQueries.CellsDumpPath

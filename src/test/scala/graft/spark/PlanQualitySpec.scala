@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * These assert the optimizer contract (pushdown, pruning, broadcasts, no
  * cartesian products, codegen'd expressions) rather than output values.
  */
-class PlanQualitySpec extends AnyFunSuite {
+class PlanQualitySpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = Sessions.local(4, "plan-spec")
   private val sf = "/root/testdata/sf0.001"
 
@@ -149,7 +149,7 @@ class PlanQualitySpec extends AnyFunSuite {
     import s.implicits._
     val tracks = s.createDataset(Seq(graft.model.Schemas.Track(1, 1,
       Array(Array(4.35, 50.85), Array(4.351, 50.851)))))
-    val dump = java.nio.file.Files.createTempDirectory("cells-dump").toString + "/tc.parquet"
+    val dump = tempDir("cells-dump") + "/tc.parquet"
     graft.agg.HeatmapAgg.tileCells(graft.raster.Rasterize.tileVisits(tracks))
       .toDF().write.parquet(dump)
     val tc = s.read.parquet(dump).as[graft.model.Schemas.TileCells]

@@ -5,14 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Stateful streaming sessionization must converge to the batch
   * window-function oracle under multi-micro-batch slicing. */
-class SessionizeSpec extends AnyFunSuite {
+class SessionizeSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(4, "session-spec")
 
   test("mapGroupsWithState sessions == batch lag-window sessions (3 micro-batches)") {
     implicit val s: SparkSession = spark
     val events = s.read.parquet("/root/testdata/sf0.001/events.parquet")
     // slice id-ordered (≈ ts-ordered) chunks into separate files
-    val base = java.nio.file.Files.createTempDirectory("sessionsrc").toString
+    val base = tempDir("sessionsrc")
     import org.apache.spark.sql.functions._
     (0 until 3).foreach { i =>
       events.where(col("event_id") % 3 === i) // deliberately interleaved slices
@@ -48,7 +48,7 @@ class SessionizeSpec extends AnyFunSuite {
     implicit val s: SparkSession = spark
     import org.apache.spark.sql.functions._
     val events = s.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val base = java.nio.file.Files.createTempDirectory("sessionsrc2").toString
+    val base = tempDir("sessionsrc2")
     val flat = s"$base/flat"
     new java.io.File(flat).mkdirs()
     (0 until 3).foreach { i =>
