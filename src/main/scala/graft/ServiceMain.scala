@@ -43,7 +43,9 @@ object ServiceMain {
   val BalanceExportMinTiles = 10000L
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().appName("graft-heatmap-service").getOrCreate()
+    val spark = SparkSession.builder().appName("graft-heatmap-service")
+      .config("spark.sql.codegen.cache.maxEntries", graft.spark.Sessions.CodegenCacheEntries.toLong)
+      .getOrCreate()
     run(spark)
     spark.stop()
   }
@@ -126,11 +128,13 @@ object ServiceMain {
           val targets = dirtyTargets.get
           import spark.implicits._
           val targetDf = targets.toSeq.sorted.toDF("z", "tx", "ty")
-          // partition pruning first (pb + z are hive partition columns),
-          // exact tile selection via broadcast semi-join
-          val buckets = targets.map { case (_, tx, ty) => TileStore.bucketOf(tx, ty) }
-            .toSeq.distinct.map(Integer.valueOf)
-          g.where(col("pb").isin(buckets: _*))
+          // partition pruning first: each level's own dirty buckets, as
+          // (z * Buckets + pb) pairs over the hive partition columns (the
+          // splice's pruning), then exact tile selection via broadcast
+          // semi-join
+          val dirs = targets.map { case (z, tx, ty) => z * TileStore.Buckets + TileStore.bucketOf(tx, ty) }
+            .toSeq.sorted.map(Integer.valueOf)
+          g.where((col("z") * TileStore.Buckets + col("pb")).isin(dirs: _*))
             .withColumn("tx", floor(col("gx") / res).cast("long"))
             .withColumn("ty", floor(col("gy") / res).cast("long"))
             .join(broadcast(targetDf), Seq("z", "tx", "ty"), "left_semi")

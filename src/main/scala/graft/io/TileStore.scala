@@ -363,6 +363,20 @@ class TileStore(root: String)(implicit spark: SparkSession) {
    * dirs written (a declared dirty dir that got no rows is not) and
    * carried; `dirtyTiles` (the batch's z14 dirty set) rides in the record
    * for the incremental exporter.
+   *
+   * Concurrency: no relation's write reads another's output, so each
+   * relation's write, footer stats and hardlink carry run on their own
+   * thread, and the commit lasts as long as its slowest relation. The
+   * threads are created by the calling thread, so they inherit its Spark
+   * local properties: every job the commit submits carries the caller's
+   * job group and description (a job-group cancel reaches them all).
+   *
+   * Failure: the commit waits for every write to finish before it returns
+   * or rethrows the first failure (in argument order, full relations
+   * first; later ones ride along as suppressed). The record is appended
+   * and HEAD moved only after all writes succeeded, so a failed commit
+   * leaves HEAD and `commits.jsonl` as they were and at most a dangling
+   * v<N+1>, which the retried batch overwrites.
    */
   def commit(batchFrom: Long, batchTo: Long,
              relations: Map[String, (DataFrame, Option[String])],
@@ -370,7 +384,7 @@ class TileStore(root: String)(implicit spark: SparkSession) {
              dirtyTiles: Option[Seq[(Long, Long)]] = None): Long = {
     val prev = currentVersion
     val next = prev + 1
-    val fullMetrics = relations.map { case (name, (df, partitionBy)) =>
+    val fullWrites = relations.toSeq.map { case (name, (df, partitionBy)) => () =>
       val path = rootPath.resolve(name).resolve(s"v$next")
       val writer = df.write.mode("overwrite")
       partitionBy.fold(writer)(c => writer.partitionBy(c)).parquet(path.toString)
@@ -380,7 +394,7 @@ class TileStore(root: String)(implicit spark: SparkSession) {
         else partRows.map { case (v, n) => s""""$v": $n""" }.toSeq.sorted.mkString("{", ", ", "}")
       s""""$name": {"rows": $rows, "bytes": ${dirBytes(path)}, "partition_rows": $perPartition}"""
     }
-    val partialMetrics = partial.map { case (name, p) =>
+    val partialWrites = partial.toSeq.map { case (name, p) => () =>
       val path = rootPath.resolve(name).resolve(s"v$next")
       val prevSnapshot =
         if (prev == 0 || !hasSnapshot(name, prev)) None
@@ -395,12 +409,13 @@ class TileStore(root: String)(implicit spark: SparkSession) {
       s""""$name": {"rows": $rows, "bytes": ${dirBytes(path, Some(written))}, "partition_rows": $perPartition, """ +
         s""""written_dirs": ${written.size}, "carried_dirs": $carried}"""
     }
+    val metrics = TileStore.runAll(fullWrites ++ partialWrites)
     val tilesJson = dirtyTiles.fold("") { ts =>
       ts.map { case (tx, ty) => s"[$tx, $ty]" }.mkString(""", "dirty_tiles": [""", ", ", "]")
     }
     val record =
       s"""{"version": $next, "ts_ms": ${System.currentTimeMillis}, "from_id": $batchFrom, "to_id": $batchTo$tilesJson, """ +
-        s""""relations": {${(fullMetrics ++ partialMetrics).mkString(", ")}}}"""
+        s""""relations": {${metrics.mkString(", ")}}}"""
     Files.write(commitsFile, (record + "\n").getBytes(StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     AtomicWrite.write(headFile, next.toString)
@@ -409,6 +424,30 @@ class TileStore(root: String)(implicit spark: SparkSession) {
 }
 
 object TileStore {
+  /** Run `tasks` on one thread each and return their results in order. The
+    * pool's threads are created here, by the calling thread, so they
+    * inherit its Spark local properties (job group, description, any
+    * caller-set key). Every task finishes before this returns or rethrows
+    * the first failure in task order; later failures are suppressed into it. */
+  private def runAll[T](tasks: Seq[() => T]): Seq[T] =
+    if (tasks.isEmpty) Seq.empty
+    else {
+      import scala.jdk.CollectionConverters._
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+      try {
+        val done = pool.invokeAll(tasks.map(t => (() => t()): java.util.concurrent.Callable[T]).asJava).asScala.toSeq
+        val failures = done.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        }
+        failures.headOption.foreach { first =>
+          failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        }
+        done.map(_.get())
+      } finally pool.shutdownNow()
+    }
+
   /** A partial (dirty-partition-only) write: `rows` must contain EXACTLY
     * the new content of the dirty partitions; every other partition of the
     * previous version is hardlinked forward unchanged. */

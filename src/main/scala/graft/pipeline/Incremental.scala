@@ -127,7 +127,9 @@ object Incremental {
     // exchange keyed (tkey, user_id), then a per-partition hash merge: the
     // stored rows are already unique per key and a window adds few, so a
     // map-side combine would save nothing.
-    // localCheckpoint: `merged` feeds both the z14 rebuild and its own write.
+    // eager localCheckpoint: `merged` feeds both the z14 rebuild (the
+    // global write) and its own write, which the commit runs concurrently;
+    // materialized here, both read the merged runs without recomputing them.
     val dirtyB = bucketsOf(dirtySet)
     val userTiles = store.snapshotPath("user_tiles", head)
     val oldDirs = dirtyB.map(b => s"$userTiles/pb=$b").filter(d => Files.isDirectory(Paths.get(d)))
@@ -139,7 +141,7 @@ object Incremental {
       val byKey = new java.util.HashMap[(Long, Long), TileVisit]()
       it.foreach(v => byKey.merge((v.tkey, v.user_id), v, (a, b) => a.copy(pixels = TileBuffer.mergeRuns(a.pixels, b.pixels))))
       byKey.values().iterator().asScala
-    }.localCheckpoint(false)
+    }.localCheckpoint(true)
 
     // 4. dirty z14 tiles: the flagship kernel over the merged runs of
     // exactly the dirty tiles (the clean tiles of a dirty bucket keep
@@ -214,6 +216,8 @@ object Incremental {
           Seq("z", "pb"), globalDirtyDirs)),
       dirtyTiles = Some(dirtySet.toSeq.sorted))
     visits.unpersist()
+    // the checkpoint's blocks would otherwise stay until the driver GCs the RDD
+    org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(merged.toDF())
     BatchResult(version, skipped = false)
   }
 

@@ -464,11 +464,29 @@ object GraftQueries {
     *
     * TEST-HARNESS PATH ONLY (like every dump here): the collect is
     * bounded by the bench scale factors; the engine's export paths
-    * (`MvtJobs`, `ServiceMain.exportTiles`) never collect. */
+    * (`MvtJobs`, `ServiceMain.exportTiles`) never collect.
+    *
+    * Its source label carries a digest of the encoder's class bytes as
+    * well as the sf dir, so a dump another encoder wrote is rewritten
+    * instead of serving as a stale oracle. */
   val MvtBlobDumpPath = "/tmp/graft_oracle/mvt_blobs.parquet"
+
+  /** md5 over the class bytes of `graft.core.MvtCodec` and
+    * `graft.mvt.MvtJobs` (companions, module classes and the codec's
+    * buffer), the encoder the blob dump runs. */
+  private lazy val mvtEncoderDigest: String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    Seq("graft/core/MvtCodec", "graft/core/MvtCodec$", "graft/core/MvtCodec$ByteBuf",
+      "graft/mvt/MvtJobs", "graft/mvt/MvtJobs$").foreach { c =>
+      val in = getClass.getClassLoader.getResourceAsStream(c + ".class")
+      require(in != null, s"class file of $c not found")
+      try md.update(in.readAllBytes()) finally in.close()
+    }
+    md.digest().map(b => f"$b%02x").mkString
+  }
   private def mvtBlobDump(s: SparkSession, d: String): Unit = {
     import s.implicits._
-    sharedDump(s, MvtBlobDumpPath, d) { path =>
+    sharedDump(s, MvtBlobDumpPath, s"$d encoder:$mvtEncoderDigest") { path =>
       val k = graft.agg.HeatmapAgg.KAnonymity
       val res = graft.raster.Rasterize.Resolution
       val tiles = cellsDump(s, d).collect() // bounded: the aggregated tile relation

@@ -16,6 +16,21 @@ object Sessions {
     } else None
   }
 
+  /** Entries of Spark's generated-code cache
+    * (`spark.sql.codegen.cache.maxEntries`). Measured working set of the
+    * service loop on a 2k-track store (seed 1, `local[4]` on 4 vCPUs): the
+    * base build and full export compile 83 classes, the first window 28
+    * more, and each later window 4–6 classes bound to its own literals
+    * (67–113 ms of compile time); 155 in all after 8 windows and a one-shot
+    * rebuild. The default of 100 is smaller than that, and Guava enforces
+    * it per segment (4 segments of 25), so at the default a window evicted
+    * and recompiled up to 24 of its own classes. 2000 holds the working set
+    * plus the literal-bound classes of a few hundred windows; past that the
+    * least recently used entries, those never reused, are evicted.
+    * It is a static conf: it takes effect only when set before the session
+    * exists, hence here and in `ServiceMain`'s builder. */
+  val CodegenCacheEntries = 2000
+
   def local(cpus: Int = 32, app: String = "graft"): SparkSession = {
     val builder0 = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -30,6 +45,7 @@ object Sessions {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

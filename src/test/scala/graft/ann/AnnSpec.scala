@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ANN operators vs in-memory exact oracles. */
-class AnnSpec extends AnyFunSuite {
+class AnnSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(4, "ann-spec")
 
   private def vecs(n: Int, dim: Int = 16): Seq[(Long, Array[Float])] = {
@@ -96,7 +96,7 @@ class AnnSpec extends AnyFunSuite {
     import s.implicits._
     val data = vecs(400)
     val df = data.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivf-index").toString
+    val dir = tempDir("ivf-index")
     Ann.buildIvfIndex(df, dir, nLists = 16, iters = 3)
     val q = data.head._2
 
@@ -132,7 +132,7 @@ class AnnSpec extends AnyFunSuite {
     import s.implicits._
     val data = vecs(400)
     val df = data.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivf-append").toString
+    val dir = tempDir("ivf-append")
     val (built, rest) = (data.filter(_._1 < 250), data.filter(_._1 >= 250))
     Ann.buildIvfIndex(built.toDF("vec_id", "embedding"), dir, nLists = 16, iters = 3)
     // two appends (fragmentation is per touched dir per batch)
@@ -179,20 +179,19 @@ class AnnSpec extends AnyFunSuite {
     java.nio.file.Files.move(
       java.nio.file.Paths.get(dir, "vectors"), java.nio.file.Paths.get(dir, "vectors.old"))
     assert(got() === want.map(_._1).toSeq, "probe did not roll back a crashed compaction")
-    graft.stream.StreamDedup.deleteTree(dir)
   }
 
   test("IVF layout guard: a centroid-table swap or a crashed build fails loudly") {
     implicit val s: SparkSession = spark
     import s.implicits._
     val data = vecs(200)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-guard").toString
+    val dir = tempDir("ivf-guard")
     Ann.buildIvfIndex(data.toDF("vec_id", "embedding"), dir, nLists = 16, iters = 1)
     val q = data.head._2
     // swap in a rebuilt centroid table with a DIFFERENT list count under
     // the live vectors table: probes/appends must refuse (the vectors
     // table's partitioning no longer matches the centroid geometry)
-    val other = java.nio.file.Files.createTempDirectory("ivf-guard2").toString
+    val other = tempDir("ivf-guard2")
     Ann.buildIvfIndex(data.toDF("vec_id", "embedding"), other, nLists = 8, iters = 1)
     graft.stream.StreamDedup.deleteTree(s"$dir/centroids")
     java.nio.file.Files.move(
@@ -210,8 +209,6 @@ class AnnSpec extends AnyFunSuite {
       Ann.ivfTopKIndexed(dir, q, 10, nProbe = 8)
     }
     assert(e2.getMessage.contains("NLISTS missing"))
-    graft.stream.StreamDedup.deleteTree(dir)
-    graft.stream.StreamDedup.deleteTree(other)
   }
 
   test("lshClusters == union-find over the engine's own pair relation (embedding keep-list)") {

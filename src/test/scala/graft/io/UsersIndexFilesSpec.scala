@@ -8,13 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The reference's tiles/{z}/{x}/{y}.users + users/{id}/state.txt layout:
   * distributed write → distributed read round trip, reference-exact
   * idempotent add, engine-index integration. */
-class UsersIndexFilesSpec extends AnyFunSuite {
+class UsersIndexFilesSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(4, "usersindex-spec")
 
   test("index write → read round-trips; files match the reference layout") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("usersindex").toString
+    val dir = tempDir("usersindex")
     val index = Seq(
       (14, 8374L, 5556L, Seq(3L, 7L, 9L)),
       (14, 8375L, 5556L, Seq(1L)),
@@ -33,7 +33,7 @@ class UsersIndexFilesSpec extends AnyFunSuite {
   }
 
   test("addUserTo is the reference's idempotent append (Worker.cs:298-324)") {
-    val dir = Files.createTempDirectory("usersindex-add").toString
+    val dir = tempDir("usersindex-add")
     val tiles = Seq((14, 10L, 20L), (14, 11L, 20L))
     UsersIndexFiles.addUserTo(dir, 5L, tiles)
     UsersIndexFiles.addUserTo(dir, 7L, tiles)
@@ -48,7 +48,7 @@ class UsersIndexFilesSpec extends AnyFunSuite {
   test("engine tile-users index + cursors export to the reference layout and read back") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("usersindex-engine").toString
+    val dir = tempDir("usersindex-engine")
     // engine-side index from raw raster output
     val visits = Seq(
       graft.model.Schemas.PixelVisit(3L, (5000L << 32) | 6000L, 1L),

@@ -9,7 +9,7 @@ import graft.model.Schemas.MvtTile
   * spatially contiguous — neither plain hash nor key-uniform ranges give
   * both. The skew case deliberately packs the hot bytes into ONE base-grain
   * cell so the adaptive quadtree refinement is what earns the balance. */
-class TileRangesSpec extends AnyFunSuite {
+class TileRangesSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(4, "tileranges-spec")
 
   /** Skewed synthetic tile map: a 16x16 "urban core" of fat tiles holding
@@ -85,7 +85,7 @@ class TileRangesSpec extends AnyFunSuite {
   test("balanced sink writes a byte-identical file tree to the plain sink") {
     implicit val s: SparkSession = spark
     val tiles = skewedTiles.persist()
-    val base = java.nio.file.Files.createTempDirectory("tileranges-sink")
+    val base = java.nio.file.Paths.get(tempDir("tileranges-sink"))
     val plainDir = base.resolve("plain").toString
     val balDir = base.resolve("balanced").toString
     MvtJobs.writeMvtFiles(tiles, plainDir)

@@ -17,7 +17,7 @@ import graft.synth.{ImageSynth, TraceSynth}
  * (b) trip counts, (c) distinct-user counts, (d) k-anonymity filtering,
  * (e) all 15 zoom levels, (f) MVT feature payloads.
  */
-class HeatmapPipelineSpec extends AnyFunSuite {
+class HeatmapPipelineSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(4, "pipeline-spec")
 
   private val N = 300
@@ -47,7 +47,7 @@ class HeatmapPipelineSpec extends AnyFunSuite {
       Rasterize.tileVisits(ds).map(v => (v.tkey, v.user_id)).collect().toSet
     assert((keys(tracks.where($"contribution_id" < half)) &
       keys(tracks.where($"contribution_id" >= half))).nonEmpty)
-    val store = new graft.io.TileStore(java.nio.file.Files.createTempDirectory("user-tiles").toString)
+    val store = new graft.io.TileStore(tempDir("user-tiles"))
     assert(Incremental.runToLatest(store, tracks, latestId = N - 1, maxContributions = half).size === 2)
     val res = Rasterize.Resolution
     val got = store.read("user_tiles", Some(Incremental.userTilesSchemaP)).get
@@ -144,7 +144,7 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     implicit val s: SparkSession = spark
     import s.implicits._
     val tc = result.tiles
-    val dir = java.nio.file.Files.createTempDirectory("tile-cells").toString
+    val dir = tempDir("tile-cells")
     tc.toDF().write.mode("overwrite").parquet(dir)
     val read = s.read.parquet(dir).as[TileCells]
     val k = result.k
@@ -160,7 +160,7 @@ class HeatmapPipelineSpec extends AnyFunSuite {
 
   test("MVT filesystem sink writes the reference's {z}/{x}/{y}.mvt layout") {
     implicit val s: SparkSession = spark
-    val out = java.nio.file.Files.createTempDirectory("mvt-sink").toString
+    val out = tempDir("mvt-sink")
     val tiles = MvtJobs.encodeLowerFused(result.z14)
     MvtJobs.writeMvtFiles(tiles, out)
     val want = tiles.collect()

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming near-dedup must converge to the batch phash-join oracle over
   * multi-micro-batch slicings, and saturate degenerate buckets loudly. */
-class StreamDedupSpec extends AnyFunSuite {
+class StreamDedupSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(4, "streamdedup-spec")
 
   test("streamed verdicts == batch oracle (is-dup-of-any-earlier) over 3 micro-batches") {
@@ -16,7 +16,7 @@ class StreamDedupSpec extends AnyFunSuite {
     val df = imgs.toDF("id", "phash")
 
     // id-ordered slices (the arrival contract), one file per micro-batch
-    val base = java.nio.file.Files.createTempDirectory("streamdedup").toString
+    val base = tempDir("streamdedup")
     val flat = StreamDedup.writeIdOrderedSlices(df, nSlices = 3, sliceSize = 100L, base)
 
     val got = StreamDedup.runOnce(flat, df.schema, "streamdedup_test")
@@ -46,7 +46,7 @@ class StreamDedupSpec extends AnyFunSuite {
     val docs = (base0 ++ copies).sortBy(_._1)
     val df = docs.toDF("id", "text")
 
-    val base = java.nio.file.Files.createTempDirectory("streamtext").toString
+    val base = tempDir("streamtext")
     val flat = StreamDedup.writeIdOrderedSlices(df, nSlices = 3, sliceSize = 50L, base)
     val got = StreamDedup.runOnceText(flat, df.schema, "streamtext_test")
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("is_dup")).toMap
@@ -58,7 +58,6 @@ class StreamDedupSpec extends AnyFunSuite {
     assert(want.values.exists(identity) && want.values.exists(!_),
       "corpus must contain both near-dups and originals under simhash dist 3")
     assert(got === want)
-    StreamDedup.deleteTree(base)
   }
 
   test("EMBEDDING stream (sign-LSH signature inside the stream) == batch oracle over signatures") {
@@ -77,7 +76,7 @@ class StreamDedupSpec extends AnyFunSuite {
     val vecsAll = (originals ++ variants).sortBy(_._1)
     val df = vecsAll.toDF("id", "embedding")
 
-    val base = java.nio.file.Files.createTempDirectory("streamemb").toString
+    val base = tempDir("streamemb")
     val flat = StreamDedup.writeIdOrderedSlices(df, nSlices = 3, sliceSize = 50L, base)
     val got = StreamDedup.runOnceEmb(flat, df.schema, "streamemb_test", maxDist = 6)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("is_dup")).toMap
@@ -90,7 +89,6 @@ class StreamDedupSpec extends AnyFunSuite {
     assert(want.values.exists(identity) && want.values.exists(!_),
       "corpus must contain both near-dups and originals under signature dist 6")
     assert(got === want)
-    StreamDedup.deleteTree(base)
   }
 
   test("saturated bucket: distinct-only state, stops growing, keeps matching, flags loudly") {
@@ -108,7 +106,7 @@ class StreamDedupSpec extends AnyFunSuite {
     for { (a, pa) <- first30; (b, pb) <- first30 if a < b }
       assert(graft.dedup.Dedup.hamming(pa, pb) > 3, s"seeds $a,$b accidentally near")
     val imgs = (first30 ++ (30L until 60L).map(i => (i, distinctHigh(5L)))).toDF("id", "phash")
-    val base = java.nio.file.Files.createTempDirectory("streamdedup-cap").toString + "/imgs"
+    val base = tempDir("streamdedup-cap") + "/imgs"
     imgs.coalesce(1).write.parquet(base)
 
     val verdicts = {

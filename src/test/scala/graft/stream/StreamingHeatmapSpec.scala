@@ -15,7 +15,7 @@ import graft.synth.{ImageSynth, TraceSynth}
  * the incremental store must converge to the one-shot pipeline result, and
  * a restart with the same checkpoint must not re-apply committed batches.
  */
-class StreamingHeatmapSpec extends AnyFunSuite {
+class StreamingHeatmapSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(8, "streaming-spec")
 
   private val N = 90
@@ -27,7 +27,7 @@ class StreamingHeatmapSpec extends AnyFunSuite {
   test("streamed micro-batches converge to the one-shot pipeline; restart is a no-op") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val base = Files.createTempDirectory("stream").toString
+    val base = tempDir("stream")
     val srcDir = s"$base/src"
     val ckDir = s"$base/ck"
     val storeDir = s"$base/store"

@@ -4,14 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming windowed aggregation == the equivalent batch aggregation. */
-class WindowedEventsSpec extends AnyFunSuite {
+class WindowedEventsSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark: SparkSession = graft.spark.Sessions.local(4, "window-spec")
 
   test("streamed tumbling-window counts equal the batch window aggregation") {
     implicit val s: SparkSession = spark
     val src = "/root/testdata/sf0.001"
     val batchDf = s.read.parquet(s"$src/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("winsrc").toString
+    val dir = tempDir("winsrc")
     batchDf.write.mode("overwrite").parquet(dir)
 
     val got = WindowedEvents.runOnce(dir, batchDf.schema, "win_test")
