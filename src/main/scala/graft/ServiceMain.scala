@@ -35,13 +35,6 @@ import graft.stream.StreamingHeatmap
  * ships next to the tile tree for tile-server consumers.
  */
 object ServiceMain {
-  val MaxZoom = 14
-
-  /** Below this many tiles a full export skips the histogram-sized range
-    * shuffle — the observe pass over the tile stream costs more than the
-    * balance buys on a small tree. */
-  val BalanceExportMinTiles = 10000L
-
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().appName("graft-heatmap-service")
       .config("spark.sql.codegen.cache.maxEntries", graft.spark.Sessions.CodegenCacheEntries.toLong)
@@ -93,10 +86,12 @@ object ServiceMain {
   /** Dirty z14 tiles + the full ancestor chain of each — the exporter's
     * target set (the reference accumulates exactly this in `updatedTiles`:
     * the touched tiles at every zoom, Worker.cs:167-222,257-279). */
-  def withAncestors(dirty: Set[(Long, Long)], maxZoom: Int = MaxZoom): Set[(Int, Long, Long)] =
+  def withAncestors(dirty: Set[(Long, Long)]): Set[(Int, Long, Long)] = {
+    val maxZoom = graft.raster.Rasterize.Zoom
     dirty.flatMap { case (tx, ty) =>
       (0 to maxZoom).map(z => (z, tx >> (maxZoom - z), ty >> (maxZoom - z)))
     }
+  }
 
   /**
    * Incremental MVT export of the committed state: re-encode ONLY the tiles
@@ -104,29 +99,27 @@ object ServiceMain {
    * exactly those `{z}/{x}/{y}.mvt` files — byte-identical to what a full
    * re-export would write for them (`MvtJobs.encodeLowerFused`, the
    * flagship's group-per-tile encoder, encodes each tile from its own rows,
-   * so the subset encodes independently). First export (no EXPORTED marker) is a
-   * full export. The marker moves only AFTER the files land: a crash
-   * mid-export re-exports the same tiles idempotently.
+   * so the subset encodes independently). First export (no EXPORTED marker)
+   * is a full export of `global`. Both go through the one encoder and the
+   * one `MvtJobs.writeMvtFiles` sink. The marker moves only AFTER the files
+   * land: a crash mid-export re-exports the same tiles idempotently.
    */
-  def exportTiles(store: TileStore, mvtDir: String,
-                  balanceMinTiles: Long = BalanceExportMinTiles)(
-      implicit spark: SparkSession): Unit = {
+  def exportTiles(store: TileStore, mvtDir: String)(implicit spark: SparkSession): Unit = {
+    import spark.implicits._
     val head = store.currentVersion
     val since = store.exportedVersion
     if (head <= since) return
-    // dirty set resolved OUTSIDE the closure below: a dirty-tile-free
-    // commit window has nothing to re-encode but must STILL advance the
-    // EXPORTED marker (else every later export re-parses the same window),
-    // and a non-local `return` from inside foreach would skip exactly that
-    val dirtyTargets = if (since == 0) None else Some(withAncestors(store.dirtyTilesSince(since)))
-    if (!dirtyTargets.exists(_.isEmpty)) {
-      store.read("global", Some(Incremental.globalSchemaP)).foreach { g =>
-      val res = graft.raster.Rasterize.Resolution
-      val subset =
-        if (since == 0) g // first export: everything
-        else {
-          val targets = dirtyTargets.get
-          import spark.implicits._
+    def global = store.read("global", Some(Incremental.globalSchemaP))
+    val subset =
+      if (since == 0) global // first export: everything
+      else {
+        val targets = withAncestors(store.dirtyTilesSince(since))
+        // a dirty-tile-free window has nothing to re-encode, but still
+        // advances the EXPORTED marker below (else every later export
+        // re-parses the same window)
+        if (targets.isEmpty) None
+        else global.map { g =>
+          val res = graft.raster.Rasterize.Resolution
           val targetDf = targets.toSeq.sorted.toDF("z", "tx", "ty")
           // partition pruning first: each level's own dirty buckets, as
           // (z * Buckets + pb) pairs over the hive partition columns (the
@@ -140,41 +133,26 @@ object ServiceMain {
             .join(broadcast(targetDf), Seq("z", "tx", "ty"), "left_semi")
             .drop("tx", "ty")
         }
-      import spark.implicits._
-      val tiles = graft.mvt.MvtJobs.encodeLowerFused(
-        subset.select("z", "gx", "gy", "users", "trips").as[GlobalPixel])
-      if (since == 0) {
-        // full export — the O(world) write. Persist the encoded blobs (the
-        // observe passes re-read the stream) and, when the tree is big
-        // enough to amortize the histogram pass, range-shuffle it into
-        // byte-balanced contiguous neighborhoods before fanning out files.
-        tiles.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val balance =
-            if (tiles.count() >= balanceMinTiles)
-              Some(spark.sparkContext.defaultParallelism)
-            else None
-          graft.mvt.MvtJobs.writeMvtFiles(tiles, mvtDir, balance)
-        } finally tiles.unpersist()
-      } else
-        // dirty-tile export: the set is bounded by the batch, not the
-        // world — the observe pass would cost more than it saves
-        graft.mvt.MvtJobs.writeMvtFiles(tiles, mvtDir)
       }
+    subset.foreach { g =>
+      graft.mvt.MvtJobs.writeMvtFiles(graft.mvt.MvtJobs.encodeLowerFused(
+        g.select("z", "gx", "gy", "users", "trips").as[GlobalPixel]), mvtDir)
     }
-    // runs even for a dirty-tile-free window: the marker must advance
     writeTileJson(mvtDir)
     store.markExported(head)
   }
 
   /** TileJSON metadata next to the tile tree — the reference ships this
     * file with the service (HeatMap.Tiles.Service/mvt.json:1-22): layer id
-    * "heatmap", zoom range 0..14, pbf format. */
-  def writeTileJson(mvtDir: String, urlTemplate: String = "{z}/{x}/{y}.mvt"): Unit = {
+    * "heatmap", zoom range 0..14, pbf format. Rewritten on every export
+    * through `AtomicWrite`, so a tile server reading it never sees a torn
+    * file. */
+  def writeTileJson(mvtDir: String): Unit = {
+    val maxZoom = graft.raster.Rasterize.Zoom
     val json =
       s"""{
-         |  "tiles": ["$urlTemplate"],
-         |  "maxzoom": $MaxZoom,
+         |  "tiles": ["{z}/{x}/{y}.mvt"],
+         |  "maxzoom": $maxZoom,
          |  "minzoom": 0,
          |  "name": "heatmap",
          |  "description": "Contains trips heatmap.",
@@ -182,7 +160,7 @@ object ServiceMain {
          |  "id": "heatmap",
          |  "basename": "heatmap",
          |  "vector_layers": [
-         |    {"maxzoom": $MaxZoom, "minzoom": 0, "id": "heatmap", "description": ""}
+         |    {"maxzoom": $maxZoom, "minzoom": 0, "id": "heatmap", "description": ""}
          |  ],
          |  "version": "1.0",
          |  "tilejson": "2.0.0"
@@ -190,6 +168,6 @@ object ServiceMain {
          |""".stripMargin
     val dir = java.nio.file.Paths.get(mvtDir)
     java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve("mvt.json"), json.getBytes("UTF-8"))
+    graft.io.AtomicWrite.write(dir.resolve("mvt.json"), json)
   }
 }

@@ -33,17 +33,11 @@ object MvtJobs {
 
   /** Write tiles as the reference's on-disk layout {out}/{z}/{x}/{y}.mvt
     * (Worker.cs:270-278, HeatMap.cs:148) — distributed foreachPartition,
-    * one file per tile, executor-local I/O. `balanceParts` routes the
-    * stream through `TileRanges.balanced` first: write tasks become
-    * contiguous, byte-balanced spatial neighborhoods (histogram-sized
-    * range shuffle) — worth its extra observe pass on big exports. */
-  def writeMvtFiles(tiles: org.apache.spark.sql.Dataset[MvtTile], outDir: String,
-                    balanceParts: Option[Int] = None): Unit = {
-    val stream = balanceParts.fold(tiles) { n =>
-      implicit val s: org.apache.spark.sql.SparkSession = tiles.sparkSession
-      TileRanges.balanced(tiles, n)
-    }
-    stream.foreachPartition { (it: Iterator[MvtTile]) =>
+    * one file per tile, executor-local I/O. The one sink for every export:
+    * the flagship's one-shot tree and the service's full and dirty-tile
+    * exports all write through here. */
+  def writeMvtFiles(tiles: Dataset[MvtTile], outDir: String): Unit = {
+    tiles.foreachPartition { (it: Iterator[MvtTile]) =>
       it.foreach { t =>
         val dir = java.nio.file.Paths.get(outDir, t.z.toString, t.tx.toString)
         java.nio.file.Files.createDirectories(dir)

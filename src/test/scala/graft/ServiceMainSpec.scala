@@ -181,19 +181,15 @@ class ServiceMainSpec extends AnyFunSuite with TempDirs {
     }
   }
 
-  test("full export with the balanced range shuffle writes the same tree as the plain path") {
+  test("first (full) export writes the flagship's one-shot tree, byte for byte") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    def seed(threshold: Long) = {
-      val out = tempDir("svc-balexp")
-      val store = new graft.io.TileStore(s"$out/store")
-      val tracks = s.createDataset((0L until N).map { i =>
-        val ph = ImageSynth.phashOf(i)
-        Track(i, TraceSynth.userOf(ph, 6), TraceSynth.trace(ph))
-      })
-      graft.pipeline.Incremental.processBatch(store, tracks, -1L, N - 1L)
-      ServiceMain.exportTiles(store, s"$out/mvt", balanceMinTiles = threshold)
-      val root = java.nio.file.Paths.get(s"$out/mvt")
+    val tracks = s.createDataset((0L until N).map { i =>
+      val ph = ImageSynth.phashOf(i)
+      Track(i, TraceSynth.userOf(ph, 6), TraceSynth.trace(ph))
+    })
+    def mvtFiles(dir: String): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(dir)
       val st = Files.walk(root)
       try {
         import scala.jdk.CollectionConverters._
@@ -201,8 +197,23 @@ class ServiceMainSpec extends AnyFunSuite with TempDirs {
           .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
       } finally st.close()
     }
-    val balanced = seed(threshold = 0L)   // forces the histogram-sized range shuffle
-    val plain = seed(threshold = Long.MaxValue)
-    assert(balanced.nonEmpty && balanced === plain)
+    val out = tempDir("svc-fullexp")
+    val store = new graft.io.TileStore(s"$out/store")
+    graft.pipeline.Incremental.processBatch(store, tracks, -1L, N - 1L, k = 3)
+    assert(store.exportedVersion === 0L)
+    ServiceMain.exportTiles(store, s"$out/mvt")
+    assert(store.exportedVersion === store.currentVersion)
+
+    val r = graft.pipeline.HeatmapPipeline.run(tracks, k = 3)
+    try graft.mvt.MvtJobs.writeMvtFiles(graft.pipeline.HeatmapPipeline.mvtAll(r), s"$out/oneshot")
+    finally r.release()
+
+    val exported = mvtFiles(s"$out/mvt")
+    val oneShot = mvtFiles(s"$out/oneshot")
+    assert(exported.nonEmpty)
+    assert(exported.keySet === oneShot.keySet)
+    oneShot.foreach { case (k, bytes) =>
+      assert(exported(k) === bytes, s"tile $k differs from the one-shot export")
+    }
   }
 }
