@@ -36,8 +36,6 @@ object EmbService {
       EmbIndex.compact(idxDir)
   }
 
-  def readHead(stateDir: String): Head = IndexService.readHead(stateDir)
-
   def labels(stateDir: String)(implicit spark: SparkSession): DataFrame =
     IndexService.labels(stateDir)
 

@@ -33,8 +33,6 @@ object IvfService {
   /** The committed index, `index/v<HEAD>`. */
   def indexDir(stateDir: String): String = IndexService.indexDir(stateDir)
 
-  def readHead(stateDir: String): Head = IndexService.readHead(stateDir)
-
   /** Drain every pending batch of `vecs` (columns (vec_id, embedding); ids
     * assigned monotonically). The first non-empty batch BUILDS the index
     * (trains centroids); later batches append with frozen centroids —

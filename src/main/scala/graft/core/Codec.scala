@@ -48,10 +48,4 @@ object VarInt {
     }
     out.write(v.toInt)
   }
-
-  def sizeOfVarUInt(value: Long): Int = {
-    var v = value; var n = 1
-    while ((v & ~0x7FL) != 0) { v >>>= 7; n += 1 }
-    n
-  }
 }

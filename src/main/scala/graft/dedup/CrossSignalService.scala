@@ -57,8 +57,6 @@ object CrossSignalService {
     }
   }
 
-  def readHead(stateDir: String): Head = IndexService.readHead(stateDir)
-
   def labels(stateDir: String)(implicit spark: SparkSession): DataFrame =
     IndexService.labels(stateDir)
 

@@ -42,8 +42,6 @@ object DedupService {
       LshIndex.compact(idxDir)
   }
 
-  def readHead(stateDir: String): Head = IndexService.readHead(stateDir)
-
   /** Current committed labels (id, cluster_id). */
   def labels(stateDir: String)(implicit spark: SparkSession): DataFrame =
     IndexService.labels(stateDir)

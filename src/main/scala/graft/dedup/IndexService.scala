@@ -1,11 +1,11 @@
 package graft.dedup
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.TileStore
+import graft.io.{CommitLog, TileStore}
 
 /**
  * A near-dup index family pluggable into the resumable service loop: one
@@ -158,19 +158,11 @@ object IndexService {
           "Delete the state dir and re-run to rebuild it from the source.")
   }
 
-  /** Every `<relation>/v<M>` dir of a service state, with its M. */
-  private def versionDirs(stateDir: String): Seq[(String, Long)] = {
-    def dirs(f: java.io.File) = Option(f.listFiles()).toSeq.flatten.filter(_.isDirectory)
-    dirs(new java.io.File(stateDir)).flatMap(dirs).flatMap { d =>
-      (if (d.getName.startsWith("v")) d.getName.drop(1).toLongOption else None).map(d.getPath -> _)
-    }
-  }
-
   /** Retention: delete EVERY version dir at or below `floor`, not just the
     * newest one, so a crash between a commit and its sweep strands nothing. */
   private[graft] def dropVersionsUpTo(stateDir: String, floor: Long): Unit =
-    versionDirs(stateDir).collect {
-      case (d, v) if v <= floor => graft.stream.StreamDedup.deleteTree(d)
+    CommitLog.versionDirs(Paths.get(stateDir)).collect {
+      case (d, v) if v <= floor => CommitLog.deleteVersion(d)
     }
 
   /** `to` as hardlinks of every file of `from` (`TileStore.linkDir`), minus
@@ -207,9 +199,9 @@ object IndexService {
       afterCommit: (Head, A) => Unit): Head = {
     require(batchSize > 0, "batchSize must be positive")
     var head = readHead(stateDir)
-    versionDirs(stateDir).collect {
+    CommitLog.versionDirs(Paths.get(stateDir)).collect {
       case (d, v) if v > head.version =>
-        graft.stream.StreamDedup.deleteTree(d)
+        CommitLog.deleteVersion(d)
         println(s"[index-service] recovered: deleted uncommitted $d")
     }
     Files.createDirectories(Paths.get(stateDir))
@@ -376,13 +368,12 @@ object IndexService {
       metrics
     } { case (committed, m) =>
       // metrics AFTER the commit (metadata only, not part of the commit)
-      Files.write(commitsFile(stateDir),
-        (s"""{"version": ${committed.version}, "cursor": ${committed.cursor}, """ +
+      CommitLog.append(commitsFile(stateDir),
+        s"""{"version": ${committed.version}, "cursor": ${committed.cursor}, """ +
           s""""written_dirs": ${m.writtenDirs}, "carried_dirs": ${m.carriedDirs}, """ +
           s""""written_rows": ${m.writtenRows}, """ +
           s""""ib_written_dirs": ${m.ibWrittenDirs}, "ib_carried_dirs": ${m.ibCarriedDirs}, """ +
-          s""""fold_read_rows": ${m.foldReadRows}}""" + "\n").getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+          s""""fold_read_rows": ${m.foldReadRows}}""")
       // retention of index and label versions, after the commit (older
       // versions are unreferenced)
       dropVersionsUpTo(stateDir, committed.version - keepLabelVersions)
@@ -404,33 +395,15 @@ object IndexService {
   /** The per-commit metric records, oldest first — the evidence surface
     * for BOTH O(dirty) contracts (commit writes ∝ dirty buckets, fold reads
     * ∝ batch endpoints). A truncated line (crash remnant) is dropped. */
-  def commitStats(stateDir: String): Seq[CommitStat] = {
-    val f = commitsFile(stateDir)
-    if (!Files.exists(f)) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty).flatMap { line =>
-        def grab(k: String): Option[String] = {
-          val at = line.indexOf(s""""$k": """)
-          if (at < 0) None
-          else Some(line.substring(at + k.length + 4).takeWhile(c => c.isDigit || c == '-'))
-            .filter(_.nonEmpty)
-        }
-        val parsed = for {
-          v <- grab("version").flatMap(_.toLongOption)
-          c <- grab("cursor").flatMap(_.toLongOption)
-          w <- grab("written_dirs").flatMap(_.toIntOption)
-          cd <- grab("carried_dirs").flatMap(_.toIntOption)
-          wr <- grab("written_rows").flatMap(_.toLongOption)
-        } yield CommitStat(v, c, w, cd, wr,
-          grab("ib_written_dirs").flatMap(_.toIntOption).getOrElse(-1),
-          grab("ib_carried_dirs").flatMap(_.toIntOption).getOrElse(-1),
-          grab("fold_read_rows").flatMap(_.toLongOption).getOrElse(-1L))
-        if (parsed.isEmpty)
-          println(s"[index-service] dropping unparseable commits.jsonl line " +
-            s"(truncated crash remnant?): ${line.take(120)}")
-        parsed
-      }
+  def commitStats(stateDir: String): Seq[CommitStat] =
+    CommitLog.records(commitsFile(stateDir)).flatMap { r =>
+      for {
+        v <- r.long("version")
+        c <- r.long("cursor")
+        w <- r.int("written_dirs")
+        cd <- r.int("carried_dirs")
+        wr <- r.long("written_rows")
+      } yield CommitStat(v, c, w, cd, wr, r.int("ib_written_dirs").getOrElse(-1),
+        r.int("ib_carried_dirs").getOrElse(-1), r.long("fold_read_rows").getOrElse(-1L))
     }
-  }
 }

@@ -36,8 +36,6 @@ object PhashService {
       PhashIndex.compact(idxDir)
   }
 
-  def readHead(stateDir: String): Head = IndexService.readHead(stateDir)
-
   def labels(stateDir: String)(implicit spark: SparkSession): DataFrame =
     IndexService.labels(stateDir)
 

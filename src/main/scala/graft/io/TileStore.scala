@@ -1,7 +1,7 @@
 package graft.io
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -25,7 +25,8 @@ import org.apache.spark.sql.types.StructType
  *   commits.jsonl               one JSON line per committed batch:
  *                               batch id-window, row/byte metrics per
  *                               relation and per partition (lineage), and
- *                               the batch's dirty z14 tile set
+ *                               the batch's dirty z14 tile set (appended
+ *                               and read through `CommitLog`)
  *
  * Scale posture — DIRTY-PARTITION commits: big relations are
  * hive-partitioned by a TILE BUCKET (`pb`, plus `z` for the pyramid);
@@ -115,10 +116,6 @@ class TileStore(root: String)(implicit spark: SparkSession) {
   /** Last committed batch cursor (the reference's LastContributionId). */
   def lastCommittedId: Long = committedBatches.map(_._2).foldLeft(-1L)(math.max)
 
-  private def commitLines: Seq[String] =
-    if (!Files.exists(commitsFile)) Seq.empty
-    else scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(commitsFile)).asScala.toSeq
-
   /** (fromId, toId) windows already committed — resume skips these.
     *
     * A commit record is authoritative only up to HEAD: the record is
@@ -131,14 +128,8 @@ class TileStore(root: String)(implicit spark: SparkSession) {
     * silent data loss behind an "exactly-once" facade. */
   def committedBatches: Seq[(Long, Long)] = {
     val head = currentVersion
-    val Version = """"version":\s*(\d+)""".r.unanchored
-    val From = """"from_id":\s*(-?\d+)""".r.unanchored
-    val To = """"to_id":\s*(-?\d+)""".r.unanchored
-    commitLines.flatMap { line =>
-      (line, line, line) match {
-        case (Version(v), From(f), To(t)) if v.toLong <= head => Some((f.toLong, t.toLong))
-        case _ => None
-      }
+    CommitLog.records(commitsFile).flatMap { r =>
+      for { v <- r.long("version") if v <= head; f <- r.long("from_id"); t <- r.long("to_id") } yield (f, t)
     }
   }
 
@@ -160,35 +151,8 @@ class TileStore(root: String)(implicit spark: SparkSession) {
     * the same per-batch contract as the reference's in-memory HashSet). */
   def dirtyTilesSince(sinceVersion: Long): Set[(Long, Long)] = {
     val head = currentVersion
-    val Version = """"version":\s*(\d+)""".r.unanchored
-    val Pair = """\[(\d+),\s*(\d+)\]""".r
-    commitLines.flatMap { line =>
-      line match {
-        case Version(v) if v.toLong > sinceVersion && v.toLong <= head =>
-          val start = line.indexOf("\"dirty_tiles\": [")
-          if (start < 0) Seq.empty
-          else {
-            // the list ends at the first ']' not closing a pair
-            val body = line.substring(start + "\"dirty_tiles\": [".length)
-            val end = {
-              var depth = 0; var i = 0; var e = -1
-              while (i < body.length && e < 0) {
-                body.charAt(i) match {
-                  case '[' => depth += 1
-                  case ']' => if (depth == 0) e = i else depth -= 1
-                  case _ =>
-                }
-                i += 1
-              }
-              e
-            }
-            if (end < 0) Seq.empty
-            else Pair.findAllMatchIn(body.substring(0, end))
-              .map(p => (p.group(1).toLong, p.group(2).toLong)).toSeq
-          }
-        case _ => Seq.empty
-      }
-    }.toSet
+    CommitLog.records(commitsFile).filter(_.long("version").exists(v => v > sinceVersion && v <= head))
+      .flatMap(_.pairs("dirty_tiles")).toSet
   }
 
   /** Version retention GC: delete snapshot directories older than
@@ -229,16 +193,8 @@ class TileStore(root: String)(implicit spark: SparkSession) {
     if (floor <= 1) return (0, 0L)
     val tsOf: Map[Long, Long] =
       if (minAgeSeconds <= 0) Map.empty
-      else {
-        val V = """"version":\s*(\d+)""".r.unanchored
-        val T = """"ts_ms":\s*(\d+)""".r.unanchored
-        commitLines.flatMap { l =>
-          (l, l) match {
-            case (V(v), T(t)) => Some(v.toLong -> t.toLong)
-            case _ => None
-          }
-        }.toMap
-      }
+      else CommitLog.records(commitsFile).flatMap(r =>
+        for (v <- r.long("version"); t <- r.long("ts_ms")) yield v -> t).toMap
     def oldEnough(v: Long): Boolean = minAgeSeconds <= 0 || {
       tsOf.get(v + 1) match {
         case Some(t) => System.currentTimeMillis - t >= minAgeSeconds * 1000L
@@ -256,47 +212,8 @@ class TileStore(root: String)(implicit spark: SparkSession) {
           else System.currentTimeMillis - later.min >= minAgeSeconds * 1000L
       }
     }
-    var dirs = 0
-    var bytes = 0L
-    val rels = {
-      val s = Files.list(rootPath)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(Files.isDirectory(_)).toList
-      } finally s.close()
-    }
-    rels.foreach { rel =>
-      val vs = {
-        val s = Files.list(rel)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter(Files.isDirectory(_))
-            .filter(_.getFileName.toString.matches("v\\d+"))
-            .filter { p =>
-              val v = p.getFileName.toString.drop(1).toLong
-              v < floor && oldEnough(v)
-            }.toList
-        } finally s.close()
-      }
-      vs.foreach { v =>
-        // tombstone FIRST: _SUCCESS goes before any data file, so a crash
-        // mid-delete leaves a snapshot hasSnapshot/readAt already reject
-        // (serving a partially-deleted version as valid would be corrupt
-        // time travel); the next gc pass removes the remains
-        Files.deleteIfExists(v.resolve("_SUCCESS"))
-        val walk = Files.walk(v)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.sorted(java.util.Comparator.reverseOrder[Path]())
-            .iterator().asScala.foreach { p =>
-              if (Files.isRegularFile(p)) bytes += Files.size(p)
-              Files.delete(p)
-            }
-        } finally walk.close()
-        dirs += 1
-      }
-    }
-    (dirs, bytes)
+    val old = CommitLog.versionDirs(rootPath).collect { case (d, v) if v < floor && oldEnough(v) => d }
+    (old.size, old.map(CommitLog.deleteVersion).sum)
   }
 
   /** Regular files under a snapshot dir. With `leaves`, only the
@@ -416,8 +333,7 @@ class TileStore(root: String)(implicit spark: SparkSession) {
     val record =
       s"""{"version": $next, "ts_ms": ${System.currentTimeMillis}, "from_id": $batchFrom, "to_id": $batchTo$tilesJson, """ +
         s""""relations": {${metrics.mkString(", ")}}}"""
-    Files.write(commitsFile, (record + "\n").getBytes(StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    CommitLog.append(commitsFile, record)
     AtomicWrite.write(headFile, next.toString)
     next
   }

@@ -9,10 +9,11 @@ import org.apache.spark.sql.SparkSession
  * `spark.graft.*` conf keys — supplied via `spark-submit --conf` on a
  * cluster, `SparkSession.builder.config` locally.
  *
- * `maxUsers` is carried for parity but the batch boundary is the id window
- * (maxContributions): the reference's mid-scan break on the (MaxUsers+1)th
- * user (Worker.cs:152) is inherently sequential and only shapes batching,
- * never results — SURVEY.md §2.4 A1, documented divergence.
+ * The id window (`maxContributions`) is the only batch bound. The
+ * reference's `MaxUsers` mid-scan break (Worker.cs:152) is inherently
+ * sequential and only shapes batching, never results, and its
+ * `RefreshTime` poll loop is `Trigger.AvailableNow` run-once here, so
+ * neither has a key — SURVEY.md §2.4 A1, documented divergence.
  *
  * `keepVersions` (spark.graft.keepVersions) enables snapshot-retention GC
  * after each export. SNAPSHOT-ISOLATION CONTRACT: a reader pins the store
@@ -26,9 +27,7 @@ import org.apache.spark.sql.SparkSession
  */
 final case class WorkerConfig(
     userThreshold: Int,
-    maxUsers: Int,
     maxContributions: Long,
-    refreshTimeMs: Long,
     dataPath: String,
     outputPath: String,
     keepVersions: Option[Int],
@@ -39,9 +38,7 @@ object WorkerConfig {
     val c = spark.conf
     WorkerConfig(
       userThreshold = c.get("spark.graft.userThreshold", "3").toInt,
-      maxUsers = c.get("spark.graft.maxUsers", "2").toInt,
       maxContributions = c.get("spark.graft.maxContributions", "10").toLong,
-      refreshTimeMs = c.get("spark.graft.refreshTime", "1000").toLong,
       dataPath = c.get("spark.graft.dataPath", "/tmp/graft-data"),
       outputPath = c.get("spark.graft.outputPath", "/tmp/graft-tiles"),
       keepVersions = c.getOption("spark.graft.keepVersions").map { v =>

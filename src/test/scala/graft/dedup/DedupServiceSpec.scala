@@ -98,7 +98,7 @@ class DedupServiceSpec extends AnyFunSuite with graft.TempDirs {
       val half = docs.where(col("doc_id") < 25)
       DedupService.run(half, state, batchSize = 25,
         threshold = 0.8, bands = 8, maxBucket = noCap)
-      val head = DedupService.readHead(state)
+      val head = IndexService.readHead(state)
       // simulate a crash mid-batch: the next batch ALREADY appended to
       // the next index version, an orphan labels version on disk, but HEAD
       // never moved
@@ -212,7 +212,7 @@ class DedupServiceSpec extends AnyFunSuite with graft.TempDirs {
         s"merge batch by-id commit not dirty-sized: ${v2(3)}")
       // by-id projection ≡ the lb store re-keyed, and its carried files are
       // hardlinks like the lb store's
-      val head64 = DedupService.readHead(state)
+      val head64 = IndexService.readHead(state)
       val byId = spark.read.parquet(s"$state/labels_by_id/v${head64.version}")
         .select("id", "cluster_id")
       assert(labelMap(byId) === labelMap(DedupService.labels(state)),
@@ -307,6 +307,11 @@ class DedupServiceSpec extends AnyFunSuite with graft.TempDirs {
       // a record without the by-id projection's fields reads them as -1
       assert(stats.map(s => (s.ibWrittenDirs, s.ibCarriedDirs, s.foldReadRows)) ===
         Seq((-1, -1, -1L)))
+      // the next append starts on a fresh line, so its record stays whole
+      graft.io.CommitLog.append(java.nio.file.Paths.get(state, "commits.jsonl"),
+        """{"version": 2, "cursor": 32, "written_dirs": 1, "carried_dirs": 1, "written_rows": 16}""")
+      assert(IndexService.commitStats(state).map(s => (s.version, s.cursor, s.writtenDirs,
+        s.carriedDirs, s.writtenRows)) === Seq((1L, 16L, 1, 0, 16L), (2L, 32L, 1, 1, 16L)))
     } finally graft.stream.StreamDedup.deleteTree(state)
   }
 
@@ -318,7 +323,7 @@ class DedupServiceSpec extends AnyFunSuite with graft.TempDirs {
       DedupService.run(sparse, state, batchSize = 10,
         threshold = 0.8, bands = 8, maxBucket = noCap)
       assert(labelMap(DedupService.labels(state)) === batchModeLabels(sparse))
-      val head = DedupService.readHead(state)
+      val head = IndexService.readHead(state)
       assert(head.version === 4, "4 non-empty batches -> 4 versions, empty ranges mint none")
       assert(head.cursor === sparse.agg(max("doc_id")).head().getLong(0) + 1)
     } finally graft.stream.StreamDedup.deleteTree(state)

@@ -64,7 +64,7 @@ class PhashServiceSpec extends AnyFunSuite with graft.TempDirs {
       val d = imgs(N)
       val half = d.where(col("id") < 128)
       PhashService.run(half, state, batchSize = 128, maxDist = 3)
-      val head = PhashService.readHead(state)
+      val head = IndexService.readHead(state)
       // simulate a crash mid-batch: the next batch already appended to the
       // next block index version, orphan labels dir, HEAD unmoved
       PhashIndex.append(d.where(col("id") >= 128 && col("id") < 192),

@@ -243,6 +243,48 @@ class IncrementalSpec extends AnyFunSuite with graft.TempDirs {
     assert(store.read("global", Some(Incremental.globalSchema)).get.count() > 0)
   }
 
+  /** A torn append of batch 2's record (a crash or ENOSPC mid-write keeps
+    * the first `cut(record)` bytes), then the retry's commit: the store
+    * must read exactly as one that never tore, and a resumed run must not
+    * apply the window again. */
+  private def tornRecordReadsAsUntorn(name: String)(cut: String => Int)(implicit s: SparkSession): Unit = {
+    val (tornDir, cleanDir) = (tempDir(name), tempDir(s"$name-clean"))
+    val (torn, clean) = (new TileStore(tornDir), new TileStore(cleanDir))
+    Seq(torn, clean).foreach(st => assert(!Incremental.processBatch(st, testTracks, -1L, 39L).skipped))
+    assert(!Incremental.processBatch(clean, testTracks, 39L, 79L).skipped)
+    val record = Files.readAllLines(java.nio.file.Paths.get(cleanDir, "commits.jsonl")).get(1)
+    val at = cut(record)
+    assert(at > 0 && at < record.length, s"cut $at outside the record: $record")
+    Files.write(java.nio.file.Paths.get(tornDir, "commits.jsonl"), record.take(at).getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(!Incremental.processBatch(torn, testTracks, 39L, 79L).skipped)
+    assert(torn.currentVersion === 2)
+    assert(torn.committedBatches === clean.committedBatches)
+    assert(torn.lastCommittedId === clean.lastCommittedId)
+    (0L to 2L).foreach(v => assert(torn.dirtyTilesSince(v) === clean.dirtyTilesSince(v), s"since v$v"))
+    assert(Incremental.runToLatest(new TileStore(tornDir), testTracks, latestId = 79L,
+      maxContributions = 40).isEmpty, "the committed window was applied again")
+    def global(st: TileStore) = st.read("global", Some(Incremental.globalSchema)).get
+      .select("z", "gx", "gy", "users", "trips").collect().map(_.toString).sorted.toSeq
+    assert(global(torn) === global(clean))
+  }
+
+  test("torn commit record cut inside to_id: the retry commits once, resume applies nothing") {
+    implicit val s: SparkSession = spark
+    tornRecordReadsAsUntorn("tilestore-torn-toid") { r =>
+      r.indexOf(""""to_id": """) + """"to_id": """.length + 1 // "to_id": 7 of 79
+    }
+  }
+
+  test("torn commit record cut inside dirty_tiles: every dirty tile of the retry is still read") {
+    implicit val s: SparkSession = spark
+    tornRecordReadsAsUntorn("tilestore-torn-dirty") { r =>
+      val list = r.indexOf(""""dirty_tiles": [[""")
+      assert(list > 0 && r.indexOf("]]", list) > list + 20, s"batch 2 dirtied too few tiles: $r")
+      list + """"dirty_tiles": [[""".length + 2
+    }
+  }
+
   test("F8 pre-check: sub-k tiles are excluded before the pixel-grain rebuild; k-boundary survives") {
     implicit val s: SparkSession = spark
     import s.implicits._
